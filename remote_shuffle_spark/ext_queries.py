@@ -20,8 +20,10 @@ from pyspark.sql import functions as F
 
 from remote_shuffle_spark.operators import dedup, multimodal, similarity, text
 from remote_shuffle_spark.queries import dec, declared
+from remote_shuffle_spark.scratch import cached_dir, file_stamp, run_dir
 from remote_shuffle_spark.sources.tables import load_table
 from remote_shuffle_spark.streaming import windowed_event_counts
+from remote_shuffle_spark.streaming.run import run_to_completion
 
 # DuckDB equivalent of functions.hashing.normalized_text ('g' = replace all)
 _NORM = "trim(regexp_replace(lower(text), '\\s+', ' ', 'g'))"
@@ -2225,12 +2227,10 @@ def ext_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     implies (pinned Spark-side as a boolean; byte-exact sizing is
     runtime-dependent).
     """
-    import tempfile
-
     from remote_shuffle_spark.sources.io import compact_table
 
     orders = load_table(spark, sf_dir, "orders")
-    base = tempfile.mkdtemp(prefix="rss_compact_")
+    base = run_dir("compact")
     frag, out = f"{base}/frag", f"{base}/out"
     orders.repartition(64).write.mode("overwrite").parquet(frag)
     compact_table(spark, frag, out, target_file_bytes=64 * 1024 * 1024)
@@ -4404,15 +4404,11 @@ def ext_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     returned DataFrame stays valid after cleanup."""
     import os
     import shutil
-    import tempfile
-    import uuid
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    base = os.path.join(
-        tempfile.gettempdir(), f"schema_evo_{uuid.uuid4().hex}"
-    )
+    base = run_dir("schema_evo")
     v1 = docs.filter(F.col("doc_id") % 2 == 0)
     v2 = docs.filter(F.col("doc_id") % 2 == 1).withColumn(
         "quality", (F.col("n_chars") % 100).cast("long")
@@ -6184,8 +6180,6 @@ def ext_stream_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 hour with a single-batch source means nothing is ever late, so
     stream ≡ batch and the oracle is the same epoch-seconds hopping SQL
     as ext_hopping_window."""
-    import uuid as _uuid
-
     from remote_shuffle_spark.sources.tables import table_path
     from remote_shuffle_spark.streaming.source import (
         event_time,
@@ -6203,14 +6197,9 @@ def ext_stream_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"hop_stream_{_uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    table = run_to_completion(agg, mode="complete").table
     return (
-        scoped.table(name)
+        scoped.table(table)
         .select(
             (F.unix_micros(F.col("w.start")) / F.lit(1_000_000))
             .cast("long")
@@ -6244,8 +6233,6 @@ def ext_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     readBetweenOffsets — the WAL replay contract), aggregated in
     complete mode.  Stream ≡ batch by construction, so the oracle is
     the same generate_series regeneration as the batch query."""
-    import uuid as _uuid
-
     from remote_shuffle_spark.sources.python_source import register_synth_source
 
     register_synth_source(spark)
@@ -6258,13 +6245,7 @@ def ext_stream_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = df.groupBy("day").agg(
         F.count(F.lit(1)).alias("n"), F.sum("metric").alias("sum_metric")
     )
-    name = f"pds_stream_{_uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name).orderBy("day")
+    return spark.table(run_to_completion(agg, mode="complete").table).orderBy("day")
 
 
 @declared(
@@ -6316,11 +6297,9 @@ def ext_stream_tws_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TWS under ``Trigger.AvailableNow``
     (streaming/stateful_v2.py:first_n_available_now_stream): the same
     FirstNPerKey typed-state processor driven by the self-terminating
-    drain trigger instead of processAllAvailable — proving the TWS
-    family doesn't depend on the always-on polling idiom (the documented
-    harness limitation around ProcessingTime timers) and pinning the
-    production shape for periodic incremental stateful jobs.  n=3 so
-    results can't shadow ext_stream_tws_limiter's n=5."""
+    drain (streaming/run.py), pinning the production shape for periodic
+    incremental stateful jobs.  n=3 so results can't shadow
+    ext_stream_tws_limiter's n=5."""
     from remote_shuffle_spark.streaming.stateful_v2 import (
         first_n_available_now_stream,
     )
@@ -6367,8 +6346,7 @@ def ext_stream_tws_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     iterator all exercised); handleExpiredTimer emits exactly one
     (user_id, fired_ms) row when the watermark passes the expiry —
     independent of batch layout, so the oracle is one row per distinct
-    user.  EventTime mode terminates under processAllAvailable
-    (ProcessingTime would re-batch forever — see module docstring)."""
+    user."""
     from remote_shuffle_spark.streaming.stateful_v2 import first_seen_timer_stream
 
     return first_seen_timer_stream(spark, sf_dir)
@@ -6387,10 +6365,8 @@ def ext_stream_tws_ttl(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/stateful_v2.py:TTLCountProcessor): per-user counter whose
     state carries ``ttlDurationMs`` — the TTLConfig protocol field the
     round-7 shim review caught being silently dropped (now byte-pinned).
-    TTL is processing-time based, so the mode is ProcessingTime — which
-    never settles under processAllAvailable or AvailableNow (both
-    measured), so the runner polls until every key's totals equal the
-    source and no data is pending, then stops.  Determinism: the TTL
+    TTL is processing-time based, so the mode is ProcessingTime, drained
+    poll-then-stop (streaming/run.py).  Determinism: the TTL
     horizon is parked ~12 days out, making semantics ≡ plain counting —
     the COUNT(*) oracle."""
     from remote_shuffle_spark.streaming.stateful_v2 import ttl_count_stream
@@ -6654,42 +6630,25 @@ def ext_audio_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _zorder_events_dir(spark: SparkSession, sf_dir: str) -> str:
     """Cached z-clustered copy of events on (user_id, event_id % 1024)
     — same cache/invalidate discipline as latedrop.late_split_dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from remote_shuffle_spark.plans.zorder import ZDim, write_zordered
     from remote_shuffle_spark.sources.tables import table_path
 
-    src = table_path(sf_dir, "events")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"zorder2|{real}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_zorder_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-    ev = load_table(spark, sf_dir, "events").select(
-        "event_id", "user_id", F.pmod("event_id", F.lit(1024)).alias("bucket")
-    )
-    # integer dims with power-of-two bounds: (v-0)/65536*65536 is IEEE-exact,
-    # so bucket id == value and the Morton code is exact integer interleave
-    write_zordered(
-        ev,
-        tmp,
-        [ZDim("user_id", 0, 65536), ZDim("bucket", 0, 65536)],
-        bits=16,
-        num_partitions=16,
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    def build(tmp: str) -> None:
+        ev = load_table(spark, sf_dir, "events").select(
+            "event_id", "user_id", F.pmod("event_id", F.lit(1024)).alias("bucket")
+        )
+        # integer dims with power-of-two bounds: (v-0)/65536*65536 is IEEE-exact,
+        # so bucket id == value and the Morton code is exact integer interleave
+        write_zordered(
+            ev,
+            tmp,
+            [ZDim("user_id", 0, 65536), ZDim("bucket", 0, 65536)],
+            bits=16,
+            num_partitions=16,
+        )
+
+    stamp = file_stamp(table_path(sf_dir, "events"))
+    return cached_dir("zorder", ("zorder2", *stamp), build)
 
 
 def _zorder_oracle_sql() -> str:
@@ -6985,16 +6944,10 @@ def ext_udtf_polymorphic(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("ext", "streaming", "trigger"),
 )
 def ext_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Trigger.AvailableNow drain: the modern batch-over-stream idiom —
-    process EVERYTHING available in rate-limited micro-batches, then
-    stop on its own (no processAllAvailable polling, no always-on
-    query); the standard shape for periodic incremental jobs sharing
-    streaming's exactly-once bookkeeping.  Complete-mode day×type counts
-    over the ordered split; the query TERMINATES via awaitTermination,
+    """Trigger.AvailableNow drain (streaming/run.py): complete-mode
+    day×type counts over the ordered split; the query stops itself,
     proving the trigger semantics, and the counts equal the batch
     GROUP BY."""
-    import uuid as _uuid
-
     from remote_shuffle_spark.streaming.latedrop import (
         _ordered_events,
         late_split_dir,
@@ -7010,24 +6963,8 @@ def ext_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = stream.groupBy(
         F.date_format("ts", "yyyy-MM-dd").alias("day"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n"))
-    name = f"avnow_{_uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)  # AvailableNow stops itself after draining
-        if q.isActive:
-            raise RuntimeError(
-                "AvailableNow trigger failed to self-terminate"
-            )
-    finally:
-        if q.isActive:  # failure path: never leak a live query into the session
-            q.stop()
-    return s2.table(name).orderBy("day", "event_type")
+    table = run_to_completion(agg, mode="complete", available_now=True).table
+    return s2.table(table).orderBy("day", "event_type")
 
 
 @declared(
@@ -7171,11 +7108,7 @@ def ext_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet oracle proves the round-trip lost nothing.  XML is the
     interchange format enterprise feeds still arrive in; the engine
     reads it with the same declarative scan API as every other source."""
-    import os
-    import tempfile
-    import uuid as _uuid
-
-    d = os.path.join(tempfile.gettempdir(), f"rss_xml_{_uuid.uuid4().hex[:8]}")
+    d = run_dir("xml")
     slice_df = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("user_id") < 5)
@@ -7962,10 +7895,6 @@ def ext_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
     checkpoint_to, parity with the reference's writeIndexFileAndCommit —
     RemoteShuffleUtils.scala).  Round-trip aggregate ≡ the
     generate_series regeneration oracle."""
-    import hashlib
-    import os
-    import tempfile
-
     from remote_shuffle_spark.sources.python_source import (
         committed_files,
         register_synth_source,
@@ -7978,8 +7907,7 @@ def ext_python_datasource_write(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("parts", "8")
         .load()
     )
-    key = hashlib.sha1(f"pds_write|{sf_dir}|20000".encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_pds_sink_{key}")
+    out = run_dir("pds_sink")
     src.write.format("rss_synth").mode("overwrite").option("path", out).save()
     back = spark.read.schema("id long, user_id long, day int, metric long").json(
         committed_files(out)
@@ -8050,6 +7978,9 @@ def ext_sql_identifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+_INCR_SINKS: dict[str, str] = {}
+
+
 @declared(
     "ext_stream_incremental_runs",
     oracle="""
@@ -8068,14 +7999,13 @@ def ext_stream_incremental_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate — proving the chain (source offsets -> checkpoint ->
     self-terminating trigger -> file-sink commit) composes across job
     RESTARTS, which is how a daily 100 TB ingest actually runs.
-    Fixture is PROCESS-LOCAL (unlike latedrop's tmp+rename cache): the
-    file sink's _spark_metadata log records absolute part paths, so a
-    renamed sink directory reads as empty — the log is the source of
-    truth, which is exactly the exactly-once property under test."""
-    import hashlib
+    The runs' output is PROCESS-LOCAL (a run_dir, reused by later calls
+    in the same process; unlike latedrop's tmp+rename cache): the file
+    sink's _spark_metadata log records absolute part paths, so a renamed
+    sink directory reads as empty — the log is the source of truth,
+    which is exactly the exactly-once property under test."""
     import os
     import shutil
-    import tempfile
 
     from remote_shuffle_spark.streaming.latedrop import (
         _ordered_events,
@@ -8084,50 +8014,31 @@ def ext_stream_incremental_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from remote_shuffle_spark.streaming.source import stream_session
 
     split = late_split_dir(spark, sf_dir, late_every=None)
-    files = sorted(
-        f for f in os.listdir(split) if f.endswith(".parquet")
-    )
-    key = hashlib.sha1(f"incr|{split}|{os.getpid()}".encode()).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"rss_incr_{key}")
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, 4)
-
-    def run_available_now(src_dir: str, sink: str, ckpt: str) -> None:
+    sink = _INCR_SINKS.get(split)
+    if sink is None:
+        files = sorted(f for f in os.listdir(split) if f.endswith(".parquet"))
+        schema = _ordered_events(spark, sf_dir).schema
+        s2 = stream_session(spark, 4)
+        src, sink, ckpt = run_dir("incr_src"), run_dir("incr_sink"), run_dir("incr_ckpt")
+        os.makedirs(src)
         stream = (
             s2.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
-            .parquet(src_dir)
+            .parquet(src)
             .select("user_id", "event_id")
         )
-        q = (
-            stream.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination(240)
-            if q.isActive:
-                raise RuntimeError("AvailableNow failed to self-terminate")
-        finally:
-            if q.isActive:
-                q.stop()
-
-    if not os.path.exists(os.path.join(base, "_DONE")):
-        shutil.rmtree(base, ignore_errors=True)  # stale partial from a crash
-        src, sink, ckpt = (os.path.join(base, d) for d in ("src", "sink", "ckpt"))
-        os.makedirs(src)
+        options = {"path": sink, "checkpointLocation": ckpt}
         half = max(1, len(files) // 2)
         for f in files[:half]:
             shutil.copy2(os.path.join(split, f), os.path.join(src, f))
-        run_available_now(src, sink, ckpt)  # run 1: first half only
+        run_to_completion(stream, sink="parquet", options=options, available_now=True)
         for f in files[half:]:
             shutil.copy2(os.path.join(split, f), os.path.join(src, f))
-        run_available_now(src, sink, ckpt)  # run 2: same checkpoint, new files
-        open(os.path.join(base, "_DONE"), "w").close()
+        # run 2: same checkpoint, only the new files
+        run_to_completion(stream, sink="parquet", options=options, available_now=True)
+        _INCR_SINKS[split] = sink
     return (
-        spark.read.parquet(os.path.join(base, "sink"))
+        spark.read.parquet(sink)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("n"))
         .orderBy("user_id")
@@ -8596,10 +8507,9 @@ def ext_stream_tws_proc_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     expiry = user_id ms (epoch 1970 < any wall clock) after asserting the
     handle's processing-time clock is live; the timer fires in a
     subsequent batch's timer phase and emits one (user_id, fired_ms)
-    row.  ProcessingTime mode never settles (module docstring), so the
-    drain is the proven poll-then-stop idiom from ext_stream_tws_ttl —
-    the fired set is deterministic (one row per user), only the firing
-    BATCH is wall-clock dependent."""
+    row.  Drained poll-then-stop (streaming/run.py) — the fired set is
+    deterministic (one row per user), only the firing BATCH is
+    wall-clock dependent."""
     from remote_shuffle_spark.streaming.stateful_v2 import proc_time_timer_stream
 
     return proc_time_timer_stream(spark, sf_dir)
@@ -9125,56 +9035,22 @@ def _minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
     materialized operator state the reference's persisted-map-output
     thesis is about: later ingest jobs CONSUME it instead of
     recomputing the corpus."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from remote_shuffle_spark.operators.dedup import (
         minhash_band_index,
         write_minhash_band_index,
     )
     from remote_shuffle_spark.sources.tables import table_path
 
-    src = table_path(sf_dir, "documents")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"mhidx1|{real}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_mhidx_{key}")
+    def build(tmp: str) -> None:
+        corpus = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") % 10 != 7)
+            .select("doc_id", "text")
+        )
+        write_minhash_band_index(minhash_band_index(corpus, "doc_id", "text"), tmp)
 
-    def _complete(d: str) -> bool:
-        return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
-
-    if _complete(out):
-        return out
-    # an INCOMPLETE cache dir (e.g. a /tmp cleaner pruned _SUCCESS or a
-    # part file by atime) must never be served NOR allowed to block the
-    # rename of a fresh build (self-review r11: the old except branch
-    # rmtree'd the GOOD build and returned the broken dir)
-    if os.path.isdir(out):
-        shutil.rmtree(out, ignore_errors=True)
-    tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-    corpus = (
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") % 10 != 7)
-        .select("doc_id", "text")
-    )
-    write_minhash_band_index(
-        minhash_band_index(corpus, "doc_id", "text"), tmp
-    )
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # a concurrent builder won the rename: serve the winner only if
-        # it is complete, else serve our fresh build from its tmp path
-        if _complete(out):
-            shutil.rmtree(tmp, ignore_errors=True)
-            return out
-        return tmp
-    return out
+    stamp = file_stamp(table_path(sf_dir, "documents"))
+    return cached_dir("mhidx", ("mhidx1", *stamp), build)
 
 
 def _incremental_minhash_oracle_sql() -> str:
@@ -9549,8 +9425,6 @@ def ext_dedup_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     invocation with cleanup after the eager checkpoint."""
     import os
     import shutil
-    import tempfile
-    import uuid
 
     from remote_shuffle_spark.functions.hashing import tokens as _toks
     from remote_shuffle_spark.operators.dedup import (
@@ -9571,7 +9445,7 @@ def ext_dedup_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta2 = docs.filter(F.col("doc_id") % 10 == 7).unionAll(d2_plants)
 
-    path = os.path.join(tempfile.gettempdir(), f"mhrefresh_{uuid.uuid4().hex}")
+    path = run_dir("mhrefresh")
     try:
         # 4 range files: enough for the sorted-layout contract, a quarter
         # of the write tasks at fixture scale (this query pays the build
@@ -10050,8 +9924,6 @@ def ext_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     would drop every cell the job didn't write)."""
     import os
     import shutil
-    import tempfile
-    import uuid
 
     from remote_shuffle_spark.operators.similarity import (
         ivf_pq_compact_cells,
@@ -10064,7 +9936,7 @@ def ext_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus = emb.filter(F.col("vec_id") % 5 != 2)
     delta1 = emb.filter(F.col("vec_id") % 10 == 2)
     delta2 = emb.filter(F.col("vec_id") % 10 == 7)
-    path = os.path.join(tempfile.gettempdir(), f"ivf_compact_{uuid.uuid4().hex}")
+    path = run_dir("ivf_compact")
     try:
         ivf_pq_write_index(corpus, "vec_id", "embedding", path)
         ivf_pq_upsert(spark, path, delta1, "vec_id", "embedding")
@@ -10211,8 +10083,6 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     form)."""
     import os
     import shutil
-    import tempfile
-    import uuid
 
     from remote_shuffle_spark.functions.hashing import tokens as _toks
     from remote_shuffle_spark.operators.dedup import (
@@ -10233,7 +10103,7 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     delta2 = docs.filter(F.col("doc_id") % 10 == 5).unionAll(plants)
 
-    base = os.path.join(tempfile.gettempdir(), f"stream_ingest_{uuid.uuid4().hex}")
+    base = run_dir("stream_ingest")
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     statuses = os.path.join(base, "statuses")
@@ -10286,15 +10156,12 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             new_docs.write.mode("append").parquet(extra)
 
         def run_once() -> None:
-            q = (
-                spark.readStream.schema("doc_id long, text string")
-                .parquet(src)
-                .writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            run_to_completion(
+                spark.readStream.schema("doc_id long, text string").parquet(src),
+                sink=handle,
+                options={"checkpointLocation": ckpt},
+                available_now=True,
             )
-            q.awaitTermination()
 
         # one file per delta → exactly one micro-batch per AvailableNow run
         delta1.coalesce(1).write.mode("append").parquet(src)
@@ -10815,46 +10682,15 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     (operators/similarity.py:ivf_pq_write_index — encoded corpus
     partitionBy(cell) + model tables), built once per embeddings
     snapshot (stat-keyed cache, the _zorder_events_dir discipline)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from remote_shuffle_spark.operators.similarity import ivf_pq_write_index
     from remote_shuffle_spark.sources.tables import table_path
 
-    src = table_path(sf_dir, "embeddings")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"ivfidx1|{real}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_ivfidx_{key}")
+    def build(tmp: str) -> None:
+        emb = load_table(spark, sf_dir, "embeddings")
+        ivf_pq_write_index(emb, "vec_id", "embedding", tmp)
 
-    def _complete(d: str) -> bool:
-        return os.path.isdir(d) and all(
-            os.path.exists(os.path.join(d, sub, "_SUCCESS"))
-            for sub in ("codes", "centroids", "codebook")
-        )
-
-    if _complete(out):
-        return out
-    # incomplete cache dirs are rebuilt, never served or allowed to block
-    # the fresh build's rename (self-review r11, same as _minhash_index_dir)
-    if os.path.isdir(out):
-        shutil.rmtree(out, ignore_errors=True)
-    tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-    emb = load_table(spark, sf_dir, "embeddings")
-    ivf_pq_write_index(emb, "vec_id", "embedding", tmp)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if _complete(out):
-            shutil.rmtree(tmp, ignore_errors=True)
-            return out
-        return tmp
-    return out
+    stamp = file_stamp(table_path(sf_dir, "embeddings"))
+    return cached_dir("ivfidx", ("ivfidx1", *stamp), build)
 
 
 @declared(
@@ -11062,8 +10898,6 @@ def ext_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes (concurrent-run discipline, ext_schema_evolution)."""
     import os
     import shutil
-    import tempfile
-    import uuid
 
     from remote_shuffle_spark.operators.similarity import (
         ivf_pq_indexed_topk,
@@ -11074,7 +10908,7 @@ def ext_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = emb.filter(F.col("vec_id") % 10 != 3)
     delta = emb.filter(F.col("vec_id") % 10 == 3)
-    path = os.path.join(tempfile.gettempdir(), f"ivf_upsert_{uuid.uuid4().hex}")
+    path = run_dir("ivf_upsert")
     try:
         ivf_pq_write_index(corpus, "vec_id", "embedding", path)
         ivf_pq_upsert(spark, path, delta, "vec_id", "embedding")
@@ -11658,8 +11492,6 @@ def ext_stream_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     demonstrating that the batch scoring stage drops into an ingest
     stream unchanged.  Oracle = keep-first-per-text then the classifier
     algebra, all in SQL."""
-    import uuid
-
     from remote_shuffle_spark.operators.text import quality_classifier
     from remote_shuffle_spark.streaming.dedup import doc_split_dir
     from remote_shuffle_spark.streaming.source import stream_session
@@ -11675,20 +11507,11 @@ def ext_stream_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
         .dropDuplicatesWithinWatermark(["digest"])
     )
     scored = quality_classifier(stream, "doc_id", "text", bucket_width=200)
-    name = f"corpus_prep_{uuid.uuid4().hex[:8]}"
-    q = (
+    table = run_to_completion(
         scored.select("doc_id", "quality_score", "quality_bucket")
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    ).table
     return (
-        scoped.table(name)
+        scoped.table(table)
         .groupBy("quality_bucket")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
@@ -13089,8 +12912,6 @@ def ext_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
     them as one engine-exact row equal to the batch aggregate —
     exactly-once metric accounting, hash-verified.
     """
-    import uuid as _uuid
-
     from remote_shuffle_spark.streaming.latedrop import (
         _ordered_events,
         late_split_dir,
@@ -13108,25 +12929,8 @@ def ext_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum("event_id").alias("id_checksum"),
     )
-    name = f"obs_{_uuid.uuid4().hex[:8]}"
-    q = (
-        observed.writeStream.outputMode("append")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(120)
-        if q.isActive:
-            raise RuntimeError(
-                "AvailableNow trigger failed to self-terminate"
-            )
-    finally:
-        if q.isActive:
-            q.stop()
     n_total, cents_total, n_batches = 0, 0, 0
-    for p in q.recentProgress:
+    for p in run_to_completion(observed, available_now=True).progress:
         m = p["observedMetrics"].get("ingest_audit") if p["observedMetrics"] else None
         if m is None:
             continue
@@ -13174,15 +12978,13 @@ def ext_format_roundtrip_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
-    import uuid
 
     docs = (
         load_table(spark, sf_dir, "documents")
         .filter(F.col("doc_id") < 500)
         .select("doc_id", "text")
     )
-    root = os.path.join(tempfile.gettempdir(), f"fmt_matrix_{uuid.uuid4().hex}")
+    root = run_dir("fmt_matrix")
     legs = []
     try:
         p_orc = os.path.join(root, "orc")
@@ -14127,8 +13929,6 @@ def ext_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
-    import uuid
 
     docs = (
         load_table(spark, sf_dir, "documents")
@@ -14148,7 +13948,7 @@ def ext_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .alias("value")
     )
-    root = os.path.join(tempfile.gettempdir(), f"quarantine_{uuid.uuid4().hex}")
+    root = run_dir("quarantine")
     try:
         lines.write.mode("overwrite").text(root)
         parsed = (
@@ -14550,44 +14350,18 @@ def _invidx_dir(spark: SparkSession, sf_dir: str) -> str:
     (operators/text.py:write_inverted_index — postings partitionBy
     md5-bucket), built once per documents snapshot (stat-keyed cache,
     the _ivf_index_dir discipline)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-    import uuid as _uuid
-
     from remote_shuffle_spark.operators.text import (
         inverted_postings,
         write_inverted_index,
     )
     from remote_shuffle_spark.sources.tables import table_path
 
-    src = table_path(sf_dir, "documents")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"invidx1|{real}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_invidx_{key}")
+    def build(tmp: str) -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        write_inverted_index(inverted_postings(docs, "doc_id", "text"), tmp)
 
-    def _complete(d: str) -> bool:
-        return os.path.isdir(d) and os.path.exists(os.path.join(d, "_SUCCESS"))
-
-    if _complete(out):
-        return out
-    if os.path.isdir(out):
-        shutil.rmtree(out, ignore_errors=True)
-    tmp = f"{out}.tmp.{_uuid.uuid4().hex[:8]}"
-    docs = load_table(spark, sf_dir, "documents")
-    write_inverted_index(inverted_postings(docs, "doc_id", "text"), tmp)
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        if _complete(out):
-            shutil.rmtree(tmp, ignore_errors=True)
-            return out
-        return tmp
-    return out
+    stamp = file_stamp(table_path(sf_dir, "documents"))
+    return cached_dir("invidx", ("invidx1", *stamp), build)
 
 
 @declared(
@@ -14634,8 +14408,6 @@ def ext_inverted_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
-    import uuid as _uuid
 
     from remote_shuffle_spark.operators.text import (
         inverted_index_append,
@@ -14645,7 +14417,7 @@ def ext_inverted_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(tempfile.gettempdir(), f"invidx_up_{_uuid.uuid4().hex}")
+    path = run_dir("invidx_up")
     try:
         write_inverted_index(
             inverted_postings(
@@ -14688,8 +14460,6 @@ def ext_inverted_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob as _glob
     import os
     import shutil
-    import tempfile
-    import uuid as _uuid
 
     from remote_shuffle_spark.operators.text import (
         inverted_index_append,
@@ -14700,7 +14470,7 @@ def ext_inverted_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(tempfile.gettempdir(), f"invidx_cp_{_uuid.uuid4().hex}")
+    path = run_dir("invidx_cp")
 
     def _bucket_files(root: str) -> dict[str, int]:
         out: dict[str, int] = {}
@@ -14765,8 +14535,6 @@ def ext_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     import os
     import shutil
-    import tempfile
-    import uuid
 
     from remote_shuffle_spark.operators.text import (
         inverted_index_append,
@@ -14780,7 +14548,7 @@ def ext_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     delta1 = docs.filter(F.col("doc_id") % 10 == 3)
     delta2 = docs.filter(F.col("doc_id") % 10 == 7)
 
-    base = os.path.join(tempfile.gettempdir(), f"stream_invidx_{uuid.uuid4().hex}")
+    base = run_dir("stream_invidx")
     src = os.path.join(base, "src")
     ckpt = os.path.join(base, "ckpt")
     idx = os.path.join(base, "idx")
@@ -14793,15 +14561,12 @@ def ext_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
 
         def run_once() -> None:
-            q = (
-                spark.readStream.schema("doc_id long, text string")
-                .parquet(src)
-                .writeStream.foreachBatch(handle)
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
+            run_to_completion(
+                spark.readStream.schema("doc_id long, text string").parquet(src),
+                sink=handle,
+                options={"checkpointLocation": ckpt},
+                available_now=True,
             )
-            q.awaitTermination()
 
         delta1.coalesce(1).write.mode("append").parquet(src)
         run_once()

@@ -30,17 +30,17 @@ order-aware merge must absorb.
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from remote_shuffle_spark.operators.upsert import merge_upsert_ordered
+from remote_shuffle_spark.scratch import cached_dir, run_dir
 from remote_shuffle_spark.sources.tables import table_path
+from remote_shuffle_spark.streaming.run import run_to_completion
 from remote_shuffle_spark.streaming.source import event_time, stream_session
+from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
 
 def split_stream_dir(spark: SparkSession, path: str, *, n_splits: int = 4) -> str:
@@ -52,8 +52,6 @@ def split_stream_dir(spark: SparkSession, path: str, *, n_splits: int = 4) -> st
     fixture, so a fixture regenerated in place must invalidate the
     cached split rather than silently replaying stale rows.  Built once,
     atomically (tmp dir + rename), reused while the source is unchanged."""
-    import hashlib
-
     if n_splits < 1:
         raise ValueError(f"n_splits must be >= 1, got {n_splits}")
     real = os.path.realpath(path)
@@ -67,30 +65,15 @@ def split_stream_dir(spark: SparkSession, path: str, *, n_splits: int = 4) -> st
     else:
         st = os.stat(real)
         stats = [(os.path.basename(real), st.st_size, st.st_mtime_ns)]
-    key = hashlib.sha1(f"{real}|{n_splits}|{stats}".encode()).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_cdc_split_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    df = spark.read.parquet(real)
-    for i in range(n_splits):
-        part_dir = os.path.join(tmp, f"_part{i}")
-        df.filter(F.pmod(F.col("event_id"), F.lit(n_splits)) == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(part_dir)
-        src = next(
-            f for f in os.listdir(part_dir) if f.endswith(".parquet")
+
+    def build(tmp: str) -> None:
+        df = spark.read.parquet(real)
+        materialize_split_files(
+            [df.filter(F.pmod(F.col("event_id"), F.lit(n_splits)) == i) for i in range(n_splits)],
+            tmp,
         )
-        shutil.move(os.path.join(part_dir, src), os.path.join(tmp, f"split_{i}.parquet"))
-        shutil.rmtree(part_dir)
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        # lost the build race to a concurrent caller — theirs is complete
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+
+    return cached_dir("cdc_split", (real, n_splits, stats), build)
 
 
 def _latest_per_key(df: DataFrame, key: str, order_cols: list[str]) -> DataFrame:
@@ -103,7 +86,6 @@ def streaming_cdc_upsert(
     sf_dir: str,
     *,
     key: str = "user_id",
-    state_partitions: int | None = 8,
     n_splits: int = 4,
 ) -> DataFrame:
     """Run the events changelog through a real readStream → foreachBatch
@@ -114,7 +96,7 @@ def streaming_cdc_upsert(
     last_value), ordered by user_id — oracle-comparable against the
     batch window equivalent.
     """
-    scoped = stream_session(spark, state_partitions)
+    scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
     batch = scoped.read.parquet(path)
     ts = event_time(dict(batch.dtypes).get("ts"))
@@ -126,8 +108,8 @@ def streaming_cdc_upsert(
         .select("event_id", ts.alias("ts"), F.col(key), "event_type", "value")
     )
 
-    root = os.path.join(tempfile.gettempdir(), f"rss_cdc_{uuid.uuid4().hex[:8]}")
-    os.makedirs(root, exist_ok=True)
+    root = run_dir("cdc")
+    os.makedirs(root)
     order_cols = ["ts", "event_id"]
 
     def _versions() -> list[str]:
@@ -146,19 +128,9 @@ def streaming_cdc_upsert(
             merged = latest
         merged.write.mode("overwrite").parquet(os.path.join(root, f"v{batch_id:08d}"))
 
-    query = (
-        stream.writeStream.outputMode("append")
-        .foreachBatch(_apply)
-        .option(
-            "checkpointLocation",
-            os.path.join(tempfile.gettempdir(), f"rss_cdc_ckpt_{uuid.uuid4().hex[:8]}"),
-        )
-        .start()
+    run_to_completion(
+        stream, sink=_apply, options={"checkpointLocation": run_dir("cdc_ckpt")}
     )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
 
     final = _versions()[-1]
     return (

@@ -11,12 +11,19 @@ checks.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from remote_shuffle_spark.scratch import cached_dir, file_stamp
 from remote_shuffle_spark.sources.tables import table_path
+from remote_shuffle_spark.streaming.latedrop import _ordered_events, assign_arrival
+from remote_shuffle_spark.streaming.run import run_to_completion
+from remote_shuffle_spark.streaming.source import (
+    event_time,
+    file_stream_dir,
+    stream_session,
+)
+from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
 
 def streaming_distinct(
@@ -25,24 +32,13 @@ def streaming_distinct(
     *,
     keys: tuple[str, ...] = ("user_id", "event_type"),
     watermark: str = "1 hour",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """First-arrival dedup of the events stream on ``keys``.
 
     Returns the drained memory-sink table projected to ``keys`` — one row
     per distinct key combination, deterministic, oracle-comparable.
-
-    ``state_partitions`` sizes the stateful exchange — see
-    streaming/windowed.py: size it to the distinct-key cardinality, not
-    the corpus; None respects the session conf.
     """
-    from remote_shuffle_spark.streaming.source import (
-        event_time,
-        file_stream_dir,
-        stream_session,
-    )
-
-    scoped = stream_session(spark, state_partitions)
+    scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
     batch = scoped.read.parquet(path)
     stream_dir = file_stream_dir(path)
@@ -54,15 +50,7 @@ def streaming_distinct(
         .dropDuplicates(list(keys))
         .select(*keys)
     )
-    name = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        deduped.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return scoped.table(name).orderBy(*keys)
+    return scoped.table(run_to_completion(deduped).table).orderBy(*keys)
 
 
 def dup_split_dir(
@@ -75,49 +63,26 @@ def dup_split_dir(
     split has none; deduping it proves only the plumbing).  Cached per
     (source identity, params), same invalidation rule as
     latedrop.late_split_dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    def build(tmp: str) -> None:
+        assigned = assign_arrival(
+            _ordered_events(spark, sf_dir), n_splits=n_splits, late_every=None
+        )
+        dupes = assigned.filter(F.pmod(F.col("event_id"), F.lit(dup_every)) == 0)
+        with_dupes = assigned.unionAll(dupes)
+        materialize_split_files(
+            [
+                with_dupes.filter(F.col("arrival") == k).select(
+                    "event_id", "user_id", "event_type", "ts"
+                )
+                for k in range(n_splits)
+            ],
+            tmp,
+        )
 
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        assign_arrival,
+    real, size, mtime_ns = file_stamp(table_path(sf_dir, "events"))
+    return cached_dir(
+        "dupsplit", ("dup", real, n_splits, dup_every, size, mtime_ns), build
     )
-
-    src = table_path(sf_dir, "events")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"dup|{real}|{n_splits}|{dup_every}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_dupsplit_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    assigned = assign_arrival(
-        _ordered_events(spark, sf_dir), n_splits=n_splits, late_every=None
-    )
-    from remote_shuffle_spark.streaming.splitutil import materialize_split_files
-
-    dupes = assigned.filter(F.pmod(F.col("event_id"), F.lit(dup_every)) == 0)
-    with_dupes = assigned.unionAll(dupes)
-    materialize_split_files(
-        [
-            with_dupes.filter(F.col("arrival") == k).select(
-                "event_id", "user_id", "event_type", "ts"
-            )
-            for k in range(n_splits)
-        ],
-        tmp,
-    )
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
 
 
 def streaming_distinct_within_watermark(
@@ -125,7 +90,6 @@ def streaming_distinct_within_watermark(
     sf_dir: str,
     *,
     watermark: str = "30 minutes",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Bounded-state streaming dedup: ``dropDuplicatesWithinWatermark``
     on event_id over the duplicate-pressure split (every 5th event
@@ -143,9 +107,7 @@ def streaming_distinct_within_watermark(
     is precisely why the API is safe to bound.  Output over the finite
     fixture therefore equals batch DISTINCT, hash-checked by the
     oracle."""
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    scoped = stream_session(spark, state_partitions)
+    scoped = stream_session(spark, 8)
     d = dup_split_dir(spark, sf_dir)
     schema = "event_id long, user_id long, event_type string, ts timestamp"
     stream = (
@@ -156,15 +118,7 @@ def streaming_distinct_within_watermark(
         .dropDuplicatesWithinWatermark(["event_id"])
         .select("event_id", "user_id", "event_type")
     )
-    name = f"stream_dedup_wm_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return scoped.table(name).orderBy("event_id")
+    return scoped.table(run_to_completion(stream).table).orderBy("event_id")
 
 
 def doc_split_dir(spark: SparkSession, sf_dir: str, *, n_splits: int = 4) -> str:
@@ -172,51 +126,33 @@ def doc_split_dir(spark: SparkSession, sf_dir: str, *, n_splits: int = 4) -> str
     ranges per file, synthetic event time ts = epoch + doc_id seconds
     (documents carry no timestamp; a deterministic one makes watermarks
     usable).  Cached like late_split_dir."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
     src = table_path(sf_dir, "documents")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"docsplit|{real}|{n_splits}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_docsplit_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    docs = spark.read.parquet(src).select(
-        "doc_id",
-        "text",
-        F.timestamp_micros(
-            F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
-        ).alias("ts"),
-    )
-    # boundaries from the ACTUAL doc_id range, not the row count — a
-    # regenerated fixture with 1-based or gapped ids must not lose rows
-    # (range-partitioning by value only misbalances on gaps, never drops)
-    bounds = docs.agg(
-        F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-    ).collect()[0]
-    span = int(bounds.hi) - int(bounds.lo) + 1
-    from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
-    per = max(1, span // n_splits)
-    frames = []
-    for k in range(n_splits):
-        lo = int(bounds.lo) + k * per
-        hi = int(bounds.lo) + (k + 1) * per if k < n_splits - 1 else int(bounds.hi) + 1
-        frames.append(docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)))
-    materialize_split_files(frames, tmp)
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)
-    return out
+    def build(tmp: str) -> None:
+        docs = spark.read.parquet(src).select(
+            "doc_id",
+            "text",
+            F.timestamp_micros(
+                F.lit(1_700_000_000_000_000) + F.col("doc_id") * 1_000_000
+            ).alias("ts"),
+        )
+        # boundaries from the ACTUAL doc_id range, not the row count — a
+        # regenerated fixture with 1-based or gapped ids must not lose rows
+        # (range-partitioning by value only misbalances on gaps, never drops)
+        bounds = docs.agg(
+            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
+        ).collect()[0]
+        span = int(bounds.hi) - int(bounds.lo) + 1
+        per = max(1, span // n_splits)
+        frames = []
+        for k in range(n_splits):
+            lo = int(bounds.lo) + k * per
+            hi = int(bounds.lo) + (k + 1) * per if k < n_splits - 1 else int(bounds.hi) + 1
+            frames.append(docs.filter((F.col("doc_id") >= lo) & (F.col("doc_id") < hi)))
+        materialize_split_files(frames, tmp)
+
+    real, size, mtime_ns = file_stamp(src)
+    return cached_dir("docsplit", ("docsplit", real, n_splits, size, mtime_ns), build)
 
 
 def streaming_content_dedup(
@@ -224,7 +160,6 @@ def streaming_content_dedup(
     sf_dir: str,
     *,
     watermark: str = "30 days",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """INGEST-TIME content dedup over a document stream: md5 digest of
     the text as the dedup key, ``dropDuplicatesWithinWatermark`` state —
@@ -243,9 +178,7 @@ def streaming_content_dedup(
     production tunes it to the re-crawl window it actually wants to
     dedup across — accepting re-admission past it is the POINT of the
     bounded-state API.  Returns (doc_id, digest)."""
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    scoped = stream_session(spark, state_partitions)
+    scoped = stream_session(spark, 8)
     d = doc_split_dir(spark, sf_dir)
     stream = (
         scoped.readStream.schema("doc_id long, text string, ts timestamp")
@@ -256,12 +189,4 @@ def streaming_content_dedup(
         .dropDuplicatesWithinWatermark(["digest"])
         .select("doc_id", "digest")
     )
-    name = f"content_dedup_{uuid.uuid4().hex[:8]}"
-    query = (
-        stream.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return scoped.table(name).orderBy("doc_id")
+    return scoped.table(run_to_completion(stream).table).orderBy("doc_id")

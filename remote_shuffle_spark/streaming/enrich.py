@@ -18,20 +18,15 @@ finite input.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.sources.tables import load_table, table_path
+from remote_shuffle_spark.streaming.run import run_to_completion
+from remote_shuffle_spark.streaming.source import file_stream_dir, stream_session
 
 
-def enriched_event_counts(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    state_partitions: int | None = 8,
-) -> DataFrame:
+def enriched_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-market-segment event counts: stream(events) ⋈ broadcast dim.
 
     Each event's user maps to a customer row (``user_id + 1 ==
@@ -41,9 +36,7 @@ def enriched_event_counts(
     drained batch DataFrame (c_mktsegment, n, sum_value), deterministic
     and oracle-comparable against the batch equivalent.
     """
-    from remote_shuffle_spark.streaming.source import file_stream_dir, stream_session
-
-    scoped = stream_session(spark, state_partitions)
+    scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
     batch_schema = scoped.read.parquet(path).schema
     stream = scoped.readStream.schema(batch_schema).parquet(file_stream_dir(path))
@@ -60,12 +53,5 @@ def enriched_event_counts(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(18,4)")).cast("double").alias("sum_value"),
     )
-    name = f"enriched_events_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return scoped.table(name).orderBy("c_mktsegment")
+    table = run_to_completion(agg, mode="complete").table
+    return scoped.table(table).orderBy("c_mktsegment")

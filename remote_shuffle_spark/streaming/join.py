@@ -13,35 +13,24 @@ grows forever, which is the #1 production streaming-join failure; at
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from remote_shuffle_spark.sources.tables import table_path
+from remote_shuffle_spark.streaming.run import run_to_completion
+from remote_shuffle_spark.streaming.source import (
+    event_time,
+    file_stream_dir,
+    stream_session,
+)
 
-def view_purchase_attribution(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    horizon_minutes: float = 60.0,
-    watermark: str = "2 hours",
-    state_partitions: int | None = 8,
+
+def _attribution_join(
+    spark: SparkSession, sf_dir: str, how: str, horizon_minutes: float, watermark: str
 ) -> DataFrame:
-    """views ⋈ purchases per user within ``horizon_minutes``: inner
-    stream-stream join with watermarks on both sides and the event-time
-    band ``view.ts <= purchase.ts <= view.ts + horizon`` as a join
-    condition (state eviction bound).  Returns the drained result
-    (user_id, view_id, purchase_id), oracle-comparable to the batch
-    self-join over the same finite input.
-    """
-    from remote_shuffle_spark.sources.tables import table_path
-    from remote_shuffle_spark.streaming.source import (
-        event_time,
-        file_stream_dir,
-        stream_session,
-    )
-
-    scoped = stream_session(spark, state_partitions)
+    """views ⋈ purchases per user within the horizon band, joined ``how``,
+    drained and returned as (user_id, view_id, purchase_id)."""
+    scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
     batch = scoped.read.parquet(path)
     stream_dir = file_stream_dir(path)
@@ -63,26 +52,39 @@ def view_purchase_attribution(
     views = _side("view", "v")
     purchases = _side("purchase", "p")
     horizon = f"interval {int(horizon_minutes * 60)} seconds"
+    user = F.col("v_user")
+    if how == "full_outer":
+        user = F.coalesce(user, F.col("p_user"))
     joined = views.join(
         purchases,
         F.expr(
             f"v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + {horizon}"
         ),
-        "inner",
+        how,
     ).select(
-        F.col("v_user").alias("user_id"),
+        user.alias("user_id"),
         F.col("v_id").alias("view_id"),
         F.col("p_id").alias("purchase_id"),
     )
-    name = f"stream_attrib_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return scoped.table(name).orderBy("view_id", "purchase_id")
+    table = run_to_completion(joined).table
+    return scoped.table(table).orderBy("view_id", "purchase_id")
+
+
+def view_purchase_attribution(
+    spark: SparkSession,
+    sf_dir: str,
+    *,
+    horizon_minutes: float = 60.0,
+    watermark: str = "2 hours",
+) -> DataFrame:
+    """views ⋈ purchases per user within ``horizon_minutes``: inner
+    stream-stream join with watermarks on both sides and the event-time
+    band ``view.ts <= purchase.ts <= view.ts + horizon`` as a join
+    condition (state eviction bound).  Returns the drained result
+    (user_id, view_id, purchase_id), oracle-comparable to the batch
+    self-join over the same finite input.
+    """
+    return _attribution_join(spark, sf_dir, "inner", horizon_minutes, watermark)
 
 
 def view_purchase_attribution_outer(
@@ -91,7 +93,6 @@ def view_purchase_attribution_outer(
     *,
     horizon_minutes: float = 60.0,
     watermark: str = "2 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """LEFT OUTER stream-stream join: every view gets its in-horizon
     purchases, and a view with NO purchase emits a null-extended row —
@@ -116,55 +117,7 @@ def view_purchase_attribution_outer(
     a restarted stream would still be allowed to match).  Returns
     (user_id, view_id, purchase_id nullable).
     """
-    from remote_shuffle_spark.sources.tables import table_path
-    from remote_shuffle_spark.streaming.source import (
-        event_time,
-        file_stream_dir,
-        stream_session,
-    )
-
-    scoped = stream_session(spark, state_partitions)
-    path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
-    stream_dir = file_stream_dir(path)
-
-    def _side(kind: str, prefix: str) -> DataFrame:
-        s = (
-            scoped.readStream.schema(batch.schema)
-            .parquet(stream_dir)
-            .withColumn("ts", event_time(dict(batch.dtypes).get("ts")))
-            .filter(F.col("event_type") == kind)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-        )
-        return s.withWatermark(f"{prefix}_ts", watermark)
-
-    views = _side("view", "v")
-    purchases = _side("purchase", "p")
-    horizon = f"interval {int(horizon_minutes * 60)} seconds"
-    joined = views.join(
-        purchases,
-        F.expr(
-            f"v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + {horizon}"
-        ),
-        "left_outer",
-    ).select(
-        F.col("v_user").alias("user_id"),
-        F.col("v_id").alias("view_id"),
-        F.col("p_id").alias("purchase_id"),
-    )
-    name = f"stream_attrib_outer_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return scoped.table(name).orderBy("view_id", "purchase_id")
+    return _attribution_join(spark, sf_dir, "left_outer", horizon_minutes, watermark)
 
 
 def view_purchase_attribution_full(
@@ -173,7 +126,6 @@ def view_purchase_attribution_full(
     *,
     horizon_minutes: float = 60.0,
     watermark: str = "2 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """FULL OUTER stream-stream join — both unmatched sides null-emit on
     their own eviction rule, completing the stream-join family
@@ -195,52 +147,4 @@ def view_purchase_attribution_full(
     in the query's oracle comment.  Returns
     (user_id, view_id nullable, purchase_id nullable) with user_id
     coalesced across sides."""
-    from remote_shuffle_spark.sources.tables import table_path
-    from remote_shuffle_spark.streaming.source import (
-        event_time,
-        file_stream_dir,
-        stream_session,
-    )
-
-    scoped = stream_session(spark, state_partitions)
-    path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
-    stream_dir = file_stream_dir(path)
-
-    def _side(kind: str, prefix: str) -> DataFrame:
-        s = (
-            scoped.readStream.schema(batch.schema)
-            .parquet(stream_dir)
-            .withColumn("ts", event_time(dict(batch.dtypes).get("ts")))
-            .filter(F.col("event_type") == kind)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("ts").alias(f"{prefix}_ts"),
-            )
-        )
-        return s.withWatermark(f"{prefix}_ts", watermark)
-
-    views = _side("view", "v")
-    purchases = _side("purchase", "p")
-    horizon = f"interval {int(horizon_minutes * 60)} seconds"
-    joined = views.join(
-        purchases,
-        F.expr(
-            f"v_user = p_user AND p_ts >= v_ts AND p_ts <= v_ts + {horizon}"
-        ),
-        "full_outer",
-    ).select(
-        F.coalesce(F.col("v_user"), F.col("p_user")).alias("user_id"),
-        F.col("v_id").alias("view_id"),
-        F.col("p_id").alias("purchase_id"),
-    )
-    name = f"stream_attrib_full_{uuid.uuid4().hex[:8]}"
-    query = (
-        joined.writeStream.outputMode("append").format("memory").queryName(name).start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    return scoped.table(name).orderBy("view_id", "purchase_id")
+    return _attribution_join(spark, sf_dir, "full_outer", horizon_minutes, watermark)

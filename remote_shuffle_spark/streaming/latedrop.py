@@ -35,17 +35,14 @@ the part of watermarking the stream≡batch queries can't exercise.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import shutil
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from remote_shuffle_spark.scratch import cached_dir, file_stamp
 from remote_shuffle_spark.sources.tables import load_table, table_path
+from remote_shuffle_spark.streaming.run import run_to_completion
 from remote_shuffle_spark.streaming.source import event_time, stream_session
+from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
 
 def _ordered_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,38 +116,23 @@ def late_split_dir(
     late re-delivery (and no trailing late file).  Cached per (source
     realpath, params, file size+mtime) — a regenerated fixture
     invalidates the copy (same rule as cdc.split_stream_dir)."""
-    src = table_path(sf_dir, "events")
-    real = os.path.realpath(src)
-    st = os.stat(real)
-    key = hashlib.sha1(
-        f"{real}|{n_splits}|{late_every}|{st.st_size}|{st.st_mtime_ns}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(tempfile.gettempdir(), f"rss_latedrop_{key}")
-    if os.path.isdir(out) and os.path.exists(os.path.join(out, "_SUCCESS")):
-        return out
-    tmp = f"{out}.tmp.{uuid.uuid4().hex[:8]}"
-    os.makedirs(tmp, exist_ok=True)
-    from remote_shuffle_spark.streaming.splitutil import materialize_split_files
+    def build(tmp: str) -> None:
+        assigned = assign_arrival(
+            _ordered_events(spark, sf_dir), n_splits=n_splits, late_every=late_every
+        )
+        n_files = n_splits if late_every is None else n_splits + 1
+        materialize_split_files(
+            [
+                assigned.filter(F.col("arrival") == k).select(
+                    "event_id", "user_id", "event_type", "ts"
+                )
+                for k in range(n_files)
+            ],
+            tmp,
+        )
 
-    assigned = assign_arrival(
-        _ordered_events(spark, sf_dir), n_splits=n_splits, late_every=late_every
-    )
-    n_files = n_splits if late_every is None else n_splits + 1
-    materialize_split_files(
-        [
-            assigned.filter(F.col("arrival") == k).select(
-                "event_id", "user_id", "event_type", "ts"
-            )
-            for k in range(n_files)
-        ],
-        tmp,
-    )
-    open(os.path.join(tmp, "_SUCCESS"), "w").close()
-    try:
-        os.rename(tmp, out)
-    except OSError:
-        shutil.rmtree(tmp, ignore_errors=True)  # lost the build race
-    return out
+    real, size, mtime_ns = file_stamp(table_path(sf_dir, "events"))
+    return cached_dir("latedrop", (real, n_splits, late_every, size, mtime_ns), build)
 
 
 def windowed_counts_with_late_drop(
@@ -161,7 +143,6 @@ def windowed_counts_with_late_drop(
     delay: str = "30 minutes",
     n_splits: int = 4,
     late_every: int = 7,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Windowed per-type counts where the watermark REALLY drops rows.
 
@@ -173,7 +154,7 @@ def windowed_counts_with_late_drop(
     """
     split = late_split_dir(spark, sf_dir, n_splits=n_splits, late_every=late_every)
     schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
+    s2 = stream_session(spark, 8)
     stream = (
         s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
     )
@@ -182,13 +163,7 @@ def windowed_counts_with_late_drop(
         .groupBy(F.window("ts", window).alias("window"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
     )
-    name = f"late_drop_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    updates = s2.table(name).select(
+    updates = s2.table(run_to_completion(agg, mode="update").table).select(
         F.date_format("window.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
         "event_type",
         "n",

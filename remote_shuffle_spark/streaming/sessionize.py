@@ -143,7 +143,6 @@ def sessionize_streaming_table(
     sf_dir: str,
     *,
     gap_minutes: float = 30.0,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Run the stateful streaming sessionizer over the events fixture as a
     real readStream → memory-sink pipeline and return the drained result
@@ -152,20 +151,16 @@ def sessionize_streaming_table(
     micro-batches, the emitted (user, session_id, bounds, count) rows
     equal batch sessionization minus each user's last session — which is
     SQL-expressible, so this custom stateful operator is oracle-checkable.
-
-    ``state_partitions`` — see streaming/windowed.py (size to distinct
-    users, not corpus).
     """
-    import uuid
-
     from remote_shuffle_spark.sources.tables import table_path
+    from remote_shuffle_spark.streaming.run import run_to_completion
     from remote_shuffle_spark.streaming.source import (
         event_time,
         file_stream_dir,
         stream_session,
     )
 
-    scoped = stream_session(spark, state_partitions)
+    scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
     batch = scoped.read.parquet(path)
     stream_dir = file_stream_dir(path)
@@ -175,15 +170,10 @@ def sessionize_streaming_table(
         .withColumn("ts", event_time(dict(batch.dtypes).get("ts")))
     )
     out = sessionize_streaming(stream, gap_minutes=gap_minutes)
-    name = f"stream_sessions_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    table = run_to_completion(out).table
     fmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
     return (
-        scoped.table(name)
+        scoped.table(table)
         .select(
             "user_id",
             "session_id",

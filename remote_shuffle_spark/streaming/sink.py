@@ -1,9 +1,8 @@
 """Production sink drains for the streaming queries (EXT).
 
-The memory sink the declared streaming queries drain through is explicitly
-test/backfill mode: it collects results to the driver, bounded by group
-cardinality but still driver-resident.  This module is the ship path —
-the same streaming frames driven into PARQUET on shared storage:
+The memory sink the declared streaming queries drain through collects
+results to the driver.  This module is the ship path — the same streaming
+frames driven into PARQUET on shared storage:
 
 - ``append``-mode frames (stateful emissions, watermark-closed windows)
   go through Spark's native parquet sink: executor-side writes,
@@ -17,25 +16,14 @@ the same streaming frames driven into PARQUET on shared storage:
   aggregation is the (windows × keys) table, ≪ the corpus; a real
   deployment points the same callback at a MERGE-capable table format
   (the operators/upsert.py seam) for O(delta) instead.
-
-Both drains are synchronous (``processAllAvailable``) because the
-declared queries and tests run finite backfills; a live deployment drops
-the drain and lets the trigger run.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
-
 from pyspark.sql import DataFrame
 
-
-def _scratch(prefix: str) -> str:
-    d = os.path.join(tempfile.gettempdir(), f"rss_sink_{prefix}_{uuid.uuid4().hex[:8]}")
-    os.makedirs(d, exist_ok=True)
-    return d
+from remote_shuffle_spark.scratch import run_dir
+from remote_shuffle_spark.streaming.run import run_to_completion
 
 
 def drain_append_to_parquet(stream_df: DataFrame, *, out_dir: str | None = None) -> str:
@@ -45,19 +33,12 @@ def drain_append_to_parquet(stream_df: DataFrame, *, out_dir: str | None = None)
     Executor-side writes; the sink's file log + the checkpoint give
     exactly-once for the finite backfill.
     """
-    out = out_dir or _scratch("append")
-    ckpt = _scratch("ckpt")
-    query = (
-        stream_df.writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .start()
+    out = out_dir or run_dir("sink_append")
+    run_to_completion(
+        stream_df,
+        sink="parquet",
+        options={"path": out, "checkpointLocation": run_dir("sink_ckpt")},
     )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
     return out
 
 
@@ -69,20 +50,15 @@ def drain_complete_to_parquet(stream_df: DataFrame, *, out_dir: str | None = Non
     rewrites it; the last rewrite wins, and a redelivered batch id
     rewrites the same bytes — idempotent).
     """
-    out = out_dir or _scratch("complete")
-    ckpt = _scratch("ckpt")
+    out = out_dir or run_dir("sink_complete")
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(out)
 
-    query = (
-        stream_df.writeStream.outputMode("complete")
-        .foreachBatch(_write)
-        .option("checkpointLocation", ckpt)
-        .start()
+    run_to_completion(
+        stream_df,
+        mode="complete",
+        sink=_write,
+        options={"checkpointLocation": run_dir("sink_ckpt")},
     )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
     return out

@@ -7,8 +7,7 @@ them in the intended order with ``maxFilesPerTrigger=1``.  The copies had
 already diverged in robustness (some had ``_SUCCESS`` + atomic-rename
 caching, some neither); this helper is the single place the
 coalesce→move→utime mechanics live.  Cache keying, atomic renames, and
-``_SUCCESS`` markers stay in the callers — they differ legitimately
-(content-addressed caches for fixture splits, throwaway dirs for probes).
+``_SUCCESS`` markers live in ``scratch.cached_dir``.
 """
 
 from __future__ import annotations

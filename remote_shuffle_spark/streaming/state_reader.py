@@ -19,12 +19,13 @@ offline read is oracle-checkable against batch DISTINCT.
 
 from __future__ import annotations
 
-import os
-import tempfile
-import uuid
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from remote_shuffle_spark.scratch import run_dir
+from remote_shuffle_spark.streaming.run import run_to_completion
 
 
 def read_state_keys(spark: SparkSession, checkpoint: str, key_cols: list[str]) -> DataFrame:
@@ -40,12 +41,7 @@ def state_operator_metadata(spark: SparkSession, checkpoint: str) -> DataFrame:
     return spark.read.format("state-metadata").load(checkpoint)
 
 
-def dedup_state_snapshot(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    state_partitions: int | None = 4,
-) -> DataFrame:
+def dedup_state_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed streaming dedup on user_id, then an OFFLINE read of
     the retained state keys.  Returns (user_id) rows == batch DISTINCT.
     Also sanity-asserts the state-metadata inventory (one dedup operator
@@ -59,8 +55,9 @@ def dedup_state_snapshot(
 
     split = late_split_dir(spark, sf_dir, late_every=None)
     schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    ckpt = os.path.join(tempfile.gettempdir(), f"rss_ssr_{uuid.uuid4().hex[:8]}")
+    n_state = 4
+    s2 = stream_session(spark, n_state)
+    ckpt = run_dir("ssr")
     stream = (
         s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
@@ -69,28 +66,17 @@ def dedup_state_snapshot(
         .dropDuplicates(["user_id"])
         .select("user_id")
     )
-    q = (
-        stream.writeStream.outputMode("append")
-        .format("noop")
-        .option("checkpointLocation", ckpt)
-        .start()
-    )
     try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    try:
+        run_to_completion(stream, sink="noop", options={"checkpointLocation": ckpt})
         meta = state_operator_metadata(spark, ckpt).collect()
         if len(meta) != 1 or meta[0].operatorName != "dedupe":
             raise RuntimeError(f"unexpected state operator metadata: {meta}")
-        if meta[0].numPartitions != (state_partitions or 4):
+        if meta[0].numPartitions != n_state:
             raise RuntimeError(f"state partition count mismatch: {meta}")
         # materialize the key set BEFORE removing the checkpoint (the
         # statestore read is lazy over its files); keys are the state's
         # distinct user_ids — bounded driver data by construction
         keys = read_state_keys(spark, ckpt, ["user_id"]).collect()
     finally:
-        import shutil
-
-        shutil.rmtree(ckpt, ignore_errors=True)  # no per-run /tmp garbage
+        shutil.rmtree(ckpt, ignore_errors=True)
     return spark.createDataFrame(keys, "user_id long").orderBy("user_id")

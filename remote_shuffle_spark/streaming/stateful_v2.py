@@ -38,7 +38,11 @@ never per row), or the state-server round trips dominate the stream.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
+
+from remote_shuffle_spark.sources.tables import load_table
+from remote_shuffle_spark.streaming.run import run_to_completion
 
 
 def tws_available() -> bool:
@@ -53,6 +57,37 @@ def tws_available() -> bool:
         return True
     except ImportError:
         return False
+
+
+def _ordered_tws_stream(
+    spark: SparkSession, sf_dir: str, *, n_splits: int = 4
+) -> tuple[SparkSession, DataFrame]:
+    """The TWS preamble every query here shares: the :func:`tws_available`
+    gate, a RocksDB-backed scoped session, and a ``readStream`` over the
+    strictly time-ordered event split (one file per micro-batch)."""
+    if not tws_available():
+        raise RuntimeError(
+            "transformWithState needs google.protobuf (the TWS "
+            "state-server protocol); neither the real package nor the "
+            "vendored shim is active here"
+        )
+    from remote_shuffle_spark.streaming.latedrop import (
+        _ordered_events,
+        late_split_dir,
+    )
+    from remote_shuffle_spark.streaming.source import stream_session
+
+    split = late_split_dir(spark, sf_dir, n_splits=n_splits, late_every=None)
+    schema = _ordered_events(spark, sf_dir).schema
+    s2 = stream_session(spark, 8)
+    s2.conf.set(
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    )
+    stream = (
+        s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
+    )
+    return s2, stream
 
 
 class FirstNPerKey(StatefulProcessor):
@@ -97,7 +132,6 @@ def first_n_per_key_stream(
     sf_dir: str,
     *,
     n: int = 5,
-    state_partitions: int | None = 8,
     n_splits: int = 3,
 ) -> DataFrame:
     """Run :class:`FirstNPerKey` over the strictly time-ordered event
@@ -114,40 +148,12 @@ def first_n_per_key_stream(
     round-trips (the query's dominant cost: keys x batches x protocol
     round-trips) for no additional coverage.  The batch-vs-stream
     equality is split-count-invariant by construction."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf (the TWS "
-            "state-server protocol); not available in this container — "
-            "run on a cluster image with protobuf installed"
-        )
-    import uuid
-
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        late_split_dir,
-    )
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    split = late_split_dir(spark, sf_dir, n_splits=n_splits, late_every=None)
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    s2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = (
-        s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
-    )
+    s2, stream = _ordered_tws_stream(spark, sf_dir, n_splits=n_splits)
     out = stream.groupBy("user_id").transformWithStateInPandas(
         FirstNPerKey(n), "user_id long, event_id long", "Update", "none"
     )
-    name = f"first_n_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return s2.table(name).orderBy("user_id", "event_id")
+    table = run_to_completion(out, mode="update").table
+    return s2.table(table).orderBy("user_id", "event_id")
 
 
 def first_n_available_now_stream(
@@ -155,63 +161,17 @@ def first_n_available_now_stream(
     sf_dir: str,
     *,
     n: int = 3,
-    state_partitions: int | None = 8,
 ) -> DataFrame:
-    """Run :class:`FirstNPerKey` under ``Trigger.AvailableNow`` — the
-    self-terminating rate-limited drain — instead of the always-on
-    ``processAllAvailable`` polling loop.  This decouples the TWS family
-    from processAllAvailable semantics (the documented reason
-    ProcessingTime timers can't be exercised in this harness: under
-    processAllAvailable they re-batch forever; AvailableNow is the
-    production idiom for periodic incremental TWS jobs and STOPS on its
-    own after draining the source).  Same ordered-split contract and the
-    same row_number batch oracle as the limiter, with a different n so
-    the two queries can't shadow each other's results."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf (the TWS "
-            "state-server protocol); neither the real package nor the "
-            "vendored shim is active here"
-        )
-    import uuid
-
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        late_split_dir,
-    )
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    split = late_split_dir(spark, sf_dir, late_every=None)
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    s2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = (
-        s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
-    )
+    """Run :class:`FirstNPerKey` under ``Trigger.AvailableNow`` (the
+    self-terminating drain, streaming/run.py).  Same ordered-split
+    contract and the same row_number batch oracle as the limiter, with a
+    different n so the two queries can't shadow each other's results."""
+    s2, stream = _ordered_tws_stream(spark, sf_dir)
     out = stream.groupBy("user_id").transformWithStateInPandas(
         FirstNPerKey(n), "user_id long, event_id long", "Update", "none"
     )
-    name = f"first_n_avnow_{uuid.uuid4().hex[:8]}"
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName(name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination(240)  # AvailableNow stops itself after draining
-        if q.isActive:
-            raise RuntimeError(
-                "AvailableNow trigger failed to self-terminate"
-            )
-    finally:
-        if q.isActive:  # failure path: never leak a live query into the session
-            q.stop()
-    return s2.table(name).orderBy("user_id", "event_id")
+    table = run_to_completion(out, mode="update", available_now=True).table
+    return s2.table(table).orderBy("user_id", "event_id")
 
 
 class TypeCountsProcessor(StatefulProcessor):
@@ -221,9 +181,7 @@ class TypeCountsProcessor(StatefulProcessor):
     ListState (appendList + the paged get iterator), and a deleteIfExists
     of a scratch ValueState at init.  Timer coverage lives in
     :class:`FirstSeenTimerProcessor` (EventTime mode) — timeMode "none"
-    here, because in ProcessingTime mode `shouldRunAnotherBatch` is
-    always true and `processAllAvailable` never settles (measured: 487
-    empty micro-batches before the watchdog killed it).  Emits cumulative
+    here, so the default drain settles (streaming/run.py).  Emits cumulative
     (user_id, event_type, n) rows; counts only grow, so the final answer
     per key is the MAX across update-mode emissions — which the batch
     oracle reproduces with a plain COUNT(*)."""
@@ -272,12 +230,7 @@ class TypeCountsProcessor(StatefulProcessor):
         pass
 
 
-def type_counts_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    state_partitions: int | None = 8,
-) -> DataFrame:
+def type_counts_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run :class:`TypeCountsProcessor` over the ordered event split and
     return final per-(user_id, event_type) totals: update-mode emissions
     are cumulative, so the final total is the MAX emission.  Oracle:
@@ -292,46 +245,16 @@ def type_counts_stream(
     or applyInPandasWithState's one-blob-per-key model stay cheaper.
     Choose TWS typed state for its semantics (TTL, timers, typed maps),
     not for chatty per-element access patterns."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf (the TWS "
-            "state-server protocol); neither the real package nor the "
-            "vendored shim is active here"
-        )
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        late_split_dir,
-    )
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    split = late_split_dir(spark, sf_dir, late_every=None)
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    s2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = (
-        s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
-    )
+    s2, stream = _ordered_tws_stream(spark, sf_dir)
     out = stream.groupBy("user_id").transformWithStateInPandas(
         TypeCountsProcessor(),
         "user_id long, event_type string, n long",
         "Update",
         "none",
     )
-    name = f"type_counts_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    table = run_to_completion(out, mode="update").table
     return (
-        s2.table(name)
+        s2.table(table)
         .groupBy("user_id", "event_type")
         .agg(F.max("n").alias("n"))
         .orderBy("user_id", "event_type")
@@ -349,11 +272,9 @@ class FirstSeenTimerProcessor(StatefulProcessor):
     fires in the first timer phase whose watermark exceeds it (next
     batch, or the final no-data batch for users first seen in the last
     file), where :meth:`handleExpiredTimer` emits exactly one
-    (user_id, fired_ms=user_id) row.  EventTime mode terminates — the
-    no-data batch runs only while the watermark advances — unlike
-    ProcessingTime, which re-batches forever under processAllAvailable.
-    Output is one row per user regardless of batch layout, so the oracle
-    is ``SELECT DISTINCT user_id, user_id AS fired_ms FROM events``."""
+    (user_id, fired_ms=user_id) row.  Output is one row per user
+    regardless of batch layout, so the oracle is
+    ``SELECT DISTINCT user_id, user_id AS fired_ms FROM events``."""
 
     def init(self, handle: StatefulProcessorHandle) -> None:
         self.handle = handle
@@ -388,55 +309,20 @@ class FirstSeenTimerProcessor(StatefulProcessor):
         pass
 
 
-def first_seen_timer_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    state_partitions: int | None = 8,
-) -> DataFrame:
+def first_seen_timer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run :class:`FirstSeenTimerProcessor` in EventTime mode (30-min
     watermark, same horizon as the other streaming queries) and return
     the fired (user_id, fired_ms) rows — exactly one per user."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf (the TWS "
-            "state-server protocol); neither the real package nor the "
-            "vendored shim is active here"
-        )
-    import uuid
-
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        late_split_dir,
-    )
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    split = late_split_dir(spark, sf_dir, late_every=None)
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    s2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = (
-        s2.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split)
-        .withWatermark("ts", "30 minutes")
-    )
+    s2, stream = _ordered_tws_stream(spark, sf_dir)
+    stream = stream.withWatermark("ts", "30 minutes")
     out = stream.groupBy("user_id").transformWithStateInPandas(
         FirstSeenTimerProcessor(),
         "user_id long, fired_ms long",
         "Update",
         "EventTime",
     )
-    name = f"first_seen_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return s2.table(name).orderBy("user_id")
+    table = run_to_completion(out, mode="update").table
+    return s2.table(table).orderBy("user_id")
 
 
 class SeededCountProcessor(StatefulProcessor):
@@ -470,51 +356,20 @@ class SeededCountProcessor(StatefulProcessor):
         pass
 
 
-def seeded_count_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    state_partitions: int | None = 8,
-) -> DataFrame:
+def seeded_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run :class:`SeededCountProcessor` with initial state = each
     user's count of EVEN event_ids (a batch aggregate), streaming ALL
     events — final total per user = even-count + total-count.  Users
     with no even events exercise the no-initial-state key path; the
     fixture has no seed-only users, so output keys = streamed keys
     (matching the oracle's GROUP BY over events)."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf (the TWS "
-            "state-server protocol); neither the real package nor the "
-            "vendored shim is active here"
-        )
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from remote_shuffle_spark.sources.tables import load_table
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        late_split_dir,
-    )
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    split = late_split_dir(spark, sf_dir, late_every=None)
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    s2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    s2, stream = _ordered_tws_stream(spark, sf_dir)
     seeds = (
         load_table(s2, sf_dir, "events")
         .filter(F.col("event_id") % 2 == 0)
         .groupBy("user_id")
         .agg(F.count(F.lit(1)).alias("seed"))
         .groupBy("user_id")
-    )
-    stream = (
-        s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
     )
     out = stream.groupBy("user_id").transformWithStateInPandas(
         SeededCountProcessor(),
@@ -523,14 +378,9 @@ def seeded_count_stream(
         "none",
         initialState=seeds,
     )
-    name = f"seeded_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    table = run_to_completion(out, mode="update").table
     return (
-        s2.table(name)
+        s2.table(table)
         .groupBy("user_id")
         .agg(F.max("total").alias("total"))
         .orderBy("user_id")
@@ -572,55 +422,20 @@ class RowMinMaxProcessor(StatefulProcessor):
         pass
 
 
-def row_minmax_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    state_partitions: int | None = 8,
-) -> DataFrame:
+def row_minmax_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run :class:`RowMinMaxProcessor` through the ROW-based
     transformWithState API; running bounds only widen, so final = MIN of
     emitted mins / MAX of emitted maxes per user."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithState needs google.protobuf (the TWS "
-            "state-server protocol); neither the real package nor the "
-            "vendored shim is active here"
-        )
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        late_split_dir,
-    )
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    split = late_split_dir(spark, sf_dir, late_every=None)
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    s2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    stream = (
-        s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
-    )
+    s2, stream = _ordered_tws_stream(spark, sf_dir)
     out = stream.groupBy("user_id").transformWithState(
         RowMinMaxProcessor(),
         "user_id long, min_event long, max_event long",
         "Update",
         "none",
     )
-    name = f"row_mm_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    table = run_to_completion(out, mode="update").table
     return (
-        s2.table(name)
+        s2.table(table)
         .groupBy("user_id")
         .agg(
             F.min("min_event").alias("min_event"),
@@ -658,48 +473,13 @@ class TTLCountProcessor(StatefulProcessor):
         pass
 
 
-def ttl_count_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    state_partitions: int | None = 8,
-    settle_seconds: float = 240.0,
-) -> DataFrame:
-    """Run :class:`TTLCountProcessor` in ProcessingTime mode.  In this
-    mode `shouldRunAnotherBatch` is always true, so
-    ``processAllAvailable`` never returns (measured: 487 empty batches —
-    module docstring) and ``Trigger.AvailableNow`` does not terminate
-    either (measured r8: still active after 120 s with all data long
-    drained).  The bounded-drain idiom for ProcessingTime is therefore
-    POLL-THEN-STOP: wait until every expected key has emitted and the
-    source reports no pending data, then stop the query — the only
-    processing-time-dependent thing in the output is the TTL horizon,
-    parked ~12 days out, so the drained totals are deterministic."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf (the TWS "
-            "state-server protocol); neither the real package nor the "
-            "vendored shim is active here"
-        )
-    import time
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from remote_shuffle_spark.sources.tables import load_table
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        late_split_dir,
-    )
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    split = late_split_dir(spark, sf_dir, late_every=None)
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    s2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+def ttl_count_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Run :class:`TTLCountProcessor` in ProcessingTime mode with the
+    poll-then-stop drain (streaming/run.py), settled once every key's
+    total equals the source.  The only processing-time-dependent thing in
+    the output is the TTL horizon, parked ~12 days out, so the drained
+    totals are deterministic."""
+    s2, stream = _ordered_tws_stream(spark, sf_dir)
     want = (
         load_table(spark, sf_dir, "events")
         .groupBy("user_id")
@@ -707,44 +487,26 @@ def ttl_count_stream(
     )
     want_users = want.count()
     want_rows = want.agg(F.sum("n")).collect()[0][0]
-    stream = (
-        s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
-    )
     out = stream.groupBy("user_id").transformWithStateInPandas(
         TTLCountProcessor(),
         "user_id long, total long",
         "Update",
         "ProcessingTime",
     )
-    name = f"ttl_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        deadline = time.time() + settle_seconds
-        while time.time() < deadline:
-            done = (
-                s2.table(name)
-                .groupBy("user_id")
-                .agg(F.max("total").alias("t"))
-                .agg(
-                    F.count(F.lit(1)).alias("u"), F.sum("t").alias("r")
-                )
-                .collect()[0]
-            )
-            if (
-                done.u == want_users
-                and done.r == want_rows
-                and not q.status["isDataAvailable"]
-            ):
-                break
-            time.sleep(1.0)
-        else:
-            raise TimeoutError(
-                f"TWS ProcessingTime stream did not settle in {settle_seconds}s"
-            )
-    finally:
-        q.stop()
+
+    def settled(table: str) -> bool:
+        done = (
+            s2.table(table)
+            .groupBy("user_id")
+            .agg(F.max("total").alias("t"))
+            .agg(F.count(F.lit(1)).alias("u"), F.sum("t").alias("r"))
+            .collect()[0]
+        )
+        return done.u == want_users and done.r == want_rows
+
+    table = run_to_completion(out, mode="update", settled=settled).table
     return (
-        s2.table(name)
+        s2.table(table)
         .groupBy("user_id")
         .agg(F.max("total").alias("total"))
         .orderBy("user_id")
@@ -799,69 +561,21 @@ class ProcTimeTimerProcessor(StatefulProcessor):
         pass
 
 
-def proc_time_timer_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    *,
-    state_partitions: int | None = 8,
-    settle_seconds: float = 240.0,
-) -> DataFrame:
+def proc_time_timer_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Run :class:`ProcTimeTimerProcessor` in ProcessingTime mode with the
-    POLL-THEN-STOP drain proven by :func:`ttl_count_stream` (in this mode
-    neither processAllAvailable nor Trigger.AvailableNow terminates):
-    poll until every user has a fired row and the source reports no
-    pending data, then stop.  Returns one (user_id, fired_ms) row per
-    user."""
-    if not tws_available():
-        raise RuntimeError(
-            "transformWithStateInPandas needs google.protobuf (the TWS "
-            "state-server protocol); neither the real package nor the "
-            "vendored shim is active here"
-        )
-    import time
-    import uuid
-
-    from pyspark.sql import functions as F
-
-    from remote_shuffle_spark.sources.tables import load_table
-    from remote_shuffle_spark.streaming.latedrop import (
-        _ordered_events,
-        late_split_dir,
-    )
-    from remote_shuffle_spark.streaming.source import stream_session
-
-    split = late_split_dir(spark, sf_dir, late_every=None)
-    schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, state_partitions)
-    s2.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
+    poll-then-stop drain (streaming/run.py), settled once every user has
+    a fired row.  Returns one (user_id, fired_ms) row per user."""
+    s2, stream = _ordered_tws_stream(spark, sf_dir)
     want_users = load_table(spark, sf_dir, "events").select("user_id").distinct().count()
-    stream = (
-        s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
-    )
     out = stream.groupBy("user_id").transformWithStateInPandas(
         ProcTimeTimerProcessor(),
         "user_id long, fired_ms long",
         "Update",
         "ProcessingTime",
     )
-    name = f"ptt_{uuid.uuid4().hex[:8]}"
-    q = out.writeStream.outputMode("update").format("memory").queryName(name).start()
-    try:
-        deadline = time.time() + settle_seconds
-        while time.time() < deadline:
-            fired = (
-                s2.table(name).select("user_id").distinct().count()
-            )
-            if fired == want_users and not q.status["isDataAvailable"]:
-                break
-            time.sleep(1.0)
-        else:
-            raise TimeoutError(
-                f"TWS proc-time timers did not all fire in {settle_seconds}s"
-            )
-    finally:
-        q.stop()
-    return s2.table(name).distinct().orderBy("user_id")
+    table = run_to_completion(
+        out,
+        mode="update",
+        settled=lambda t: s2.table(t).select("user_id").distinct().count() == want_users,
+    ).table
+    return s2.table(table).distinct().orderBy("user_id")

@@ -2,10 +2,9 @@
 
 The reference is batch-shuffle only (SURVEY §2.3 — zero streaming code),
 so this is a north-star extension: tumbling-window aggregation with a
-watermark, run as a real ``readStream`` → ``writeStream`` pipeline driven
-to completion with ``processAllAvailable`` (the parquet directory stands
-in for a stream source, exactly like the reference's tests used
-``file://`` as the "remote" filesystem).
+watermark, run as a real ``readStream`` → ``writeStream`` pipeline (the
+parquet directory stands in for a stream source, exactly like the
+reference's tests used ``file://`` as the "remote" filesystem).
 
 The result of a complete-mode windowed aggregation over a finite input
 equals the batch GROUP BY time_bucket — which is what the DuckDB oracle
@@ -14,12 +13,16 @@ checks.
 
 from __future__ import annotations
 
-import uuid
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.sources.tables import table_path
+from remote_shuffle_spark.streaming.run import run_to_completion
+from remote_shuffle_spark.streaming.source import (
+    event_time,
+    file_stream_dir,
+    stream_session,
+)
 
 
 def windowed_event_counts(
@@ -28,37 +31,16 @@ def windowed_event_counts(
     *,
     window: str = "5 minutes",
     watermark: str = "1 hour",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Tumbling-window per-event-type counts + exact value sums.
 
     Returns a batch DataFrame (the drained memory-sink table) with columns
     (window_start string, event_type, n, sum_value) — deterministic and
     oracle-comparable.
-
-    ``state_partitions`` sizes the stateful exchange (state store
-    instances = shuffle partitions at query start, fixed for the query's
-    lifetime).  Unlike batch shuffles, every state partition pays
-    per-micro-batch commit overhead even when near-empty, so this should
-    track the number of DISTINCT GROUP KEYS (windows x event types —
-    thousands here), not the corpus size; 32 partitions of tiny state
-    measured 1.8x slower than 8 on the fixture.  None = leave the
-    session's ``spark.sql.shuffle.partitions`` untouched (use on a real
-    cluster where the session conf is already sized for state).
     """
-    agg, _ = windowed_event_agg(
-        spark, sf_dir, window=window, watermark=watermark, state_partitions=state_partitions
-    )
-    name = f"windowed_events_{uuid.uuid4().hex[:8]}"
-    query = (
-        agg.writeStream.outputMode("complete").format("memory").queryName(name).start()
-    )
-    try:
-        query.processAllAvailable()
-    finally:
-        query.stop()
-    out = agg.sparkSession.table(name)
-    return _project_windows(out)
+    agg, scoped = windowed_event_agg(spark, sf_dir, window=window, watermark=watermark)
+    table = run_to_completion(agg, mode="complete").table
+    return _project_windows(scoped.table(table))
 
 
 def windowed_event_agg(
@@ -67,18 +49,11 @@ def windowed_event_agg(
     *,
     window: str = "5 minutes",
     watermark: str = "1 hour",
-    state_partitions: int | None = 8,
 ):
     """The streaming windowed aggregation FRAME (not yet drained) +
     the scoped session that owns it — shared by every sink flavor
     (memory drain above, parquet sinks in streaming.sink)."""
-    from remote_shuffle_spark.streaming.source import (
-        event_time,
-        file_stream_dir,
-        stream_session,
-    )
-
-    scoped = stream_session(spark, state_partitions)
+    scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
     batch = scoped.read.parquet(path)
     # the file-stream source requires a directory: expose the single
@@ -113,7 +88,6 @@ def windowed_event_counts_filesink(
     *,
     window: str = "5 minutes",
     watermark: str = "1 hour",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """Same windowed aggregation driven through the PRODUCTION sink
     (streaming.sink.drain_complete_to_parquet: foreachBatch + idempotent
@@ -122,9 +96,7 @@ def windowed_event_counts_filesink(
     the identical result contract (same oracle)."""
     from remote_shuffle_spark.streaming.sink import drain_complete_to_parquet
 
-    agg, scoped = windowed_event_agg(
-        spark, sf_dir, window=window, watermark=watermark, state_partitions=state_partitions
-    )
+    agg, scoped = windowed_event_agg(spark, sf_dir, window=window, watermark=watermark)
     out_dir = drain_complete_to_parquet(agg)
     return _project_windows(scoped.read.parquet(out_dir))
 
@@ -136,7 +108,6 @@ def session_window_stream(
     gap: str = "30 minutes",
     gap_expr=None,
     watermark: str = "2 hours",
-    state_partitions: int | None = 8,
 ) -> DataFrame:
     """NATIVE streaming session windows (``F.session_window`` under
     append mode) — the built-in merging-session state operator, next to
@@ -153,16 +124,7 @@ def session_window_stream(
     tail sessions stay in state exactly as a live stream would keep
     them mergeable).  Returns (user_id, session_start, session_end,
     n_events) as formatted strings/longs, batch-oracle-comparable."""
-    import uuid
-
-    from remote_shuffle_spark.sources.tables import table_path
-    from remote_shuffle_spark.streaming.source import (
-        event_time,
-        file_stream_dir,
-        stream_session,
-    )
-
-    scoped = stream_session(spark, state_partitions)
+    scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
     batch = scoped.read.parquet(path)
     stream = (
@@ -181,14 +143,8 @@ def session_window_stream(
             "sw"
         ),
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    name = f"session_stream_{uuid.uuid4().hex[:8]}"
-    q = agg.writeStream.outputMode("append").format("memory").queryName(name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
     return (
-        scoped.table(name)
+        scoped.table(run_to_completion(agg).table)
         .select(
             "user_id",
             F.date_format("sw.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),

@@ -314,7 +314,7 @@ def test_cms_inner_product_join_size_bounds(spark):
         a.inner_product(sk(right, 0.01))
 
 
-def test_burst_detection_integer_rule_matches_float_3sigma(spark):
+def test_burst_detection_integer_rule_matches_float_3sigma(spark, tmp_path):
     """The float-free burst test ((n*x-S)^2 > 9*(n*SS-S^2), x above mean)
     must agree with the float x > mu + 3*sigma rule on crafted counts
     with one planted spike, and the declared query must flag it."""
@@ -357,10 +357,7 @@ def test_burst_detection_integer_rule_matches_float_3sigma(spark):
         F.lit(0.0).alias("value"),
         F.lit("").alias("props"),
     )
-    import tempfile
-    import uuid
-
-    d = tempfile.mkdtemp(prefix=f"burst_{uuid.uuid4().hex[:6]}")
+    d = str(tmp_path)
     ev.write.mode("overwrite").parquet(f"{d}/events.parquet")
     out = {
         r.event_type: (r.n_minutes, r.burst_minutes, r.max_minute_count)

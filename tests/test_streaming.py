@@ -75,10 +75,10 @@ def test_sessionize_streaming_matches_batch_closed_sessions(spark, sf_smoke):
     assert set(key(r) for r in got) == expect
 
 
-def test_sessionize_streaming_session_ids_continue_across_microbatches(spark):
+def test_sessionize_streaming_session_ids_continue_across_microbatches(spark, tmp_path):
     # ADVICE round-1: the session ordinal must live in state — a user whose
     # sessions close in different micro-batches gets 1, 2, 3… not 1, 1, 1.
-    stream_dir = os.path.join(tempfile.gettempdir(), f"sess_multibatch_{uuid.uuid4().hex[:8]}")
+    stream_dir = str(tmp_path / "sess_multibatch")
     minute = 60 * 1_000_000
 
     def write_events(ts_list_us):
@@ -108,11 +108,11 @@ def test_sessionize_streaming_session_ids_continue_across_microbatches(spark):
     assert got == [(1, 2), (2, 1), (3, 2)]
 
 
-def test_watermark_drops_late_data_across_batches(spark):
+def test_watermark_drops_late_data_across_batches(spark, tmp_path):
     """Append-mode windowed agg: a window is finalized once the watermark
     passes its end; rows arriving after that are DROPPED, not merged —
     the late-data contract SURVEY §2.3 streaming requires."""
-    stream_dir = os.path.join(tempfile.gettempdir(), f"late_data_{uuid.uuid4().hex[:8]}")
+    stream_dir = str(tmp_path / "late_data")
     hour = 3600 * 1_000_000
 
     def write_events(ts_list_us):
@@ -155,13 +155,16 @@ def test_watermark_drops_late_data_across_batches(spark):
     assert got.get(2) == 1
 
 
-def test_file_stream_dir_keys_on_realpath(tmp_path):
+def test_file_stream_dir_keys_on_realpath(tmp_path, monkeypatch):
     """Same basename, different paths → distinct stream dirs; a re-pointed
     or dangling link is replaced, never trusted (ADVICE r2: basename
     keying silently streamed stale data)."""
     import os
 
     from remote_shuffle_spark.streaming.source import file_stream_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "scratch"))
+    (tmp_path / "scratch").mkdir()
 
     a = tmp_path / "fix_a" / "events.parquet"
     b = tmp_path / "fix_b" / "events.parquet"
@@ -218,11 +221,11 @@ def test_shingle_structs_ansi_safe(spark):
     assert len(rows[2]) == 2
 
 
-def test_stream_static_enrich_updates_per_microbatch(spark):
+def test_stream_static_enrich_updates_per_microbatch(spark, tmp_path):
     """Stream-static join semantics: each micro-batch joins against the
     static dimension, so events arriving in later batches still enrich
     and fold into the complete-mode aggregate."""
-    stream_dir = os.path.join(tempfile.gettempdir(), f"enrich_{uuid.uuid4().hex[:8]}")
+    stream_dir = str(tmp_path / "enrich")
 
     def write_batch(rows):
         spark.createDataFrame(rows, "user_id bigint, value double").coalesce(1).write.mode(
@@ -260,11 +263,11 @@ def test_stream_static_enrich_updates_per_microbatch(spark):
     assert second == {"A": (3, 16.0), "B": (1, 2.0)}
 
 
-def test_stream_stream_join_matches_across_microbatches(spark):
+def test_stream_stream_join_matches_across_microbatches(spark, tmp_path):
     # a view in micro-batch 1 must still join a purchase arriving in
     # micro-batch 2 (the joy of stateful stream-stream joins), and a
     # purchase outside the horizon must not match.
-    stream_dir = os.path.join(tempfile.gettempdir(), f"ss_join_{uuid.uuid4().hex[:8]}")
+    stream_dir = str(tmp_path / "ss_join")
     minute = 60 * 1_000_000
     base = 1_000_000_000 * 1_000_000  # 2001-09-09: clear of the initial watermark's epoch 0
 
@@ -513,6 +516,32 @@ def test_ordered_only_split_is_strictly_time_ordered(spark):
     from remote_shuffle_spark.streaming.latedrop import _ordered_events
 
     assert total == _ordered_events(spark, sf).count()  # nothing dropped
+
+
+def test_late_split_dir_rebuilds_incomplete_cache(spark, sf_smoke, tmp_path, monkeypatch):
+    """A cache directory left without _SUCCESS (a crash, a /tmp cleaner)
+    is rebuilt, never served — it must not block the fresh build's rename
+    (ENOTEMPTY) and be handed back broken on every later call."""
+    import hashlib
+
+    from remote_shuffle_spark.streaming.latedrop import late_split_dir
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    real = os.path.realpath(table_path(sf_smoke, "events"))
+    st = os.stat(real)
+    key = hashlib.sha1(
+        f"{real}|2|7|{st.st_size}|{st.st_mtime_ns}".encode()
+    ).hexdigest()[:12]
+    broken = tmp_path / f"rss_latedrop_{key}"
+    broken.mkdir()
+    (broken / "split_0.parquet").write_bytes(b"truncated")
+
+    d = late_split_dir(spark, sf_smoke, n_splits=2, late_every=7)
+    assert os.path.exists(os.path.join(d, "_SUCCESS"))
+    files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
+    assert files == [f"split_{k}.parquet" for k in range(3)]
+    n = spark.read.parquet(*[os.path.join(d, f) for f in files]).count()
+    assert n == spark.read.parquet(real).count()
 
 
 def test_stream_outer_join_nulls_emitted_both_sides(spark):
