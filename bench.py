@@ -16,8 +16,9 @@ rounds of trend analysis had to caveat in prose — and
 ``queries_first_exec`` keeps the cold numbers so nothing is hidden.
 The final stdout line is a COMPACT JSON (totals, n_queries, slowest-20
 steady map) sized to survive the driver's 2000-char tail; the full
-per-query first/steady maps are written to ``BENCH_full.json`` next to
-this script for round-over-round comparison.
+per-query first/steady maps are written to ``BENCH_full.json`` and to
+the per-core-count ``BENCH_full_c<cpus>.json`` next to this script for
+round-over-round comparison (see :func:`artifact_names`).
 Usage: ``python bench.py [--queries name1,name2] [--repeat 1]`` (repeat 1
 restores the old single-run behavior; queries then reports first-exec).
 """
@@ -33,6 +34,20 @@ import time
 
 def materialize(df) -> None:
     df.write.format("noop").mode("overwrite").save()
+
+
+def artifact_names(family: str | None, queries: str | None, cpus: str) -> list[str]:
+    """Files the full per-query map goes to.  A ``--family`` run gets its
+    own file and a ``--queries`` subset a scratch file, so neither
+    clobbers the full-map artifact the round-over-round compare reads.
+    A full run writes the legacy ``BENCH_full.json`` and
+    ``BENCH_full_c<cpus>.json``: runs at two core counts each keep their
+    own map instead of the second silently overwriting the first."""
+    if family:
+        return [f"BENCH_family_{family}.json"]
+    if queries:
+        return ["BENCH_subset.json"]
+    return ["BENCH_full.json", f"BENCH_full_c{cpus}.json"]
 
 
 def main() -> None:
@@ -107,10 +122,8 @@ def main() -> None:
         "queries_first_exec": first,
         "value_first_exec": round(sum(first.values()), 3),
         "sf": sf,
-        # r15: the driver runs this harness at TWO core counts and the
-        # second (8-core) run silently overwrote the 32-core settled map
-        # on disk after the r14 close — record the core count so any
-        # consumer can tell which regime a BENCH_full.json belongs to
+        # the core count, so any consumer can tell which regime a
+        # BENCH_full.json belongs to
         "cpus": os.environ.get("SPARK_GRAFT_CPUS") or str(os.cpu_count()),
     }
     # The driver records only the LAST 2000 chars of output, which the full
@@ -118,18 +131,10 @@ def main() -> None:
     # to a repo file for round-over-round per-query comparison, and make the
     # FINAL stdout line a compact JSON — totals + the slowest-20 steady
     # times — that always fits in the tail.
-    # --queries subset runs must NOT clobber the full-map artifact the
-    # round-over-round compare reads (r12: a 5-query re-measure overwrote
-    # the fresh 320-query map) — they get their own scratch file.
-    if args.family:
-        fname = f"BENCH_family_{args.family}.json"
-    elif args.queries:
-        fname = "BENCH_subset.json"
-    else:
-        fname = "BENCH_full.json"
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)), fname)
-    with open(full_path, "w") as fh:
-        json.dump(result, fh, sort_keys=True)
+    here = os.path.dirname(os.path.abspath(__file__))
+    for fname in artifact_names(args.family, args.queries, result["cpus"]):
+        with open(os.path.join(here, fname), "w") as fh:
+            json.dump(result, fh, sort_keys=True)
     slowest = dict(sorted(steady.items(), key=lambda kv: -kv[1])[:20])
     # FIXED sentinel block (r14 verdict, next-round item 2): the compact
     # tail used to carry ONLY the slowest-20, so the driver's

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from remote_shuffle_spark.functions.vectors import int_dot, int_sq_l2, quantize_floor
 from remote_shuffle_spark.operators import dedup, multimodal, similarity, text
 from remote_shuffle_spark.queries import dec, declared
 from remote_shuffle_spark.scratch import cached_dir, file_stamp, run_dir
@@ -3598,6 +3599,33 @@ def ext_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _probe_dots(emb: DataFrame, n_probes: int, probe_label: str, row_label: str) -> DataFrame:
+    """(_pid, probe_label, _id, row_label, _dot): the integer dot product
+    (floor(v*127) quantization) of each probe (vec_id < n_probes,
+    broadcast) with every OTHER embedding row, each side carrying its
+    label under the given name."""
+    q = similarity.QSCALE
+    probes = F.broadcast(
+        emb.filter(F.col("vec_id") < n_probes).select(
+            F.col("vec_id").alias("_pid"),
+            F.col("label").alias(probe_label),
+            quantize_floor("embedding", q).alias("_pq"),
+        )
+    )
+    return (
+        emb.select(
+            F.col("vec_id").alias("_id"),
+            F.col("label").alias(row_label),
+            quantize_floor("embedding", q).alias("_xq"),
+        )
+        .crossJoin(probes)
+        .filter(F.col("_id") != F.col("_pid"))
+        .select(
+            "_pid", probe_label, "_id", row_label, int_dot(F.col("_xq"), F.col("_pq")).alias("_dot")
+        )
+    )
+
+
 @declared(
     "ext_hard_negatives",
     oracle="""
@@ -3649,41 +3677,7 @@ def ext_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     structs reach the exchange regardless of corpus size.  Tie-breaks to
     the smallest id on both sides (max(struct(dot, -id)) recovers
     smallest-id-on-tie for the negative argmax)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    def _qvec(col):
-        return F.transform(
-            F.col(col), lambda x: F.floor(x.cast("double") * 127).cast("long")
-        )
-
-    probes = F.broadcast(
-        emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("_pid"),
-            F.col("label").alias("_plabel"),
-            _qvec("embedding").alias("_pq"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("_xq"), F.col("_pq"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        emb.select(
-            F.col("vec_id").alias("_id"),
-            F.col("label").alias("_xlabel"),
-            _qvec("embedding").alias("_xq"),
-        )
-        .crossJoin(probes)
-        .filter(F.col("_id") != F.col("_pid"))
-        .select(
-            "_pid",
-            "_plabel",
-            "_id",
-            "_xlabel",
-            dot.alias("_dot"),
-        )
-    )
+    scored = _probe_dots(load_table(spark, sf_dir, "embeddings"), 8, "_plabel", "_xlabel")
     same = F.col("_xlabel") == F.col("_plabel")
     agg = scored.groupBy("_pid", "_plabel").agg(
         F.min(F.when(same, F.struct("_dot", "_id"))).alias("_pos"),
@@ -3752,46 +3746,16 @@ def ext_ann_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     join of the 40 selected rows against the scored corpus with a
     combinable count, not a corpus-wide window.  Integer dots
     throughout."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    from pyspark.sql import Window as W
-
-    def _qvec(col):
-        return F.transform(
-            F.col(col), lambda x: F.floor(x.cast("double") * 127).cast("long")
-        )
-
-    probes = F.broadcast(
-        emb.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("_pid"), _qvec("embedding").alias("_pq")
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("_xq"), F.col("_pq"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        emb.select(
-            F.col("vec_id").alias("_id"),
-            F.col("label").alias("_label"),
-            _qvec("embedding").alias("_xq"),
-        )
-        .crossJoin(probes)
-        .filter(F.col("_id") != F.col("_pid"))
-        .select("_pid", "_id", "_label", dot.alias("_dot"))
-    )
-    filt = scored.filter(F.col("_label") % 3 == 0)
-    sub = filt.withColumn("_sub", F.pmod(F.xxhash64("_id"), F.lit(64)))
-    w1 = W.partitionBy("_pid", "_sub").orderBy(F.col("_dot").desc(), "_id")
-    survivors = (
-        sub.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= 5)
-        .drop("_rn", "_sub")
-    )
-    w2 = W.partitionBy("_pid").orderBy(F.col("_dot").desc(), "_id")
+    scored = _probe_dots(load_table(spark, sf_dir, "embeddings"), 8, "_plabel", "_label")
     topk = (
-        survivors.withColumn("_rank", F.row_number().over(w2))
-        .filter(F.col("_rank") <= 5)
+        similarity.topk_per_key(
+            scored.filter(F.col("_label") % 3 == 0),
+            "_pid",
+            [F.col("_dot").desc(), F.col("_id")],
+            5,
+            "_id",
+            "_rank",
+        )
         .select("_pid", "_rank", "_id", "_dot")
         .localCheckpoint(eager=True)  # bounded: probes x k rows
     )
@@ -3867,35 +3831,7 @@ def ext_knn_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side-combinable max(struct(dot, -id, pred)) aggregate — no
     window, no per-probe reducer sort; the confusion matrix is a tiny
     count over 64 rows."""
-    emb = load_table(spark, sf_dir, "embeddings")
-
-    def _qvec(col):
-        return F.transform(
-            F.col(col), lambda x: F.floor(x.cast("double") * 127).cast("long")
-        )
-
-    probes = F.broadcast(
-        emb.filter(F.col("vec_id") < 64).select(
-            F.col("vec_id").alias("_pid"),
-            F.col("label").alias("_truth"),
-            _qvec("embedding").alias("_pq"),
-        )
-    )
-    dot = F.aggregate(
-        F.zip_with(F.col("_xq"), F.col("_pq"), lambda a, b: a * b),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-    scored = (
-        emb.select(
-            F.col("vec_id").alias("_id"),
-            F.col("label").alias("_pred"),
-            _qvec("embedding").alias("_xq"),
-        )
-        .crossJoin(probes)
-        .filter(F.col("_id") != F.col("_pid"))
-        .select("_pid", "_truth", "_pred", "_id", dot.alias("_dot"))
-    )
+    scored = _probe_dots(load_table(spark, sf_dir, "embeddings"), 64, "_truth", "_pred")
     # argmax by (dot desc, id asc): max(struct(dot, -id, pred)) — the
     # hard_negatives tie-break trick carrying the payload in the struct
     nn = scored.groupBy("_pid", "_truth").agg(
@@ -7298,7 +7234,7 @@ def ext_quantized_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference ranking — the measurement that gates a quantized ANN index
     rollout.  Integer dot products end-to-end, so both rankings are
     bit-reproducible across engines regardless of float summation order;
-    top-k is the knn_join two-phase window (no corpus-sized reducer)."""
+    top-k is similarity.topk_per_key (no corpus-sized reducer)."""
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < 10)
     return similarity.quantization_recall_at_k(
@@ -10006,29 +9942,19 @@ def ext_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Same deterministic model and integer algebra as the IVFADC family;
     one broadcast assignment pass + one cell aggregate."""
-    from remote_shuffle_spark.functions.vectors import to_double_array
-
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = emb.select(
         F.col("vec_id").alias("_id"),
-        F.transform(
-            to_double_array("embedding"),
-            lambda x: F.floor(x * 127).cast("long"),
-        ).alias("_q"),
+        quantize_floor("embedding", similarity.QSCALE).alias("_q"),
     )
     cellc = F.broadcast(
         qdf.orderBy("_id")
         .limit(8)
         .select(F.col("_id").alias("_cid"), F.col("_q").alias("_cv"))
     )
-    l2 = F.aggregate(
-        F.zip_with("_q", "_cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
     assigned = (
         qdf.crossJoin(cellc)
-        .select("_id", "_cid", l2.alias("_d"))
+        .select("_id", "_cid", int_sq_l2(F.col("_q"), F.col("_cv")).alias("_d"))
         .groupBy("_id")
         .agg(F.min(F.struct("_d", "_cid")).alias("_m"))
         .select("_id", F.col("_m._cid").alias("cell"), F.col("_m._d").alias("_d"))
@@ -10681,7 +10607,9 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Cached PERSISTED IVFADC index of the embeddings table
     (operators/similarity.py:ivf_pq_write_index — encoded corpus
     partitionBy(cell) + model tables), built once per embeddings
-    snapshot (stat-keyed cache, the _zorder_events_dir discipline)."""
+    snapshot (stat-keyed cache, the _zorder_events_dir discipline).  The
+    stamp covers only the input, so the version tag in the key must change
+    whenever the index writer's output could."""
     from remote_shuffle_spark.operators.similarity import ivf_pq_write_index
     from remote_shuffle_spark.sources.tables import table_path
 
@@ -10690,7 +10618,7 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
         ivf_pq_write_index(emb, "vec_id", "embedding", tmp)
 
     stamp = file_stamp(table_path(sf_dir, "embeddings"))
-    return cached_dir("ivfidx", ("ivfidx1", *stamp), build)
+    return cached_dir("ivfidx", ("ivfidx2", *stamp), build)
 
 
 @declared(
@@ -10782,8 +10710,8 @@ def ext_ivf_pq_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties to smallest id — the PQ-family discipline), so the oracle
     replays index CONTENT and probe math exactly from the raw
     embeddings.  Scale shape: model tables and LUTs broadcast; the
-    pruned code scan carries 8 small ints per row; one (probe, id)
-    aggregate; subgroup two-stage top-k."""
+    pruned code scan carries 8 small ints per row; ADC is a per-row
+    fold; top-k is similarity.topk_per_key."""
     from remote_shuffle_spark.operators.similarity import ivf_pq_indexed_topk
 
     emb = load_table(spark, sf_dir, "embeddings")

@@ -24,6 +24,29 @@ def dot(a: Column, b: Column) -> Column:
     )
 
 
+def quantize_floor(col, scale: int) -> Column:
+    """``floor(v * scale)`` per element as a long array — the integer
+    quantization every integer-exact similarity operator shares, so its
+    rankings are bit-reproducible across engines whatever their float
+    summation order."""
+    c = F.col(col) if isinstance(col, str) else col
+    return F.transform(c, lambda x: F.floor(x.cast("double") * scale).cast("long"))
+
+
+def _long_fold(a, b, f) -> Column:
+    return F.aggregate(F.zip_with(a, b, f), F.lit(0).cast("long"), lambda acc, x: acc + x)
+
+
+def int_dot(a, b) -> Column:
+    """Exact integer dot product of two long arrays."""
+    return _long_fold(a, b, lambda x, y: x * y)
+
+
+def int_sq_l2(a, b) -> Column:
+    """Exact integer squared L2 distance between two long arrays."""
+    return _long_fold(a, b, lambda x, y: (x - y) * (x - y))
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 

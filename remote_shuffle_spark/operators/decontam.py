@@ -102,8 +102,6 @@ def semantic_contamination_hits(
     id_col: str,
     vec_col: str,
     threshold: float = 0.45,
-    round_to: int | None = 6,
-    assign_method: str = "auto",
     max_eval_rows: int = 1_000_000,
 ) -> DataFrame:
     """EMBEDDING-space decontamination (r13 verdict item 5): per train
@@ -127,21 +125,21 @@ def semantic_contamination_hits(
     Both sides must be assigned against the SAME ``centroids`` table
     (pass ``similarity.seed_centroids`` / kmeans output over the full
     corpus); cell assignment uses the shared IVF argmax
-    (``similarity.assign_ivf_cells``, ``round_to``-rounded cosine,
+    (``similarity.assign_ivf_cells``, cosine rounded to ``ROUND_TO``,
     larger cid on ties), so an external engine can replay the blocking
     exactly.  Like SemDeDup's blocking, a cross-cell near-neighbor is
     out of scope by construction — the cells ARE the operator's
     semantics, not a lossy shortcut being hidden.
     """
     from remote_shuffle_spark.functions.vectors import to_double_array
-    from remote_shuffle_spark.operators.similarity import assign_ivf_cells
+    from remote_shuffle_spark.operators.similarity import ROUND_TO, assign_ivf_cells
 
     import numpy as np
     import pandas as pd
 
     spark = train.sparkSession
     ev = assign_ivf_cells(
-        evalset, id_col, vec_col, centroids, method=assign_method, round_to=round_to
+        evalset, id_col, vec_col, centroids, round_to=ROUND_TO
     ).select(F.col("cell"), to_double_array(vec_col).alias("vec"))
     ev_rows = ev.collect()
     if len(ev_rows) > max_eval_rows:
@@ -158,10 +156,10 @@ def semantic_contamination_hits(
     bc = spark.sparkContext.broadcast(by_cell)
 
     assigned = assign_ivf_cells(
-        train, id_col, vec_col, centroids, method=assign_method, round_to=round_to
+        train, id_col, vec_col, centroids, round_to=ROUND_TO
     ).select(F.col(id_col), F.col("cell"), to_double_array(vec_col).alias("vec"))
     id_type = assigned.schema[id_col].dataType.simpleString()
-    thr, rnd = float(threshold), round_to
+    thr = float(threshold)
 
     def _hit_batches(batches):
         mats = bc.value
@@ -174,9 +172,7 @@ def semantic_contamination_hits(
                 V = np.array(sub["vec"].tolist(), dtype=np.float64)
                 norms = np.linalg.norm(V, axis=1)
                 V = V / np.where(norms > 0.0, norms, 1.0)[:, None]
-                sims = V @ M.T
-                if rnd is not None:
-                    sims = np.round(sims, rnd)
+                sims = np.round(V @ M.T, ROUND_TO)
                 h = (sims >= thr).sum(axis=1)
                 mask = h > 0
                 if mask.any():

@@ -485,6 +485,15 @@ def _hyperplane_sign_bit(vec: Column, plane: int, dim: int) -> Column:
     return F.when(d > 0, F.lit(1)).otherwise(F.lit(0))
 
 
+def _lsh_bucket(vec: Column, num_planes: int, dim: int) -> Column:
+    """The ``num_planes``-bit random-hyperplane signature of ``vec`` as a
+    long bucket id (plane 0 is the most significant bit)."""
+    b = F.lit(0).cast("long")
+    for p in range(num_planes):
+        b = F.shiftleft(b, 1).bitwiseOR(_hyperplane_sign_bit(vec, p, dim).cast("long"))
+    return b
+
+
 def embedding_near_duplicates(
     df: DataFrame,
     id_col: str,
@@ -504,11 +513,7 @@ def embedding_near_duplicates(
     running with several plane seeds and unioning, precision is exact.
     """
     v = to_double_array(vec_col)
-    bucket = F.lit(0).cast("long")
-    for p in range(num_planes):
-        bucket = F.shiftleft(bucket, 1).bitwiseOR(
-            _hyperplane_sign_bit(v, p, dim).cast("long")
-        )
+    bucket = _lsh_bucket(v, num_planes, dim)
     # cache only (doc, bucket) — 16 B/row; vectors are corpus-sized and
     # re-joined by id for the verify stage instead of being cached.
     # Registered for release_cached_intermediates() cleanup.
@@ -546,10 +551,7 @@ def semantic_dedup(
     *,
     threshold: float = 0.95,
     num_cells: int = 16,
-    centroids: DataFrame | None = None,
     max_cell_size: int = 4096,
-    assign_method: str = "auto",
-    round_to: int | None = 6,
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): block by nearest k-means cell, then drop every
@@ -570,23 +572,21 @@ def semantic_dedup(
 
     Returns the SURVIVORS: the input rows minus dropped near-duplicates,
     plus a ``cell`` column (useful for writing cell-partitioned output).
-    Deterministic given deterministic centroids (pass
-    clustering.kmeans_centroids(seed=...) or similarity.seed_centroids);
-    ``round_to`` rounds the cosine before the threshold comparison so the
-    keep/drop decision is stable across engines (last-ULP accumulation
-    differences can't flip it).
+    Deterministic: the centroids are similarity.seed_centroids, and the
+    cosine is rounded to similarity.ROUND_TO digits before the argmax and
+    the threshold comparison so the assignment and the keep/drop decision
+    are stable across engines (last-ULP accumulation differences can't
+    flip them).
     """
-    from remote_shuffle_spark.operators.similarity import assign_ivf_cells, seed_centroids
-
-    cents = (
-        centroids
-        if centroids is not None
-        else seed_centroids(df, id_col, vec_col, k=num_cells)
+    from remote_shuffle_spark.operators.similarity import (
+        ROUND_TO,
+        assign_ivf_cells,
+        seed_centroids,
     )
+
+    cents = seed_centroids(df, id_col, vec_col, k=num_cells)
     assigned = _register_cache(
-        assign_ivf_cells(
-            df, id_col, vec_col, cents, method=assign_method, round_to=round_to
-        )
+        assign_ivf_cells(df, id_col, vec_col, cents, round_to=ROUND_TO)
     )
     slim = assigned.select(
         F.col(id_col).alias("doc"), F.col("cell"), to_double_array(vec_col).alias("vec")
@@ -600,7 +600,7 @@ def semantic_dedup(
     import numpy as np
     import pandas as pd
 
-    thr, rnd = float(threshold), round_to
+    thr = float(threshold)
 
     def _dropped_in_cell(pdf: pd.DataFrame) -> pd.DataFrame:
         # drop policy: a doc is dropped iff it has at least one LOWER-id
@@ -617,9 +617,7 @@ def semantic_dedup(
         V = np.array(pdf["vec"].tolist(), dtype=np.float64)[order]
         norms = np.linalg.norm(V, axis=1)
         V = V / np.where(norms > 0.0, norms, 1.0)[:, None]
-        sims = V @ V.T
-        if rnd is not None:
-            sims = np.round(sims, rnd)
+        sims = np.round(V @ V.T, ROUND_TO)
         hit = np.triu(sims >= thr, k=1)  # [i, j]: i < j by id and near-dup
         return pd.DataFrame({"doc": ids[hit.any(axis=0)]})
 

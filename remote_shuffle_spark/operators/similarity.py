@@ -16,47 +16,97 @@ Two paths, same contract (return the top-k neighbors of a query vector):
   k-means build pass is not worth it (write-once corpora, ad-hoc probes).
 
 All vector math is JVM-side higher-order expressions (functions.vectors).
+Every per-key top-k goes through :func:`topk_per_key`; the integer
+PQ/IVFADC operators share one model, one encode, one LUT/ADC scorer and
+one recall harness (the private stages below).
 """
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
+from itertools import combinations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from remote_shuffle_spark.functions.vectors import cosine_similarity, to_double_array
+from remote_shuffle_spark.functions.vectors import (
+    cosine_similarity,
+    int_dot,
+    int_sq_l2,
+    quantize_floor,
+    to_double_array,
+)
+from remote_shuffle_spark.operators.dedup import _lsh_bucket
+
+# Cosines are rounded to this many digits BEFORE ranking or thresholding,
+# so the selected ids are reproducible by an engine accumulating the dot
+# product in a different order.
+ROUND_TO = 6
+# floor(v * QSCALE) integer quantization of the integer-exact operators.
+QSCALE = 127
+# PQ geometry of the persisted index: codes per vector, codebook entries
+# per subspace, and the default cell count.  The writer and its readers
+# all use these, so an index cannot be read with a different geometry.
+NUM_SUBSPACES = 8
+NUM_CENTROIDS = 16
+NUM_CELLS = 8
+# id-hash subgroups of the first top-k phase (reducer work = rows / this).
+NUM_SUBGROUPS = 64
+
+
+def topk_per_key(
+    scored: DataFrame, key: str, order: list, k: int, id_col: str, rank_col: str
+) -> DataFrame:
+    """The ``k`` best rows of ``scored`` per ``key`` value under
+    ``order`` (include ``id_col`` last for a deterministic tie-break),
+    numbered 1..k in ``rank_col``.
+
+    TWO-PHASE so no reducer ever sorts a corpus-sized slice: rows first
+    shuffle on (key, id-hash % NUM_SUBGROUPS) for a per-subgroup window
+    top-k, then the key × NUM_SUBGROUPS × k survivors take a second, tiny
+    window.  A single window on the key alone would hand each reducer
+    every row of its key (the classic top-k skew: with Q queries and 32
+    reducers, minutes versus a stuck stage at 100 TB)."""
+    w1 = W.partitionBy(key, "_sub").orderBy(*order)
+    w2 = W.partitionBy(key).orderBy(*order)
+    return (
+        scored.withColumn("_sub", F.pmod(F.xxhash64(id_col), F.lit(NUM_SUBGROUPS)))
+        .withColumn("_rn", F.row_number().over(w1))
+        .filter(F.col("_rn") <= k)
+        .drop("_rn", "_sub")
+        .withColumn(rank_col, F.row_number().over(w2))
+        .filter(F.col(rank_col) <= k)
+    )
+
+
+def _cosine(a: Column, b: Column) -> Column:
+    return F.round(cosine_similarity(a, b), ROUND_TO)
+
+
+def _top_cosine(pairs: DataFrame, id_col: str, vec: Column, qvec: Column, k: int) -> DataFrame:
+    """(id_col, cos_sim) of the k most similar rows, ties to smallest id."""
+    return (
+        pairs.select(F.col(id_col), _cosine(vec, qvec).alias("cos_sim"))
+        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
+        .limit(k)
+    )
 
 
 def brute_force_topk(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    query_df: DataFrame,
-    *,
-    k: int = 10,
-    round_to: int | None = 6,
+    df: DataFrame, id_col: str, vec_col: str, query_df: DataFrame, *, k: int = 10
 ) -> DataFrame:
     """Exact top-k by cosine similarity to the (single-row) query vector.
 
     ``query_df`` must have one row with column ``vec_col``; it is
     broadcast, so the big side never shuffles — the plan is
     scan → broadcast nested loop (1 row) → project cosine → TakeOrdered(k).
-    Ordering ties are broken by id for determinism.
     """
     q = F.broadcast(query_df.select(to_double_array(vec_col).alias("_qvec")))
-    cos = cosine_similarity(to_double_array(vec_col), F.col("_qvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    return (
-        df.crossJoin(q)
-        .select(F.col(id_col), cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+    return _top_cosine(df.crossJoin(q), id_col, to_double_array(vec_col), F.col("_qvec"), k)
 
 
 # K at or below this uses the pure-expression argmax (no Python workers to
@@ -76,16 +126,15 @@ def assign_ivf_cells(
     vec_col: str,
     centroids_df: DataFrame,
     *,
-    centroid_id_col: str = "cid",
-    centroid_vec_col: str = "cvec",
     method: str = "auto",
     round_to: int | None = None,
     _collected_centroids: list | None = None,
 ) -> DataFrame:
     """Assign every vector to its max-cosine centroid (IVF build step).
 
-    Both paths are NARROW (no shuffle) single passes over the corpus;
-    returns df + ``cell`` column (at scale, persist partitioned by cell):
+    ``centroids_df`` is (cid, cvec).  Both paths are NARROW (no shuffle)
+    single passes over the corpus; returns df + ``cell`` column (at
+    scale, persist partitioned by cell):
 
     - ``method="expr"`` — centroids inlined as literals, per-row argmax as
       an ``array_max`` over (sim, cid) structs.  Fully codegen'd, but the
@@ -107,10 +156,7 @@ def assign_ivf_cells(
     cents = (
         _collected_centroids
         if _collected_centroids is not None
-        else [
-            (r[centroid_id_col], r[centroid_vec_col])
-            for r in centroids_df.select(centroid_id_col, centroid_vec_col).collect()
-        ]
+        else [(r["cid"], r["cvec"]) for r in centroids_df.select("cid", "cvec").collect()]
     )
     if method == "auto":
         method = "expr" if len(cents) <= _EXPR_MAX_CENTROIDS else "pandas"
@@ -171,10 +217,9 @@ def seed_centroids(df: DataFrame, id_col: str, vec_col: str, *, k: int) -> DataF
     but the IVF mechanics are identical).
 
     cid is ``row_number() over (order by id)`` — a plan-independent
-    function of the data.  (An earlier version used
-    monotonically_increasing_id() after orderBy().limit(k), which is
-    stable only while the limit collapses to one partition — a plan
-    change would silently renumber the cells.)"""
+    function of the data.  monotonically_increasing_id() after
+    orderBy().limit(k) is stable only while the limit collapses to one
+    partition, so a plan change would silently renumber the cells."""
     w = W.orderBy(F.col(id_col))
     return (
         df.orderBy(id_col)
@@ -195,9 +240,7 @@ def ivf_topk(
     k: int = 10,
     num_cells: int = 16,
     nprobe: int = 4,
-    round_to: int | None = 6,
     centroids: DataFrame | None = None,
-    assign_method: str = "auto",
 ) -> DataFrame:
     """Approximate top-k: probe only the ``nprobe`` cells nearest the query.
 
@@ -216,13 +259,8 @@ def ivf_topk(
     cent_rows = [
         (int(r["cid"]), list(r["cvec"])) for r in cents.select("cid", "cvec").collect()
     ]
-    assigned = assign_ivf_cells(
-        df, id_col, vec_col, cents, method=assign_method, _collected_centroids=cent_rows
-    )
+    assigned = assign_ivf_cells(df, id_col, vec_col, cents, _collected_centroids=cent_rows)
     q = query_df.select(to_double_array(vec_col).alias("qv")).collect()[0]["qv"]
-    qcol = F.array(*[F.lit(float(x)) for x in q])
-
-    import math
 
     def _cos(a: list, b: list) -> float:
         dot = sum(x * y for x, y in zip(a, b))
@@ -230,15 +268,38 @@ def ivf_topk(
         return dot / (na * nb) if na > 0 and nb > 0 else 0.0
 
     ranked = sorted(cent_rows, key=lambda c: (-_cos(c[1], list(q)), c[0]))
-    probed = [cid for cid, _ in ranked[:nprobe]]
-    pruned = assigned.filter(F.col("cell").isin(probed))
-    cos = cosine_similarity(to_double_array(vec_col), qcol)
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    return (
-        pruned.select(F.col(id_col), cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
+    pruned = assigned.filter(F.col("cell").isin([cid for cid, _ in ranked[:nprobe]]))
+    qcol = F.array(*[F.lit(float(x)) for x in q])
+    return _top_cosine(pruned, id_col, to_double_array(vec_col), qcol, k)
+
+
+def _lsh_probes(
+    q: DataFrame, key: str, dim: int, num_planes: int, hamming_radius: int
+) -> DataFrame:
+    """(key, _bucket): each row of ``q`` (which carries a ``_qvec``
+    double array) exploded over every bucket within ``hamming_radius``
+    sign-bit flips of its own.  The flip masks are data-INDEPENDENT and
+    enumerated driver-side."""
+    if not 0 <= hamming_radius <= num_planes:
+        raise ValueError(f"hamming_radius must be in [0, {num_planes}]")
+    masks = [0] + [
+        sum(1 << bit for bit in bits)
+        for r in range(1, hamming_radius + 1)
+        for bits in combinations(range(num_planes), r)
+    ]
+    qb = q.select(key, _lsh_bucket(F.col("_qvec"), num_planes, dim).alias("_qb"))
+    return qb.select(
+        key,
+        F.explode(F.array(*[F.col("_qb").bitwiseXOR(F.lit(m)) for m in masks])).alias("_bucket"),
+    )
+
+
+def _lsh_corpus(df: DataFrame, id_col: str, vec_col: str, dim: int, num_planes: int) -> DataFrame:
+    """(id_col, _vec, _bucket).  The double array is materialized ONCE
+    before the sign-bit lambdas: HOF lambdas re-evaluate inlined
+    subtrees per element, so an inlined cast would run once per plane."""
+    return df.select(F.col(id_col), to_double_array(vec_col).alias("_vec")).withColumn(
+        "_bucket", _lsh_bucket(F.col("_vec"), num_planes, dim)
     )
 
 
@@ -252,73 +313,31 @@ def lsh_topk(
     dim: int,
     num_planes: int = 8,
     hamming_radius: int = 1,
-    round_to: int | None = 6,
 ) -> DataFrame:
     """LSH-bucketed approximate top-k: probe only buckets within
     ``hamming_radius`` sign-bit flips of the query's bucket.
 
     The scale path next to :func:`ivf_topk` (no training step): every
     vector gets a ``num_planes``-bit random-hyperplane signature — a pure
-    expression, no stored matrix (operators/dedup.py
-    _hyperplane_sign_bit) — and the query joins only the probed buckets.
-    The probe set (sum of C(planes, i) for i <= radius masks XOR'd onto
-    the query bucket) is data-INDEPENDENT, enumerated driver-side, and
-    broadcast: on a bucket-partitioned table the bucket equi-join is
-    partition pruning, exactly like IVF's cell pruning.  Recall rises
-    with the radius; ``hamming_radius=num_planes`` probes every bucket
-    and degrades to exact search — the oracle hook (the whole pipeline
-    signature → probe → join → cosine → top-k is then hash-verified
-    against brute force, same pattern as ext_similarity_ivf).
+    expression, no stored matrix — and the query joins only the probed
+    buckets, broadcast: on a bucket-partitioned table the bucket
+    equi-join is partition pruning, exactly like IVF's cell pruning.
+    Recall rises with the radius; ``hamming_radius=num_planes`` probes
+    every bucket and degrades to exact search — the oracle hook.
 
     Returns (id_col, cos_sim), deterministic tie-break on id.
     """
-    from itertools import combinations
+    q = query_df.select(to_double_array(vec_col).alias("_qvec"))
+    probes = _lsh_probes(q, "_qvec", dim, num_planes, hamming_radius)
+    pairs = _lsh_corpus(df, id_col, vec_col, dim, num_planes).join(F.broadcast(probes), "_bucket")
+    return _top_cosine(pairs, id_col, F.col("_vec"), F.col("_qvec"), k)
 
-    from remote_shuffle_spark.operators.dedup import _hyperplane_sign_bit
 
-    if not 0 <= hamming_radius <= num_planes:
-        raise ValueError(f"hamming_radius must be in [0, {num_planes}]")
-
-    def bucket_of(vec: F.Column) -> F.Column:
-        b = F.lit(0).cast("long")
-        for p in range(num_planes):
-            b = F.shiftleft(b, 1).bitwiseOR(
-                _hyperplane_sign_bit(vec, p, dim).cast("long")
-            )
-        return b
-
-    masks = [0] + [
-        sum(1 << bit for bit in bits)
-        for r in range(1, hamming_radius + 1)
-        for bits in combinations(range(num_planes), r)
-    ]
-    q = query_df.select(
-        to_double_array(vec_col).alias("_qvec"),
-        bucket_of(to_double_array(vec_col)).alias("_qb"),
-    )
-    probes = q.select(
-        "_qvec",
-        F.explode(
-            F.array(*[F.col("_qb").bitwiseXOR(F.lit(m)) for m in masks])
-        ).alias("_bucket"),
-    )
-    # materialize the double-array ONCE before the 8 sign-bit lambdas —
-    # HOF lambdas re-evaluate inlined subtrees per element (round-2
-    # lesson, functions.hashing.word_shingles_from_tokens), so inlining
-    # the cast into bucket_of costs 8 redundant conversions per row
-    data = (
-        df.select(F.col(id_col), to_double_array(vec_col).alias("_vec"))
-        .select(F.col(id_col), "_vec", bucket_of(F.col("_vec")).alias("_bucket"))
-    )
-    cos = cosine_similarity(F.col("_vec"), F.col("_qvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    return (
-        data.join(F.broadcast(probes), "_bucket")
-        .select(F.col(id_col), cos.alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col(id_col))
-        .limit(k)
-    )
+def _ranked_neighbors(scored: DataFrame, id_col: str, k: int) -> DataFrame:
+    """(query_id, rank, id_col, cos_sim) from (_qid, _id, cos_sim)."""
+    return topk_per_key(
+        scored, "_qid", [F.col("cos_sim").desc(), F.col("_id")], k, "_id", "rank"
+    ).select(F.col("_qid").alias("query_id"), "rank", F.col("_id").alias(id_col), "cos_sim")
 
 
 def knn_join(
@@ -329,8 +348,6 @@ def knn_join(
     query_id_col: str,
     *,
     k: int = 10,
-    round_to: int | None = 6,
-    num_subgroups: int = 64,
 ) -> DataFrame:
     """Batch exact k-NN join: EVERY query vector gets its ``k`` nearest
     corpus rows by cosine — the many-probe sibling of
@@ -339,57 +356,26 @@ def knn_join(
 
     Plan shape: the query batch is broadcast (bounded — a batch, not a
     second corpus), the corpus side stays NARROW through scoring
-    (scan → broadcast nested loop → project cosine), and top-k is
-    TWO-PHASE so no reducer ever sorts a corpus-sized slice: rows first
-    shuffle on (query, subgroup = id-hash % ``num_subgroups``) for a
-    per-subgroup window top-k — reducer work is corpus/num_subgroups —
-    then the Q × num_subgroups × k survivors take a second, tiny window
-    for the final per-query top-k.  A single-phase window on query alone
-    would hand each of Q reducers the whole corpus (the classic top-k
-    skew); with Q queries and 32 reducers that is the difference between
-    minutes and a stuck stage at 100 TB.  For corpus sizes where even
-    the scoring scan is too much per query batch, compose
-    :func:`lsh_topk`/:func:`ivf_topk` per query instead (partition
-    pruning replaces the scan; this operator is the exact baseline).
+    (scan → broadcast nested loop → project cosine), and the per-query
+    top-k is :func:`topk_per_key`.  For corpus sizes where even the
+    scoring scan is too much per query batch, use :func:`knn_join_lsh`
+    (partition pruning replaces the scan; this operator is the exact
+    baseline).
 
-    Zero-norm vectors score 0.0 (the module's guard).  Similarities are
-    rounded (``round_to``) BEFORE ranking and ties break on corpus id,
-    so the selected ids are reproducible by an engine accumulating the
-    dot product in a different order.  Returns (query_id, rank, id,
-    cos_sim), rank 1..k.
+    Zero-norm vectors score 0.0; ties break on corpus id.  Returns
+    (query_id, rank, id, cos_sim), rank 1..k.
     """
     q = F.broadcast(
         queries_df.select(
-            F.col(query_id_col).alias("_qid"),
-            to_double_array(vec_col).alias("_qvec"),
+            F.col(query_id_col).alias("_qid"), to_double_array(vec_col).alias("_qvec")
         )
     )
-    cos = cosine_similarity(to_double_array(vec_col), F.col("_qvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
     scored = df.crossJoin(q).select(
         F.col("_qid"),
         F.col(id_col).alias("_id"),
-        cos.alias("cos_sim"),
-        F.pmod(F.xxhash64(id_col), F.lit(num_subgroups)).alias("_sub"),
+        _cosine(to_double_array(vec_col), F.col("_qvec")).alias("cos_sim"),
     )
-    w1 = W.partitionBy("_qid", "_sub").orderBy(F.col("cos_sim").desc(), F.col("_id"))
-    survivors = (
-        scored.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_sub")
-    )
-    w2 = W.partitionBy("_qid").orderBy(F.col("cos_sim").desc(), F.col("_id"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("_qid").alias("query_id"),
-            "rank",
-            F.col("_id").alias(id_col),
-            "cos_sim",
-        )
-    )
+    return _ranked_neighbors(scored, id_col, k)
 
 
 def knn_join_lsh(
@@ -403,103 +389,77 @@ def knn_join_lsh(
     dim: int,
     num_planes: int = 8,
     hamming_radius: int = 1,
-    round_to: int | None = 6,
-    num_subgroups: int = 64,
 ) -> DataFrame:
     """Batch LSH k-NN join — the SUBLINEAR path next to the exact
     :func:`knn_join`: many query vectors share ONE bucketed corpus scan
     instead of per-query probes.
 
-    Plan shape: the corpus gets its ``num_planes``-bit hyperplane
-    signature once (pure expression, no stored matrix); each query
-    explodes into its probe-bucket set (bucket XOR the data-independent
-    Hamming-radius masks, enumerated driver-side) and the bounded
-    (query × probes) table is BROADCAST onto a bucket EQUI-join — so the
-    corpus side is scored only on candidate rows (expected corpus ×
-    probes / 2^planes), not crossJoined.  Each corpus row lives in
-    exactly one bucket and a query's probe buckets are distinct, so no
-    (query, row) pair is scored twice — no dedup stage needed.  Top-k is
-    the same two-phase window as :func:`knn_join` (per-(query, id-hash
-    subgroup), then the tiny final window): candidate sets can still be
-    corpus-sized at full radius, and the skew-free shape costs nothing
-    when they are small.
+    Each query explodes into its probe-bucket set and the bounded
+    (query × probes) table is BROADCAST onto a bucket EQUI-join, so the
+    corpus is scored only on candidate rows (expected corpus × probes /
+    2^planes), not crossJoined.  Each corpus row lives in exactly one
+    bucket and a query's probe buckets are distinct, so no (query, row)
+    pair is scored twice.  The two-phase :func:`topk_per_key` stays
+    because candidate sets can still be corpus-sized at full radius.
 
-    ``hamming_radius=num_planes`` probes every bucket and degrades to
-    the exact join — the oracle hook (ext_knn_join_lsh hash-verifies the
-    whole signature → probe → join → two-phase-top-k pipeline against
-    brute force); smaller radii trade recall for a corpus-sublinear
-    scan, with recall@k pinned in tests/test_operators_similarity.py.
+    ``hamming_radius=num_planes`` degrades to the exact join — the
+    oracle hook; smaller radii trade recall for a corpus-sublinear scan,
+    with recall@k pinned in tests/test_operators_similarity.py.
 
     Returns (query_id, rank, id_col, cos_sim), rank 1..k within the
     probed candidates.
     """
-    from itertools import combinations
-
-    from remote_shuffle_spark.operators.dedup import _hyperplane_sign_bit
-
-    if not 0 <= hamming_radius <= num_planes:
-        raise ValueError(f"hamming_radius must be in [0, {num_planes}]")
-
-    def bucket_of(vec: F.Column) -> F.Column:
-        b = F.lit(0).cast("long")
-        for p in range(num_planes):
-            b = F.shiftleft(b, 1).bitwiseOR(
-                _hyperplane_sign_bit(vec, p, dim).cast("long")
-            )
-        return b
-
-    masks = [0] + [
-        sum(1 << bit for bit in bits)
-        for r in range(1, hamming_radius + 1)
-        for bits in combinations(range(num_planes), r)
-    ]
     q = queries_df.select(
-        F.col(query_id_col).alias("_qid"),
-        to_double_array(vec_col).alias("_qvec"),
-    ).select("_qid", "_qvec", bucket_of(F.col("_qvec")).alias("_qb"))
+        F.col(query_id_col).alias("_qid"), to_double_array(vec_col).alias("_qvec")
+    )
     # TWO broadcasts instead of one: the probe table carries only
     # (_qid, _bucket) — broadcasting the 64-double vector duplicated per
     # probe would inflate the broadcast by the probe factor (up to
     # 2^num_planes at full radius: 10k queries x 256 probes x 512 B
     # ≈ 1.3 GB); the vectors ship ONCE in a second Q-row broadcast
     # attached by _qid after the bucket join prunes candidates.
-    probes = q.select(
-        "_qid",
-        F.explode(
-            F.array(*[F.col("_qb").bitwiseXOR(F.lit(m)) for m in masks])
-        ).alias("_bucket"),
-    )
-    qvecs = q.select("_qid", "_qvec")
-    data = df.select(F.col(id_col), to_double_array(vec_col).alias("_vec")).select(
-        F.col(id_col), "_vec", bucket_of(F.col("_vec")).alias("_bucket")
-    )
-    cos = cosine_similarity(F.col("_vec"), F.col("_qvec"))
-    if round_to is not None:
-        cos = F.round(cos, round_to)
-    scored = data.join(F.broadcast(probes), "_bucket").join(
-        F.broadcast(qvecs), "_qid"
-    ).select(
-        F.col("_qid"),
-        F.col(id_col).alias("_id"),
-        cos.alias("cos_sim"),
-        F.pmod(F.xxhash64(id_col), F.lit(num_subgroups)).alias("_sub"),
-    )
-    w1 = W.partitionBy("_qid", "_sub").orderBy(F.col("cos_sim").desc(), F.col("_id"))
-    survivors = (
-        scored.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_sub")
-    )
-    w2 = W.partitionBy("_qid").orderBy(F.col("cos_sim").desc(), F.col("_id"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
+    probes = _lsh_probes(q, "_qid", dim, num_planes, hamming_radius)
+    scored = (
+        _lsh_corpus(df, id_col, vec_col, dim, num_planes)
+        .join(F.broadcast(probes), "_bucket")
+        .join(F.broadcast(q), "_qid")
         .select(
-            F.col("_qid").alias("query_id"),
-            "rank",
-            F.col("_id").alias(id_col),
-            "cos_sim",
+            F.col("_qid"),
+            F.col(id_col).alias("_id"),
+            _cosine(F.col("_vec"), F.col("_qvec")).alias("cos_sim"),
         )
+    )
+    return _ranked_neighbors(scored, id_col, k)
+
+
+def _recall_rows(pids: DataFrame, approx: DataFrame, exact: DataFrame, order: Column, k: int) -> DataFrame:
+    """Per probe of ``pids`` (``_pid`` plus audit count columns):
+    ``hits`` = overlap of the approximate and exact top-k — both
+    (_pid, _id, _score), ranked by ``order`` then id — and recall_at_k =
+    hits / k.  Returns (probe_id, audit..., hits, recall_at_k)."""
+
+    def _top(scored: DataFrame) -> DataFrame:
+        return topk_per_key(scored, "_pid", [order, F.col("_id")], k, "_id", "_rn").select(
+            "_pid", "_id"
+        )
+
+    hits = (
+        _top(approx)
+        .join(_top(exact), ["_pid", "_id"])
+        .groupBy("_pid")
+        .agg(F.count(F.lit(1)).alias("hits"))
+    )
+    n = F.coalesce(F.col("hits"), F.lit(0))
+    audit = [F.coalesce(F.col(c), F.lit(0)).cast("long").alias(c) for c in pids.columns[1:]]
+    return (
+        pids.join(hits, "_pid", "left")
+        .select(
+            F.col("_pid").alias("probe_id"),
+            *audit,
+            n.cast("long").alias("hits"),
+            (n / F.lit(k)).cast("double").alias("recall_at_k"),
+        )
+        .orderBy("probe_id")
     )
 
 
@@ -511,17 +471,14 @@ def quantization_recall_at_k(
     probe_id_col: str,
     *,
     k: int = 10,
-    coarse_scale: int = 127,
-    fine_scale: int = 1 << 20,
-    num_subgroups: int = 64,
 ) -> DataFrame:
     """Embedding-quantization quality evaluation: per probe, recall@k of
-    the COARSE-quantized (int8-style, ``floor(v * coarse_scale)``) dot-
-    product ranking against the FINE-quantized reference ranking
-    (``fine_scale`` defaults to 2^20 — beyond float32 mantissa precision
-    for unit-scale embeddings, i.e. the exact ranking).  This is the
-    measurement that gates an int8 ANN index rollout in an embedding
-    pipeline: how much ranking quality does 8-bit storage give up.
+    the COARSE-quantized (int8-style, ``floor(v * 127)``) dot-product
+    ranking against the FINE-quantized reference ranking (``floor(v *
+    2^20)`` — beyond float32 mantissa precision for unit-scale
+    embeddings, i.e. the exact ranking).  This is the measurement that
+    gates an int8 ANN index rollout in an embedding pipeline: how much
+    ranking quality does 8-bit storage give up.
 
     Everything is INTEGER arithmetic end-to-end — both rankings order by
     exact integer dot products with id tie-breaks — so the result is
@@ -530,74 +487,214 @@ def quantization_recall_at_k(
     float).  Returns (probe_id, hits, recall_at_k) per probe.
 
     Scale shape: probes broadcast; the corpus stays narrow through
-    scoring; both top-ks use the same two-phase (probe, id-hash subgroup)
-    window as :func:`knn_join`, so no reducer sorts a corpus-sized slice.
-    A full-corpus evaluation pass is a diagnostic; at 100 TB run it over
-    a sampled corpus slice (the measurement, a recall ratio, is stable
-    under sampling).
+    scoring.  A full-corpus evaluation pass is a diagnostic; at 100 TB
+    run it over a sampled corpus slice (the measurement, a recall ratio,
+    is stable under sampling).
     """
-    q = F.broadcast(
-        probes_df.select(
-            F.col(probe_id_col).alias("_pid"),
-            to_double_array(vec_col).alias("_pvec"),
-        )
-    )
+    fine = 1 << 20
 
-    def _qdot(scale: int):
-        return F.aggregate(
-            F.zip_with(
-                to_double_array(vec_col),
-                F.col("_pvec"),
-                lambda a, b: F.floor(a * scale).cast("long")
-                * F.floor(b * scale).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
+    def _both(frame: DataFrame, key: str, key_out: str, p: str) -> DataFrame:
+        return frame.select(
+            F.col(key).alias(key_out),
+            quantize_floor(vec_col, QSCALE).alias(p + "c"),
+            quantize_floor(vec_col, fine).alias(p + "f"),
         )
 
+    probes = _both(probes_df, probe_id_col, "_pid", "_p")
     scored = (
-        df.crossJoin(q)
-        .filter(F.col(id_col) != F.col("_pid"))
+        _both(df, id_col, "_id", "_x")
+        .crossJoin(F.broadcast(probes))
+        .filter(F.col("_id") != F.col("_pid"))
         .select(
             "_pid",
-            F.col(id_col).alias("_id"),
-            _qdot(coarse_scale).alias("_dc"),
-            _qdot(fine_scale).alias("_df"),
-            F.pmod(F.xxhash64(id_col), F.lit(num_subgroups)).alias("_sub"),
+            "_id",
+            int_dot(F.col("_xc"), F.col("_pc")).alias("_dc"),
+            int_dot(F.col("_xf"), F.col("_pf")).alias("_df"),
         )
     )
-
-    def _topk(dot_col: str) -> DataFrame:
-        w1 = W.partitionBy("_pid", "_sub").orderBy(F.col(dot_col).desc(), "_id")
-        survivors = (
-            scored.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-        w2 = W.partitionBy("_pid").orderBy(F.col(dot_col).desc(), "_id")
-        return (
-            survivors.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") <= k)
-            .select("_pid", "_id")
-        )
-
-    hits = (
-        _topk("_dc")
-        .join(_topk("_df"), ["_pid", "_id"])
-        .groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("hits"))
+    return _recall_rows(
+        probes.select("_pid"),
+        scored.select("_pid", "_id", F.col("_dc").alias("_score")),
+        scored.select("_pid", "_id", F.col("_df").alias("_score")),
+        F.col("_score").desc(),
+        k,
     )
+
+
+# --------------------------------------------------------------------------
+# Integer PQ / IVFADC: one model, one encode, one LUT/ADC scorer
+# --------------------------------------------------------------------------
+
+def _quantized(df: DataFrame, id_col: str, vec_col: str, id_out: str, q_out: str) -> DataFrame:
+    return df.select(F.col(id_col).alias(id_out), quantize_floor(vec_col, QSCALE).alias(q_out))
+
+
+def _subvec(q: Column, s: Column, m: int) -> Column:
+    """Sub-vector ``s`` of ``q`` split into ``m`` contiguous pieces.  The
+    width comes from the vector's own length, so no element past a
+    hard-coded dimension is silently dropped."""
+    w = (F.size(q) / m).cast("int")
+    return F.slice(q, s * w + 1, w)
+
+
+def _per_subspace(m: int, f) -> Column:
+    return F.transform(F.sequence(F.lit(0), F.lit(m - 1)), f)
+
+
+def _pq_model(qdf: DataFrame, num_cells: int, num_centroids: int, m: int) -> tuple[DataFrame, DataFrame]:
+    """The deterministic IVFADC model over quantized vectors (_id, _q):
+    cell centroids (cid, cv) = the ``num_cells`` smallest-id vectors, and
+    the codebook (j, s, cv) = the ``m`` sub-vectors of the
+    ``num_centroids`` smallest-id vectors.  These stand in for k-means;
+    the encode/LUT/ADC machinery is identical with trained models, and
+    determinism is what makes the results oracle-checkable.
+
+    Ordered limits, not ``id < n`` filters: with sparse or non-zero-based
+    ids a value filter silently shrinks (or empties) the model and recall
+    quietly degrades to 0."""
+    first = qdf.orderBy("_id")
+    cellc = first.limit(num_cells).select(F.col("_id").alias("cid"), F.col("_q").alias("cv"))
+    cents = first.limit(num_centroids).select(
+        F.col("_id").alias("j"),
+        F.posexplode(_per_subspace(m, lambda s: _subvec(F.col("_q"), s, m))).alias("s", "cv"),
+    )
+    return cellc, cents
+
+
+def _fold_codebook(cents: DataFrame) -> DataFrame:
+    """Fold the (j, s, cv) subspace codebook — ≤ num_centroids ×
+    num_subspaces rows — into ONE row holding ``_book``: an array indexed
+    by subspace ``s`` (ascending) of ``(j, cv)`` struct arrays sorted by
+    ``j``.  The fold is a constant-size aggregation (the exchanges it
+    plans carry ≤ m·k rows regardless of corpus size); broadcast-joining
+    the folded row lets encode and ADC scoring run as pure per-row array
+    math with NO corpus-proportional shuffle.  An empty codebook yields
+    no row, so nothing indexes into an empty ``_book``."""
     return (
-        q.select("_pid")
-        .join(hits, "_pid", "left")
-        .select(
-            F.col("_pid").alias("probe_id"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            (F.coalesce(F.col("hits"), F.lit(0)) / F.lit(k))
-            .cast("double")
-            .alias("recall_at_k"),
+        cents.groupBy("s")
+        .agg(F.array_sort(F.collect_list(F.struct(F.col("j"), F.col("cv")))).alias("_e"))
+        .agg(F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("_e")))).alias("_sb"))
+        .select(F.transform(F.col("_sb"), lambda x: x["_e"]).alias("_book"))
+        .filter(F.size(F.col("_book")) > 0)
+    )
+
+
+def _pq_codes(q: Column, m: int) -> Column:
+    """Per-subspace PQ codes of ``q`` against the folded ``_book``
+    column: the argmin as ``array_min`` over (integer L2, j) structs —
+    lexicographic, so ties go to the smallest code."""
+    return _per_subspace(
+        m,
+        lambda s: F.array_min(
+            F.transform(
+                F.element_at(F.col("_book"), s + 1),
+                lambda e: F.struct(
+                    int_sq_l2(_subvec(q, s, m), e["cv"]).alias("_d"), e["j"].alias("_j")
+                ),
+            )
+        )["_j"],
+    )
+
+
+def _ivf_encode(qdf: DataFrame, cellc: DataFrame, cents: DataFrame) -> DataFrame:
+    """The IVFADC encode stage: quantized vectors ``(_id, _q)`` against a
+    centroid table ``(cid, cv)`` and a codebook ``(j, s, cv)`` — argmin
+    cell (ties to smallest cid) plus the PQ codes, as
+    ``(id, cell, codes array<long>)``.  The index build, the index
+    upsert (model FROZEN, read back from the index) and
+    :func:`ivf_pq_recall_at_k` all run exactly this, so the encode math
+    cannot drift between them.
+
+    The model tables fold into ONE broadcast row of arrays and every
+    vector computes its cell and codes as per-row array expressions —
+    the corpus side is exchange-free.  An EMPTY centroid table yields
+    zero output rows."""
+    cells_arr = cellc.agg(
+        F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("cv")))).alias("_cells")
+    )
+    model = F.broadcast(
+        cells_arr.crossJoin(_fold_codebook(cents)).filter(F.size(F.col("_cells")) > 0)
+    )
+    best = F.array_min(
+        F.transform(
+            F.col("_cells"),
+            lambda c: F.struct(int_sq_l2(F.col("_q"), c["cv"]).alias("_cd"), c["cid"].alias("_cid")),
         )
-        .orderBy("probe_id")
+    )
+    return qdf.crossJoin(model).select(
+        F.col("_id").alias("id"),
+        best["_cid"].alias("cell"),
+        _pq_codes(F.col("_q"), NUM_SUBSPACES).alias("codes"),
+    )
+
+
+def _adc_luts(pq: DataFrame, cents: DataFrame, m: int) -> DataFrame:
+    """(_pid, _lut): per probe ``(_pid, _pq)`` ONE row whose ``_lut[s]``
+    maps code j → integer L2 from the probe's sub-vector s to codebook
+    entry (j, s).  Each candidate then scores itself per-row
+    (:func:`_adc_dist`), so the only candidate-proportional work is a
+    broadcast hash join on _pid plus an array fold."""
+    lut = _per_subspace(
+        m,
+        lambda s: F.map_from_entries(
+            F.transform(
+                F.element_at(F.col("_book"), s + 1),
+                lambda e: F.struct(
+                    e["j"].alias("_code"),
+                    int_sq_l2(_subvec(F.col("_pq"), s, m), e["cv"]).alias("_ld"),
+                ),
+            )
+        ),
+    )
+    return pq.crossJoin(F.broadcast(_fold_codebook(cents))).select("_pid", lut.alias("_lut"))
+
+
+def _adc_dist(codes: Column) -> Column:
+    """Approximate (ADC) distance: the sum of the ``_lut`` entries the
+    codes select, one per subspace — exact integer addition."""
+    return F.aggregate(
+        F.zip_with(codes, F.col("_lut"), lambda c, mp: F.element_at(mp, c)),
+        F.lit(0).cast("long"),
+        lambda acc, x: acc + x,
+    )
+
+
+def _probed_cells(pq: DataFrame, cellc: DataFrame, nprobe: int) -> DataFrame:
+    """(_pid, cell): the ``nprobe`` cells nearest each probe by exact
+    integer L2, ties to smallest cid (probes × cells rows — tiny)."""
+    return (
+        pq.crossJoin(F.broadcast(cellc))
+        .select("_pid", "cid", int_sq_l2(F.col("_pq"), F.col("cv")).alias("_cd"))
+        .withColumn("_rn", F.row_number().over(W.partitionBy("_pid").orderBy("_cd", "cid")))
+        .filter(F.col("_rn") <= nprobe)
+        .select("_pid", F.col("cid").alias("cell"))
+    )
+
+
+def _adc_scan(codes: DataFrame, probecells: DataFrame, pq: DataFrame, cents: DataFrame):
+    """ADC-score each probe's candidates — the encoded rows (id, cell,
+    codes) in its probed cells, minus itself.  Returns
+    ``(scored (_pid, id, _score), scanned (_pid, scanned))``; the only
+    aggregation over candidates is the combinable ``scanned`` count."""
+    cand = (
+        codes.join(F.broadcast(probecells), "cell")
+        .filter(F.col("id") != F.col("_pid"))
+        .select("_pid", "id", "codes")
+    )
+    scanned = cand.groupBy("_pid").agg(F.count(F.lit(1)).cast("long").alias("scanned"))
+    scored = cand.join(F.broadcast(_adc_luts(pq, cents, NUM_SUBSPACES)), "_pid").select(
+        "_pid", "id", _adc_dist(F.col("codes")).alias("_score")
+    )
+    return scored, scanned
+
+
+def _exact_dists(qdf: DataFrame, pq: DataFrame) -> DataFrame:
+    """(_pid, _id, _score): exact integer L2 of every probe to every
+    other corpus vector — the evaluation ground truth."""
+    return (
+        qdf.crossJoin(F.broadcast(pq))
+        .filter(F.col("_id") != F.col("_pid"))
+        .select("_pid", "_id", int_sq_l2(F.col("_q"), F.col("_pq")).alias("_score"))
     )
 
 
@@ -609,210 +706,41 @@ def pq_recall_at_k(
     probe_id_col: str,
     *,
     k: int = 10,
-    dim: int = 64,
-    num_subspaces: int = 8,
-    num_centroids: int = 16,
-    scale: int = 127,
-    num_subgroups: int = 64,
+    num_subspaces: int = NUM_SUBSPACES,
+    num_centroids: int = NUM_CENTROIDS,
 ) -> DataFrame:
     """Product-quantization ANN evaluation: per probe, recall@k of the
     PQ/ADC ranking against the exact (quantized-integer) L2 ranking —
     the compression rung of the similarity family (IVF prunes WHICH
     vectors to score; PQ compresses HOW each vector is stored:
-    ``num_subspaces`` one-byte codes per vector instead of ``dim``
-    floats, a 32x storage cut at these defaults).
+    ``num_subspaces`` one-byte codes per vector instead of the raw
+    floats, a 32x storage cut at the defaults and 64 dims).
 
-    Mechanics (all INTEGER arithmetic, so rankings are bit-reproducible
-    across engines — the same discipline as
-    :func:`quantization_recall_at_k`):
-      1. vectors are quantized to ints (``floor(v*scale)``) and split
-         into ``num_subspaces`` contiguous subvectors;
-      2. the codebook is the first ``num_centroids`` corpus vectors'
-         subvectors (a deterministic stand-in for the k-means-trained
-         codebooks of real PQ — the ENCODE/LUT/ADC machinery this
-         operator exercises is identical either way, and determinism is
-         what makes the result oracle-checkable);
-      3. encode: each corpus subvector gets the id of its nearest
-         centroid subvector (exact integer L2, ties to smallest id) —
-         one broadcast join against the ``num_centroids x
-         num_subspaces`` codebook + a map-side-combinable min(struct)
-         argmin;
-      4. query time: per probe, an ADC lookup table (distance from the
-         probe's subvector to every centroid subvector — tiny,
-         broadcast), and each vector's approximate distance is the SUM
-         of ``num_subspaces`` LUT entries selected by its codes;
-      5. recall@k: ADC top-k vs exact top-k (two-phase subgroup top-k on
-         both sides, no reducer sorts a corpus-sized slice).
+    Mechanics, all INTEGER arithmetic so rankings are bit-reproducible
+    across engines: vectors are quantized (``floor(v*127)``) and split
+    into ``num_subspaces`` contiguous sub-vectors; the codebook is
+    :func:`_pq_model`'s; each vector's code per subspace is its nearest
+    codebook entry; per probe an ADC lookup table prices every code, and
+    a vector's approximate distance is the sum of its codes' entries.
+    recall@k compares the ADC top-k with the exact top-k.
 
-    Scale shape: the corpus crosses the encode join once (narrow rows:
-    id + one subvector), codes are ``num_subspaces`` small ints per
-    vector — the structure a 100 TB vector store persists INSTEAD of raw
-    floats; probes and LUTs broadcast.  Returns
-    (probe_id, hits, recall_at_k).
-
-    Plan shape (same fold as :func:`_ivf_encode` / the indexed probe
-    path): the codebook is folded into ONE broadcast row of per-subspace
-    (j, cv) arrays, each corpus vector computes its m code argmins as a
-    per-row array expression, and ADC scoring is a per-row
-    ``aggregate(zip_with(codes, _lut))`` fold against a per-probe LUT-map
-    row — the corpus side plans no aggregation exchange.  A first cut
-    exploded every vector ×m subspaces against the codebook and
-    re-aggregated through ``groupBy(_id, _s)``, then re-aggregated ADC
-    through ``groupBy(_pid, _id)``; the argmin algebra is identical
-    (``array_min`` over (dist, id) structs ≡ ``min(struct)``:
-    lexicographic, ties to smallest id) and (_pid, _id) was unique under
-    the old grouping with exactly m integer addends, so the per-row fold
-    computes the identical sum — results unchanged.
+    Scale shape: the codebook folds into one broadcast row, the corpus
+    is encoded per row (no aggregation exchange on the corpus side), and
+    probes and LUTs broadcast.  Returns (probe_id, hits, recall_at_k).
     """
-    d_sub = dim // num_subspaces
     m = num_subspaces
-
-    def _qvec(col):
-        return F.transform(
-            to_double_array(col), lambda x: F.floor(x * scale).cast("long")
-        )
-
-    def _sub_explode(frame: DataFrame, key_out: str, key_col: str) -> DataFrame:
-        """(key, s, subvec): contiguous d_sub-wide integer subvectors."""
-        return frame.select(
-            F.col(key_col).alias(key_out),
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: F.slice(_qvec(vec_col), s * d_sub + 1, d_sub),
-                )
-            ).alias("_s", "_sv"),
-        )
-
-    def _l2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    # Codebook = the num_centroids smallest-id corpus vectors (ordered
-    # TakeOrderedAndProject, not filter(id < num_centroids)): with sparse
-    # or non-zero-based ids a value filter silently shrinks (or empties)
-    # the codebook and recall quietly degrades to 0 — ordered-limit gives
-    # exactly num_centroids rows for any id domain.  On dense 0-based ids
-    # (the fixture, and the oracle's WHERE id < n mirror) the two are
-    # identical sets.
-    book = F.broadcast(
-        _fold_codebook(
-            _sub_explode(
-                df.orderBy(id_col).limit(num_centroids), "_j", id_col
-            ).select(
-                F.col("_j").alias("j"), F.col("_s").alias("s"), F.col("_sv").alias("cv")
-            )
-        ).filter(F.size(F.col("_book")) > 0)
+    qdf = _quantized(df, id_col, vec_col, "_id", "_q")
+    pq = _quantized(probes_df, probe_id_col, vec_col, "_pid", "_pq")
+    _, cents = _pq_model(qdf, 0, num_centroids, m)
+    codes = qdf.crossJoin(F.broadcast(_fold_codebook(cents))).select(
+        "_id", _pq_codes(F.col("_q"), m).alias("_codes")
     )
-
-    def _codes_expr(vec):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.array_min(
-                F.transform(
-                    F.element_at(F.col("_book"), s + 1),
-                    lambda e: F.struct(
-                        _l2(F.slice(vec, s * d_sub + 1, d_sub), e["cv"]).alias("_d"),
-                        e["j"].alias("_j"),
-                    ),
-                )
-            )["_j"],
-        )
-
-    codes = (
-        df.select(F.col(id_col).alias("_id"), _qvec(vec_col).alias("_cq"))
-        .crossJoin(book)
-        .select("_id", _codes_expr(F.col("_cq")).alias("_codes"))
-    )
-
-    def _lut_expr(vec):
-        return F.transform(
-            F.sequence(F.lit(0), F.lit(m - 1)),
-            lambda s: F.map_from_entries(
-                F.transform(
-                    F.element_at(F.col("_book"), s + 1),
-                    lambda e: F.struct(
-                        e["j"].alias("_code"),
-                        _l2(F.slice(vec, s * d_sub + 1, d_sub), e["cv"]).alias("_ld"),
-                    ),
-                )
-            ),
-        )
-
-    plut = F.broadcast(
-        probes_df.select(
-            F.col(probe_id_col).alias("_pid"), _qvec(vec_col).alias("_ppq")
-        )
-        .crossJoin(book)
-        .select("_pid", _lut_expr(F.col("_ppq")).alias("_lut"))
-    )
-
     adc = (
-        codes.crossJoin(plut)
+        codes.crossJoin(F.broadcast(_adc_luts(pq, cents, m)))
         .filter(F.col("_id") != F.col("_pid"))
-        .select(
-            "_pid",
-            "_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("_codes"), F.col("_lut"), lambda c, mp: F.element_at(mp, c)
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("_dist"),
-        )
+        .select("_pid", "_id", _adc_dist(F.col("_codes")).alias("_score"))
     )
-
-    q = F.broadcast(
-        probes_df.select(
-            F.col(probe_id_col).alias("_pid"), _qvec(vec_col).alias("_pq")
-        )
-    )
-    exact = (
-        df.select(F.col(id_col).alias("_id"), _qvec(vec_col).alias("_xq"))
-        .crossJoin(q)
-        .filter(F.col("_id") != F.col("_pid"))
-        .select("_pid", "_id", _l2("_xq", "_pq").alias("_dist"))
-    )
-
-    def _topk(scored: DataFrame) -> DataFrame:
-        sub = scored.withColumn(
-            "_sub", F.pmod(F.xxhash64("_id"), F.lit(num_subgroups))
-        )
-        w1 = W.partitionBy("_pid", "_sub").orderBy("_dist", "_id")
-        survivors = (
-            sub.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-        w2 = W.partitionBy("_pid").orderBy("_dist", "_id")
-        return (
-            survivors.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") <= k)
-            .select("_pid", "_id")
-        )
-
-    hits = (
-        _topk(adc)
-        .join(_topk(exact), ["_pid", "_id"])
-        .groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    return (
-        q.select("_pid")
-        .join(hits, "_pid", "left")
-        .select(
-            F.col("_pid").alias("probe_id"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            (F.coalesce(F.col("hits"), F.lit(0)) / F.lit(k))
-            .cast("double")
-            .alias("recall_at_k"),
-        )
-        .orderBy("probe_id")
-    )
+    return _recall_rows(pq.select("_pid"), adc, _exact_dists(qdf, pq), F.col("_score"), k)
 
 
 def ivf_pq_recall_at_k(
@@ -823,252 +751,37 @@ def ivf_pq_recall_at_k(
     probe_id_col: str,
     *,
     k: int = 10,
-    dim: int = 64,
-    num_subspaces: int = 8,
-    num_centroids: int = 16,
-    num_cells: int = 8,
+    num_cells: int = NUM_CELLS,
     nprobe: int = 2,
-    scale: int = 127,
-    num_subgroups: int = 64,
-    cell_centroids: DataFrame | None = None,
 ) -> DataFrame:
     """IVFADC — the composed IVF + PQ layout every production vector
     store actually runs: IVF cells prune WHICH vectors are scored
     (``nprobe`` of ``num_cells`` cells per probe), then the ADC scan
-    runs ONLY over the pruned candidates' 8-byte PQ codes.  This is what
-    makes PQ's 32x storage cut pay at query time: the scan fraction is
+    runs ONLY over the pruned candidates' PQ codes.  This is what makes
+    PQ's storage cut pay at query time: the scan fraction is
     ~``nprobe / num_cells`` of the corpus instead of all of it.
 
-    Mechanics — all INTEGER arithmetic (bit-reproducible across engines,
-    same discipline as :func:`pq_recall_at_k`):
-      1. cell centroids = the ``num_cells`` smallest-id vectors
-         (quantized; a deterministic k-means stand-in — pass
-         ``cell_centroids`` (cid, cvec double array) to plug in
-         operators.clustering.kmeans_centroids for trained cells; the
-         prune/scan machinery is identical either way);
-      2. every vector joins the broadcast centroid table once and keeps
-         its argmin cell (min(struct(dist, cid)) — map-side combinable,
-         ties to smallest cid);
-      3. per probe, cells are ranked by exact integer L2
-         (probes x num_cells rows — tiny) and the ``nprobe`` nearest
-         become the probe's candidate cells;
-      4. candidates = vectors assigned to a probed cell (broadcast join
-         against the (pid, cid) probe list); ``scanned`` counts them —
-         the audit column that shows the nprobe/num_cells scan fraction;
-      5. PQ encode / LUT / ADC exactly as :func:`pq_recall_at_k`
-         (codebook = first ``num_centroids`` vectors' subvectors), but
-         the ADC sum runs only over candidate (probe, vector) pairs;
-      6. recall@k = overlap of the candidate-restricted ADC top-k with
-         the EXACT full-corpus top-k — so the number prices BOTH losses
-         (cell pruning + code compression) against ground truth.
-         With ``nprobe == num_cells`` the candidate set is the whole
-         corpus and the result degrades exactly to plain PQ
-         (pytest-pinned).
-
-    Scale shape: the corpus crosses the cell-assignment broadcast join
-    and the encode join once each (narrow rows); codes are
-    ``num_subspaces`` small ints; probe-side tables (probed cells, LUTs)
-    broadcast; the exact side is the evaluation harness — production
-    persists codes + cell ids and skips it.  Returns
-    (probe_id, scanned, hits, recall_at_k).
-
-    Plan shape (same fold as :func:`_ivf_encode`): cells + codebook fold
-    into ONE broadcast model row; each vector computes its cell argmin
-    and all m code argmins per-row (no ``groupBy(_id)`` cell-assignment
-    exchange, no ``groupBy(_id, _s)`` encode exchange), the candidate
-    join carries (id, codes) directly, and ADC is a per-row
-    ``aggregate(zip_with)`` fold against per-probe LUT maps (no
-    ``groupBy(_pid, _id)`` exchange).  Argmin/tie/sum algebra identical
-    to the old shuffled shape — see :func:`pq_recall_at_k`."""
-    d_sub = dim // num_subspaces
-    m = num_subspaces
-
-    def _qvec(col):
-        return F.transform(
-            to_double_array(col), lambda x: F.floor(x * scale).cast("long")
-        )
-
-    def _sub_explode(frame: DataFrame, key_out: str, key_col: str) -> DataFrame:
-        return frame.select(
-            F.col(key_col).alias(key_out),
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: F.slice(_qvec(vec_col), s * d_sub + 1, d_sub),
-                )
-            ).alias("_s", "_sv"),
-        )
-
-    def _l2(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
-    qdf = df.select(F.col(id_col).alias("_id"), _qvec(vec_col).alias("_q"))
-    if cell_centroids is not None:
-        cellc = cell_centroids.select(
-            F.col("cid").cast("long").alias("_cid"),
-            F.transform(
-                F.col("cvec"), lambda x: F.floor(x * scale).cast("long")
-            ).alias("_cv"),
-        )
-    else:
-        cellc = (
-            qdf.orderBy("_id")
-            .limit(num_cells)
-            .select(F.col("_id").alias("_cid"), F.col("_q").alias("_cv"))
-        )
-
-    book = _fold_codebook(
-        _sub_explode(
-            df.orderBy(id_col).limit(num_centroids), "_j", id_col
-        ).select(
-            F.col("_j").alias("j"), F.col("_s").alias("s"), F.col("_sv").alias("cv")
-        )
+    It is the persisted index's pipeline over the in-memory corpus —
+    :func:`_pq_model`, :func:`_ivf_encode`, then
+    :func:`ivf_pq_indexed_topk`'s probe and ADC stages — evaluated
+    against the EXACT full-corpus top-k, so recall@k prices BOTH losses
+    (cell pruning + code compression).  With ``nprobe == num_cells`` the
+    candidate set is the whole corpus and the result degrades exactly to
+    plain PQ (pytest-pinned).  Returns (probe_id, scanned, hits,
+    recall_at_k); ``scanned`` counts each probe's candidates — the audit
+    column that shows the scan fraction."""
+    qdf = _quantized(df, id_col, vec_col, "_id", "_q")
+    pq = _quantized(probes_df, probe_id_col, vec_col, "_pid", "_pq")
+    cellc, cents = _pq_model(qdf, num_cells, NUM_CENTROIDS, NUM_SUBSPACES)
+    adc, scanned = _adc_scan(
+        _ivf_encode(qdf, cellc, cents), _probed_cells(pq, cellc, nprobe), pq, cents
     )
-    cells_arr = cellc.agg(
-        F.array_sort(
-            F.collect_list(F.struct(F.col("_cid"), F.col("_cv")))
-        ).alias("_cells")
-    )
-    model = F.broadcast(
-        cells_arr.crossJoin(book).filter(
-            (F.size(F.col("_cells")) > 0) & (F.size(F.col("_book")) > 0)
-        )
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("_cells"),
-            lambda c: F.struct(
-                _l2(F.col("_q"), c["_cv"]).alias("_cd"), c["_cid"].alias("_cid")
-            ),
-        )
-    )
-    codes_expr = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.array_min(
-            F.transform(
-                F.element_at(F.col("_book"), s + 1),
-                lambda e: F.struct(
-                    _l2(F.slice(F.col("_q"), s * d_sub + 1, d_sub), e["cv"]).alias(
-                        "_d"
-                    ),
-                    e["j"].alias("_j"),
-                ),
-            )
-        )["_j"],
-    )
-    enc = qdf.crossJoin(model).select(
-        "_id", best["_cid"].alias("_cell"), codes_expr.alias("_codes")
-    )
-
-    pq_probe = probes_df.select(
-        F.col(probe_id_col).alias("_pid"), _qvec(vec_col).alias("_pq")
-    )
-    probecells = F.broadcast(
-        pq_probe.crossJoin(F.broadcast(cellc))
-        .select("_pid", "_cid", _l2("_pq", "_cv").alias("_cd"))
-        .withColumn(
-            "_rn",
-            F.row_number().over(W.partitionBy("_pid").orderBy("_cd", "_cid")),
-        )
-        .filter(F.col("_rn") <= nprobe)
-        .select("_pid", F.col("_cid").alias("_cell"))
-    )
-    cand = (
-        enc.join(probecells, "_cell")
-        .filter(F.col("_id") != F.col("_pid"))
-        .select("_pid", "_id", "_codes")
-    )
-    scanned = cand.groupBy("_pid").agg(
-        F.count(F.lit(1)).cast("long").alias("scanned")
-    )
-
-    plut = F.broadcast(
-        pq_probe.crossJoin(F.broadcast(book))
-        .select(
-            "_pid",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.map_from_entries(
-                    F.transform(
-                        F.element_at(F.col("_book"), s + 1),
-                        lambda e: F.struct(
-                            e["j"].alias("_code"),
-                            _l2(
-                                F.slice(F.col("_pq"), s * d_sub + 1, d_sub), e["cv"]
-                            ).alias("_ld"),
-                        ),
-                    )
-                ),
-            ).alias("_lut"),
-        )
-    )
-    adc = (
-        cand.join(plut, "_pid")
-        .select(
-            "_pid",
-            "_id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("_codes"), F.col("_lut"), lambda c, mp: F.element_at(mp, c)
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("_dist"),
-        )
-    )
-
-    q = F.broadcast(
-        probes_df.select(
-            F.col(probe_id_col).alias("_pid"), _qvec(vec_col).alias("_pq")
-        )
-    )
-    exact = (
-        df.select(F.col(id_col).alias("_id"), _qvec(vec_col).alias("_xq"))
-        .crossJoin(q)
-        .filter(F.col("_id") != F.col("_pid"))
-        .select("_pid", "_id", _l2("_xq", "_pq").alias("_dist"))
-    )
-
-    def _topk(scored: DataFrame) -> DataFrame:
-        sub = scored.withColumn(
-            "_sub", F.pmod(F.xxhash64("_id"), F.lit(num_subgroups))
-        )
-        w1 = W.partitionBy("_pid", "_sub").orderBy("_dist", "_id")
-        survivors = (
-            sub.withColumn("_rn", F.row_number().over(w1))
-            .filter(F.col("_rn") <= k)
-            .drop("_rn")
-        )
-        w2 = W.partitionBy("_pid").orderBy("_dist", "_id")
-        return (
-            survivors.withColumn("_rn", F.row_number().over(w2))
-            .filter(F.col("_rn") <= k)
-            .select("_pid", "_id")
-        )
-
-    hits = (
-        _topk(adc)
-        .join(_topk(exact), ["_pid", "_id"])
-        .groupBy("_pid")
-        .agg(F.count(F.lit(1)).alias("hits"))
-    )
-    return (
-        q.select("_pid")
-        .join(scanned, "_pid", "left")
-        .join(hits, "_pid", "left")
-        .select(
-            F.col("_pid").alias("probe_id"),
-            F.coalesce(F.col("scanned"), F.lit(0)).cast("long").alias("scanned"),
-            F.coalesce(F.col("hits"), F.lit(0)).cast("long").alias("hits"),
-            (F.coalesce(F.col("hits"), F.lit(0)) / F.lit(k))
-            .cast("double")
-            .alias("recall_at_k"),
-        )
-        .orderBy("probe_id")
+    return _recall_rows(
+        pq.select("_pid").join(scanned, "_pid", "left"),
+        adc.withColumnRenamed("id", "_id"),
+        _exact_dists(qdf, pq),
+        F.col("_score"),
+        k,
     )
 
 
@@ -1080,8 +793,6 @@ def mmr_select(
     *,
     k: int = 4,
     pool: int = 12,
-    scale: int = 127,
-    num_subgroups: int = 64,
 ) -> DataFrame:
     """Maximal Marginal Relevance selection (Carbonell & Goldstein 1998)
     — the standard greedy diverse-top-k used for retrieval result
@@ -1089,7 +800,7 @@ def mmr_select(
     relevant item first, then repeatedly the item maximizing
     ``relevance - max-similarity-to-already-selected`` (the lambda=1/2
     MMR objective scaled by 2, so everything stays INTEGER and
-    bit-reproducible under floor(v*scale) quantization; ties to
+    bit-reproducible under floor(v*127) quantization; ties to
     smallest id).
 
     Returns (rank, id, rel, mmr_score) for the ``k`` selected items
@@ -1097,40 +808,19 @@ def mmr_select(
 
     Scale shape: relevance is one narrow corpus pass against the
     broadcast query; the candidate POOL (top ``pool`` by relevance) is
-    cut with a subgroup top-k + TakeOrdered (no corpus-wide
-    single-partition window); the pool's pairwise similarity matrix
-    (pool^2 <= 144 integer dots) is computed distributedly and the
-    greedy loop itself runs on that COLLECTED bounded matrix —
-    driver-side math over a K-row object, the ivf_topk precedent
-    (driver ranks nprobe cells), never a corpus-sized collect."""
-
-    def _qvec(col):
-        return F.transform(
-            to_double_array(col), lambda x: F.floor(x * scale).cast("long")
-        )
-
-    def _dot(a, b):
-        return F.aggregate(
-            F.zip_with(a, b, lambda x, y: x * y),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        )
-
+    one TakeOrdered (per-partition top-``pool``, then a merge — no
+    corpus-wide sort); the pool's pairwise similarity matrix (pool^2
+    integer dots) is computed distributedly and the greedy loop runs on
+    that COLLECTED bounded matrix — driver-side math over a bounded
+    object, never a corpus-sized collect."""
     spark = df.sparkSession
-    q = F.broadcast(query_df.select(_qvec(vec_col).alias("_mq")).limit(1))
-    scored = (
-        df.select(F.col(id_col).alias("_id"), _qvec(vec_col).alias("_xq"))
-        .crossJoin(q)
-        .select("_id", "_xq", _dot(F.col("_xq"), F.col("_mq")).alias("_rel"))
-    )
-    sub = scored.withColumn("_sub", F.pmod(F.xxhash64("_id"), F.lit(num_subgroups)))
-    w1 = W.partitionBy("_sub").orderBy(F.col("_rel").desc(), "_id")
+    q = F.broadcast(query_df.select(quantize_floor(vec_col, QSCALE).alias("_mq")).limit(1))
     pool_df = (
-        sub.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= pool)
+        _quantized(df, id_col, vec_col, "_id", "_xq")
+        .crossJoin(q)
+        .select("_id", "_xq", int_dot(F.col("_xq"), F.col("_mq")).alias("_rel"))
         .orderBy(F.col("_rel").desc(), "_id")
         .limit(pool)
-        .select("_id", "_xq", "_rel")
         .localCheckpoint(eager=True)  # bounded: `pool` rows
     )
     a = pool_df.select(F.col("_id").alias("_a"), F.col("_xq").alias("_qa"))
@@ -1139,7 +829,7 @@ def mmr_select(
         (r._a, r._b): r._s
         for r in a.crossJoin(b)
         .filter(F.col("_a") != F.col("_b"))
-        .select("_a", "_b", _dot(F.col("_qa"), F.col("_qb")).alias("_s"))
+        .select("_a", "_b", int_dot(F.col("_qa"), F.col("_qb")).alias("_s"))
         .collect()
     }
     cands = {r._id: r._rel for r in pool_df.select("_id", "_rel").collect()}
@@ -1169,174 +859,42 @@ def mmr_select(
 # Persisted IVF/PQ index with partition-pruned probes
 # --------------------------------------------------------------------------
 
-def _ivfq(col, scale: int):
-    """floor(v*scale) integer quantization — the shared discipline of the
-    whole PQ family (bit-reproducible across engines)."""
-    return F.transform(
-        to_double_array(col), lambda x: F.floor(x * scale).cast("long")
-    )
-
-
-def _ivfl2(a, b):
-    """Exact integer squared L2 between two long arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
-def ivf_pq_write_index(
-    df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    path: str,
-    *,
-    dim: int = 64,
-    num_subspaces: int = 8,
-    num_centroids: int = 16,
-    num_cells: int = 8,
-    scale: int = 127,
-) -> None:
+def ivf_pq_write_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> None:
     """Materialize the IVFADC index LAYOUT that makes
     :func:`ivf_pq_recall_at_k`'s pruning a property of the STORAGE, not
-    the query: the encoded corpus — ``(id, codes array<long>)``, 8 small
-    ints per vector — written ``partitionBy(cell)``, so a probe's
-    nprobe/num_cells scan fraction becomes parquet PARTITION PRUNING
-    (directories never listed) instead of a post-scan filter.  The tiny
-    model tables ride along under the same root (``centroids/``,
-    ``codebook/``) so a query needs no access to the raw corpus at all.
+    the query: the encoded corpus — ``(id, codes array<long>)``,
+    NUM_SUBSPACES small ints per vector — written ``partitionBy(cell)``,
+    so a probe's nprobe/NUM_CELLS scan fraction becomes parquet
+    PARTITION PRUNING (directories never listed) instead of a post-scan
+    filter.  The tiny model tables ride along under the same root
+    (``centroids/``, ``codebook/``) so a query needs no access to the raw
+    corpus at all.
 
-    Same deterministic model as ivf_pq_recall_at_k (cell centroids = the
-    ``num_cells`` smallest-id vectors, codebook = the first
-    ``num_centroids`` vectors' subvectors — k-means stand-ins; the
-    layout machinery is identical with trained models) and the same
-    integer algebra, so a DuckDB oracle can replay the index content
-    exactly.  One corpus pass computes assignment + codes (two broadcast
-    joins, one narrow write shuffle on cell).
+    Same model (:func:`_pq_model`) and encode (:func:`_ivf_encode`) as
+    ivf_pq_recall_at_k, so a DuckDB oracle can replay the index content
+    exactly.  One corpus pass computes assignment + codes, plus one
+    narrow write shuffle on cell.
 
     docs/scale.md:53's promise, measured: scan fraction == probed
     cells' share of files (tests/test_operators_similarity.py pins the
     PartitionFilters plan node and the on-disk fraction;
     ext_ivf_pq_indexed is the gate query)."""
-    d_sub = dim // num_subspaces
-    m = num_subspaces
-
-    qdf = df.select(F.col(id_col).alias("_id"), _ivfq(vec_col, scale).alias("_q"))
-    # model tables are <= num_centroids rows but DERIVE from a full-corpus
+    qdf = _quantized(df, id_col, vec_col, "_id", "_q")
+    # model tables are <= NUM_CENTROIDS rows but DERIVE from a full-corpus
     # top-k — materialize each once so the encode job, and the two model
     # writes below, don't re-run that scan (3x measured before; the build
     # is then the advertised single corpus pass plus tiny-frame jobs)
-    cellc = (
-        qdf.orderBy("_id")
-        .limit(num_cells)
-        .select(F.col("_id").alias("cid"), F.col("_q").alias("cv"))
-        .localCheckpoint(eager=True)
+    cellc, cents = (
+        t.localCheckpoint(eager=True)
+        for t in _pq_model(qdf, NUM_CELLS, NUM_CENTROIDS, NUM_SUBSPACES)
     )
-    cents = (
-        qdf.orderBy("_id")
-        .limit(num_centroids)
-        .select(
-            F.col("_id").alias("j"),
-            F.posexplode(
-                F.transform(
-                    F.sequence(F.lit(0), F.lit(m - 1)),
-                    lambda s: F.slice(F.col("_q"), s * d_sub + 1, d_sub),
-                )
-            ).alias("s", "cv"),
-        )
-        .localCheckpoint(eager=True)
-    )
-    codes = _ivf_encode(qdf, cellc, cents, m=m, d_sub=d_sub)
+    codes = _ivf_encode(qdf, cellc, cents)
     codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
     cellc.write.mode("overwrite").parquet(f"{path}/centroids")
     cents.write.mode("overwrite").parquet(f"{path}/codebook")
 
 
-def _fold_codebook(cents: DataFrame) -> DataFrame:
-    """Fold the (j, s, cv) subspace codebook — ≤ num_centroids ×
-    num_subspaces rows — into ONE row holding ``_book``: an array indexed
-    by subspace ``s`` (ascending) of ``(j, cv)`` struct arrays sorted by
-    ``j``.  The fold is a constant-size aggregation (the exchanges it
-    plans carry ≤ m·k rows regardless of corpus size); broadcast-joining
-    the folded row lets encode and ADC scoring run as pure per-row array
-    math with NO corpus-proportional shuffle."""
-    return (
-        cents.groupBy("s")
-        .agg(F.array_sort(F.collect_list(F.struct(F.col("j"), F.col("cv")))).alias("_e"))
-        .agg(F.array_sort(F.collect_list(F.struct(F.col("s"), F.col("_e")))).alias("_sb"))
-        .select(F.transform(F.col("_sb"), lambda x: x["_e"]).alias("_book"))
-    )
-
-
-def _ivf_encode(
-    qdf: DataFrame, cellc: DataFrame, cents: DataFrame, *, m: int, d_sub: int
-) -> DataFrame:
-    """Shared IVFADC encode stage: quantized vectors ``(_id, _q)`` against
-    a centroid table ``(cid, cv)`` and a subspace codebook ``(j, s, cv)``
-    — argmin cell assignment (ties to smallest cid) plus per-subspace
-    argmin PQ codes, returned as ``(id, cell, codes array<long>)``.
-    Both :func:`ivf_pq_write_index` (model trained from the corpus) and
-    :func:`ivf_pq_upsert` (model FROZEN, read back from the index) run
-    exactly this — the encode math cannot drift between build and
-    ingest.
-
-    Plan shape: the model tables are folded into ONE broadcast row of
-    arrays (constant-size aggregations) and every vector computes its
-    cell argmin and all m code argmins as per-row array expressions —
-    the corpus side is exchange-free.  A first cut cross-joined each
-    vector against the centroid table and re-aggregated through
-    ``groupBy(_id)``, then exploded m subspaces against the codebook
-    through two more shuffled groupBys (~m·num_centroids× row expansion
-    through 3 corpus-wide exchanges); the argmin algebra here is
-    identical (``array_min`` over (dist, id) structs ≡ ``min(struct)``:
-    lexicographic, ties to smallest id) so results are unchanged.
-    An EMPTY centroid table yields zero output rows (the crossJoin
-    filter), exactly as the old inner-join pipeline did."""
-    cells_arr = cellc.agg(
-        F.array_sort(F.collect_list(F.struct(F.col("cid"), F.col("cv")))).alias("_cells")
-    )
-    model = F.broadcast(
-        cells_arr.crossJoin(_fold_codebook(cents)).filter(F.size(F.col("_cells")) > 0)
-    )
-    best = F.array_min(
-        F.transform(
-            F.col("_cells"),
-            lambda c: F.struct(
-                _ivfl2(F.col("_q"), c["cv"]).alias("_cd"), c["cid"].alias("_cid")
-            ),
-        )
-    )
-    codes = F.transform(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        lambda s: F.array_min(
-            F.transform(
-                F.element_at(F.col("_book"), s + 1),
-                lambda e: F.struct(
-                    _ivfl2(F.slice(F.col("_q"), s * d_sub + 1, d_sub), e["cv"]).alias(
-                        "_d"
-                    ),
-                    e["j"].alias("_j"),
-                ),
-            )
-        )["_j"],
-    )
-    return qdf.crossJoin(model).select(
-        F.col("_id").alias("id"), best["_cid"].alias("cell"), codes.alias("codes")
-    )
-
-
-def ivf_pq_upsert(
-    spark,
-    path: str,
-    delta_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    *,
-    dim: int = 64,
-    num_subspaces: int = 8,
-    scale: int = 127,
-) -> None:
+def ivf_pq_upsert(spark, path: str, delta_df: DataFrame, id_col: str, vec_col: str) -> None:
     """Incremental INGEST into a persisted :func:`ivf_pq_write_index`
     layout: the delta is encoded against the index's FROZEN model tables
     (centroids + codebook read back from ``path`` — never retrained, so
@@ -1350,13 +908,11 @@ def ivf_pq_upsert(
     At lake scale appends accumulate small files per cell; compact a
     cell by rewriting just its directory (partition-scoped overwrite) —
     the model tables never change until a full re-train/re-build."""
-    cellc = spark.read.parquet(f"{path}/centroids")
-    cents = spark.read.parquet(f"{path}/codebook")
-    d_sub = dim // num_subspaces
-    qdf = delta_df.select(
-        F.col(id_col).alias("_id"), _ivfq(vec_col, scale).alias("_q")
+    codes = _ivf_encode(
+        _quantized(delta_df, id_col, vec_col, "_id", "_q"),
+        spark.read.parquet(f"{path}/centroids"),
+        spark.read.parquet(f"{path}/codebook"),
     )
-    codes = _ivf_encode(qdf, cellc, cents, m=num_subspaces, d_sub=d_sub)
     codes.write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
 
 
@@ -1369,19 +925,15 @@ def ivf_pq_indexed_topk(
     *,
     k: int = 10,
     nprobe: int = 2,
-    dim: int = 64,
-    num_subspaces: int = 8,
-    scale: int = 127,
-    num_subgroups: int = 64,
 ) -> DataFrame:
     """ADC top-k over a PERSISTED :func:`ivf_pq_write_index` layout with
     PARTITION-PRUNED probes: the probed cell ids (at most
-    nprobe x probes, itself capped by the index's num_cells — a bounded
+    nprobe x probes, itself capped by the index's cell count — a bounded
     driver list by construction) are pushed as a static IN filter on the
     ``cell`` partition column, so Spark lists ONLY the probed cell
     directories (PartitionFilters in the scan node — plan-pinned) and
-    the scan cost is the nprobe/num_cells fraction of the index, with
-    the raw corpus never touched.
+    the scan cost is the probed fraction of the index, with the raw
+    corpus never touched.
 
     Returns (probe_id, scanned, rank, id, adc_dist) — ``scanned`` is the
     per-probe candidate count (the row-level pruning audit), ranks 1..k
@@ -1389,108 +941,21 @@ def ivf_pq_indexed_topk(
     probed cells hold NO other vectors yields no output rows (a top-k
     table has nowhere to put an empty result): callers that must
     distinguish "no neighbors" from "request lost" should left-join
-    their probe list against the result, exactly as the oracle does not
-    need to — the contract is symmetric on both engines.
+    their probe list against the result.
 
-    Scale shape: model tables (centroids, codebook, per-probe LUT maps)
-    broadcast; the pruned code scan is ``num_subspaces`` small ints per
-    row; ADC scoring is a per-row array fold against the broadcast LUT
-    (no corpus-fraction shuffle — the only aggregation over candidates
-    is the combinable ``scanned`` count); top-k uses the subgroup
-    two-stage window (no single-partition sort)."""
+    Scale shape: model tables and per-probe LUTs broadcast; the pruned
+    code scan is NUM_SUBSPACES small ints per row; ADC is a per-row fold
+    (:func:`_adc_scan`); top-k is :func:`topk_per_key`."""
     cents = spark.read.parquet(f"{path}/centroids")
-    book = spark.read.parquet(f"{path}/codebook")
-    d_sub = dim // num_subspaces
-    m = num_subspaces
-
-    pq = probes_df.select(
-        F.col(probe_id_col).alias("_pid"), _ivfq(vec_col, scale).alias("_pq")
-    )
-    probecells = (
-        pq.crossJoin(F.broadcast(cents))
-        .select("_pid", "cid", _ivfl2("_pq", "cv").alias("_cd"))
-        .withColumn(
-            "_rn",
-            F.row_number().over(W.partitionBy("_pid").orderBy("_cd", "cid")),
-        )
-        .filter(F.col("_rn") <= nprobe)
-        .select("_pid", F.col("cid").alias("cell"))
-        # lazy (probes x nprobe rows; read twice): the cells collect is
-        # the sole first consumer — one job computes + persists; the
-        # broadcast build below reads the persisted blocks
-        .localCheckpoint(eager=False)
-    )
+    pq = _quantized(probes_df, probe_id_col, vec_col, "_pid", "_pq")
+    # lazy (probes x nprobe rows; read twice): the cells collect is the
+    # sole first consumer — one job computes + persists; the broadcast
+    # build in _adc_scan reads the persisted blocks
+    probecells = _probed_cells(pq, cents, nprobe).localCheckpoint(eager=False)
     cells = [r[0] for r in probecells.select("cell").distinct().collect()]
-
-    codes = spark.read.parquet(f"{path}/codes").filter(
-        F.col("cell").isin(cells)
-    )
-    cand = (
-        codes.join(F.broadcast(probecells), "cell")
-        .filter(F.col("id") != F.col("_pid"))
-        .select("_pid", "id", "codes")
-    )
-    scanned = cand.groupBy("_pid").agg(
-        F.count(F.lit(1)).cast("long").alias("scanned")
-    )
-
-    # per-probe ADC lookup table as ONE row per probe: _lut[s] is a
-    # (code j → partial distance) map for subspace s, built against the
-    # folded codebook (constant-size fold, broadcast).  Each candidate
-    # then scores itself per-row — sum over s of _lut[s][codes[s]] — so
-    # the only corpus-fraction work is a broadcast hash join on _pid
-    # plus an array fold per row.  A first cut exploded every candidate
-    # ×m subspaces against a (probe, s, code) LUT and re-aggregated
-    # through groupBy(_pid, id); (_pid, id) is unique in cand (one code
-    # row per id per probed cell) and integer addition is exact and
-    # commutative, so the per-row fold computes the identical sum.
-    plut = F.broadcast(
-        pq.crossJoin(F.broadcast(_fold_codebook(book)))
-        .select(
-            "_pid",
-            F.transform(
-                F.sequence(F.lit(0), F.lit(m - 1)),
-                lambda s: F.map_from_entries(
-                    F.transform(
-                        F.element_at(F.col("_book"), s + 1),
-                        lambda e: F.struct(
-                            e["j"].alias("_code"),
-                            _ivfl2(
-                                F.slice(F.col("_pq"), s * d_sub + 1, d_sub), e["cv"]
-                            ).alias("_ld"),
-                        ),
-                    )
-                ),
-            ).alias("_lut"),
-        )
-    )
-    adc = (
-        cand.join(plut, "_pid")
-        .select(
-            "_pid",
-            "id",
-            F.aggregate(
-                F.zip_with(
-                    F.col("codes"), F.col("_lut"), lambda c, mp: F.element_at(mp, c)
-                ),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("adc_dist"),
-        )
-    )
-
-    sub = adc.withColumn("_sub", F.pmod(F.xxhash64("id"), F.lit(num_subgroups)))
-    w1 = W.partitionBy("_pid", "_sub").orderBy("adc_dist", "id")
-    survivors = (
-        sub.withColumn("_rn", F.row_number().over(w1))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn", "_sub")
-    )
-    w2 = W.partitionBy("_pid").orderBy("adc_dist", "id")
-    topk = (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= k)
-    )
+    codes = spark.read.parquet(f"{path}/codes").filter(F.col("cell").isin(cells))
+    adc, scanned = _adc_scan(codes, probecells, pq, spark.read.parquet(f"{path}/codebook"))
+    topk = topk_per_key(adc, "_pid", [F.col("_score"), F.col("id")], k, "id", "rank")
     return (
         topk.join(scanned, "_pid")
         .select(
@@ -1498,31 +963,25 @@ def ivf_pq_indexed_topk(
             "scanned",
             F.col("rank").cast("int").alias("rank"),
             "id",
-            F.col("adc_dist").cast("long").alias("adc_dist"),
+            F.col("_score").cast("long").alias("adc_dist"),
         )
         .orderBy("probe_id", "rank")
     )
 
 
-def ivf_pq_compact_cells(
-    spark,
-    path: str,
-    *,
-    cells: list[int] | None = None,
-    num_files_per_cell: int = 1,
-) -> None:
-    """Compact the small files that :func:`ivf_pq_upsert` appends — each
-    ingest adds a file generation to every touched ``cell=`` directory,
-    and a probe's cost per cell is (files x footer) + rows, so periodic
-    compaction keeps the pruned-scan promise honest.  Uses DYNAMIC
-    partition overwrite (``spark.sql.sources.partitionOverwriteMode =
-    dynamic``): the rewrite job's output replaces ONLY the cell
-    partitions it writes — untouched cells' files are left byte-for-byte
-    alone (pytest-pinned), which is what makes per-cell compaction safe
-    to run concurrently with probes of other cells.  ``cells=None``
-    compacts every cell; content is unchanged either way (the operator
-    is a pure layout rewrite — probe results before == after,
-    pytest-pinned).
+def ivf_pq_compact_cells(spark, path: str, *, cells: list[int] | None = None) -> None:
+    """Compact the small files that :func:`ivf_pq_upsert` appends into
+    one file per cell — each ingest adds a file generation to every
+    touched ``cell=`` directory, and a probe's cost per cell is (files x
+    footer) + rows, so periodic compaction keeps the pruned-scan promise
+    honest.  Uses DYNAMIC partition overwrite
+    (``spark.sql.sources.partitionOverwriteMode = dynamic``): the
+    rewrite job's output replaces ONLY the cell partitions it writes —
+    untouched cells' files are left byte-for-byte alone (pytest-pinned),
+    which is what makes per-cell compaction safe to run concurrently
+    with probes of other cells.  ``cells=None`` compacts every cell;
+    content is unchanged either way (the operator is a pure layout
+    rewrite — probe results before == after, pytest-pinned).
 
     At lake scale, schedule by files-per-cell threshold and compact the
     worst offenders first; the model tables never participate."""
@@ -1533,11 +992,6 @@ def ivf_pq_compact_cells(
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     try:
-        (
-            df.repartition(num_files_per_cell, "cell")
-            .write.mode("overwrite")
-            .partitionBy("cell")
-            .parquet(codes_path)
-        )
+        df.repartition(1, "cell").write.mode("overwrite").partitionBy("cell").parquet(codes_path)
     finally:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

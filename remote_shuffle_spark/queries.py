@@ -401,14 +401,6 @@ DRIVER_VERIFIED_ROUND: dict[str, int] = {
 DRIVER_LATEST_FAILED: frozenset[str] = frozenset({
 })
 
-# 0 names whose LATEST gate check failed — forced to the window head
-DRIVER_LATEST_FAILED: frozenset[str] = frozenset({
-})
-
-# 0 names whose LATEST gate check failed — forced to the window head
-DRIVER_LATEST_FAILED: frozenset[str] = frozenset({
-})
-
 # Derived flat set (kept for tests / external callers).
 DRIVER_VERIFIED: frozenset[str] = frozenset(DRIVER_VERIFIED_ROUND)
 

@@ -355,7 +355,7 @@ def test_pq_recall_perfect_on_reconstructible_corpus(spark):
     probes = df.filter("vec_id < 2")
     out = pq_recall_at_k(
         df, "vec_id", "embedding", probes, "vec_id",
-        k=3, dim=8, num_subspaces=2, num_centroids=4,
+        k=3, num_subspaces=2, num_centroids=4,
     )
     got = {r.probe_id: r.recall_at_k for r in out.collect()}
     assert got == {0: 1.0, 1: 1.0}
@@ -379,7 +379,7 @@ def test_pq_codes_are_nearest_centroids(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     out = pq_recall_at_k(
         df, "vec_id", "embedding", df.filter("vec_id = 3"), "vec_id",
-        k=2, dim=8, num_subspaces=2, num_centroids=4,
+        k=2, num_subspaces=2, num_centroids=4,
     )
     (row,) = out.collect()
     assert (row.probe_id, row.recall_at_k) == (3, 1.0)
@@ -526,6 +526,25 @@ def test_ivf_pq_indexed_prunes_partitions_and_matches_inquery(spark, sf_smoke, t
         assert all(r.scanned < n_corpus for r in rs)
         dists = [r.adc_dist for r in sorted(rs, key=lambda x: x.rank)]
         assert dists == sorted(dists)
+
+
+def test_ivf_pq_codes_cover_every_vector_element(spark, tmp_path):
+    """PQ sub-vectors span the WHOLE vector: with 128 elements and 8
+    subspaces each code covers 16 of them.  The first 64 elements are all
+    0 (every codebook entry ties there, so the code is the smallest id,
+    0) and the last 64 are distinct per row (each row is its own nearest
+    codebook entry), so row i encodes to [0]*4 + [i]*4.  A width taken
+    from a fixed 64-wide default reads only the zero half and encodes
+    every row to all zeros."""
+    import random
+
+    rnd = random.Random(7)
+    rows = [(i, [0.0] * 64 + [rnd.random() for _ in range(64)]) for i in range(16)]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    path = str(tmp_path / "wide")
+    similarity.ivf_pq_write_index(df, "vec_id", "embedding", path)
+    got = {r.id: list(r.codes) for r in spark.read.parquet(f"{path}/codes").collect()}
+    assert got == {i: [0] * 4 + [i] * 4 for i in range(16)}
 
 
 def test_ivf_pq_upsert_equals_full_build_under_frozen_model(spark, sf_smoke, tmp_path):

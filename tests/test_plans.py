@@ -459,6 +459,22 @@ def test_knn_join_plan_broadcast_queries_two_phase_topk(spark, sf_smoke):
     assert "SortMergeJoin" not in plan  # scoring never shuffles the corpus
 
 
+def test_ivf_encode_corpus_side_has_no_shuffle(spark, sf_smoke):
+    """The IVFADC encode frame — built the way ivf_pq_write_index builds
+    it: model tables checkpointed eagerly, then the shared encode over
+    the corpus — plans NO shuffle Exchange: the model folds into one
+    broadcast row and every vector computes its cell and codes per row."""
+    from remote_shuffle_spark.operators import similarity as S
+
+    emb = load_table(spark, sf_smoke, "embeddings")
+    qdf = S._quantized(emb, "vec_id", "embedding", "_id", "_q")
+    cellc, cents = (
+        t.localCheckpoint(eager=True)
+        for t in S._pq_model(qdf, S.NUM_CELLS, S.NUM_CENTROIDS, S.NUM_SUBSPACES)
+    )
+    explain.assert_no_shuffle_exchange(S._ivf_encode(qdf, cellc, cents))
+
+
 def test_join_hints_reach_the_planner(spark, sf_smoke):
     """SHUFFLE_MERGE / SHUFFLE_HASH hints must actually pick the physical
     strategy (ext_join_strategy_hints proves result-equality; this proves
