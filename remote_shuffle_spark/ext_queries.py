@@ -18,8 +18,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from remote_shuffle_spark.functions.vectors import int_dot, int_sq_l2, quantize_floor
+from remote_shuffle_spark.functions.vectors import int_dot, nearest_int_l2, quantize_floor
 from remote_shuffle_spark.operators import dedup, multimodal, similarity, text
+from remote_shuffle_spark.plans.index_store import append_index, compact_index, read_index
 from remote_shuffle_spark.queries import dec, declared
 from remote_shuffle_spark.scratch import cached_dir, file_stamp, run_dir
 from remote_shuffle_spark.sources.tables import load_table
@@ -6583,8 +6584,7 @@ def _zorder_events_dir(spark: SparkSession, sf_dir: str) -> str:
             num_partitions=16,
         )
 
-    stamp = file_stamp(table_path(sf_dir, "events"))
-    return cached_dir("zorder", ("zorder2", *stamp), build)
+    return cached_dir("zorder", file_stamp(table_path(sf_dir, "events")), build)
 
 
 def _zorder_oracle_sql() -> str:
@@ -8985,8 +8985,7 @@ def _minhash_index_dir(spark: SparkSession, sf_dir: str) -> str:
         )
         write_minhash_band_index(minhash_band_index(corpus, "doc_id", "text"), tmp)
 
-    stamp = file_stamp(table_path(sf_dir, "documents"))
-    return cached_dir("mhidx", ("mhidx1", *stamp), build)
+    return cached_dir("mhidx", file_stamp(table_path(sf_dir, "documents")), build)
 
 
 def _incremental_minhash_oracle_sql() -> str:
@@ -9122,7 +9121,6 @@ def ext_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
     on the small-delta pushdown path (incremental_minhash_dedup's
     pushdown_keys_limit; delta-proportional wall measured in
     scripts/incremental_dedup_probe.py)."""
-    from remote_shuffle_spark.functions.hashing import tokens as _toks
     from remote_shuffle_spark.operators.dedup import incremental_minhash_dedup
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
@@ -9135,7 +9133,7 @@ def ext_dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
         corpus.filter(F.col("doc_id") % 23 == 0), "n", 2000000
     )
     delta = fresh.unionAll(exact_copies).unionAll(near_copies)
-    band_index = spark.read.parquet(_minhash_index_dir(spark, sf_dir))
+    band_index = read_index(spark, _minhash_index_dir(spark, sf_dir))
     res = incremental_minhash_dedup(
         delta, corpus, "doc_id", "text", band_index=band_index
     )
@@ -9359,10 +9357,8 @@ def ext_dedup_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline is md5-engine-identical, so the oracle replays both
     generations exactly.  The scratch index is uuid-unique per
     invocation with cleanup after the eager checkpoint."""
-    import os
     import shutil
 
-    from remote_shuffle_spark.functions.hashing import tokens as _toks
     from remote_shuffle_spark.operators.dedup import (
         corpus_text_hashes,
         incremental_minhash_dedup,
@@ -9402,7 +9398,7 @@ def ext_dedup_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus,
             "doc_id",
             "text",
-            band_index=spark.read.parquet(path),
+            band_index=read_index(spark, path),
             corpus_hashes=ch1,
         ).localCheckpoint(eager=True)  # statuses feed the report AND new1
         g1 = r1.groupBy("status").agg(
@@ -9423,7 +9419,7 @@ def ext_dedup_index_refresh(spark: SparkSession, sf_dir: str) -> DataFrame:
             corpus2,
             "doc_id",
             "text",
-            band_index=spark.read.parquet(path),
+            band_index=read_index(spark, path),
             corpus_hashes=ch2,
         )
         g2 = r2.groupBy("status").agg(
@@ -9846,10 +9842,10 @@ def ext_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     step that completes the persisted-index lifecycle (build → upsert →
     compact → probe): two upsert generations leave multiple small files
     in every touched cell directory, then
-    operators/similarity.py:ivf_pq_compact_cells rewrites the cells with
-    ``spark.sql.sources.partitionOverwriteMode=dynamic`` so ONLY the
-    rewritten partitions are replaced (untouched cells byte-identical —
-    pytest-pinned, with the before==after content invariant).  The probe
+    plans/index_store.py:compact_index rewrites the cells with a dynamic
+    partition overwrite so ONLY the rewritten partitions are replaced
+    (untouched cells byte-identical — pytest-pinned, with the
+    before==after content invariant).  The probe
     after compaction must serve exactly the single-build content, which
     is what the oracle replays (corpus = vec_id %% 5 != 2 trains the
     frozen model; the two deltas %% 10 == 2 and %% 10 == 7 partition the
@@ -9858,11 +9854,9 @@ def ext_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the periodic job every partitioned index runs; the
     dynamic mode is what makes it safe per-cell (a static overwrite
     would drop every cell the job didn't write)."""
-    import os
     import shutil
 
     from remote_shuffle_spark.operators.similarity import (
-        ivf_pq_compact_cells,
         ivf_pq_indexed_topk,
         ivf_pq_upsert,
         ivf_pq_write_index,
@@ -9877,7 +9871,7 @@ def ext_ivf_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         ivf_pq_write_index(corpus, "vec_id", "embedding", path)
         ivf_pq_upsert(spark, path, delta1, "vec_id", "embedding")
         ivf_pq_upsert(spark, path, delta2, "vec_id", "embedding")
-        ivf_pq_compact_cells(spark, path)
+        compact_index(spark, f"{path}/codes")
         probes = emb.filter(F.col("vec_id") < 4)
         return (
             ivf_pq_indexed_topk(
@@ -9941,24 +9935,21 @@ def ext_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitionBy(cell) layout (ext_ivf_pq_indexed).
 
     Same deterministic model and integer algebra as the IVFADC family;
-    one broadcast assignment pass + one cell aggregate."""
+    one broadcast assignment pass (the per-row argmin of the IVFADC
+    encode, functions/vectors.py:nearest_int_l2 — no corpus shuffle) +
+    one cell aggregate."""
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = emb.select(
         F.col("vec_id").alias("_id"),
         quantize_floor("embedding", similarity.QSCALE).alias("_q"),
     )
-    cellc = F.broadcast(
+    cells = F.broadcast(
         qdf.orderBy("_id")
         .limit(8)
-        .select(F.col("_id").alias("_cid"), F.col("_q").alias("_cv"))
+        .agg(F.collect_list(F.struct(F.col("_id").alias("cid"), F.col("_q").alias("cv"))).alias("_cells"))
     )
-    assigned = (
-        qdf.crossJoin(cellc)
-        .select("_id", "_cid", int_sq_l2(F.col("_q"), F.col("_cv")).alias("_d"))
-        .groupBy("_id")
-        .agg(F.min(F.struct("_d", "_cid")).alias("_m"))
-        .select("_id", F.col("_m._cid").alias("cell"), F.col("_m._d").alias("_d"))
-    )
+    best = nearest_int_l2(F.col("_q"), F.col("_cells"))
+    assigned = qdf.crossJoin(cells).select("_id", best["_cid"].alias("cell"), best["_cd"].alias("_d"))
     tot = assigned.agg(F.count(F.lit(1)).alias("_n"))
     return (
         assigned.crossJoin(F.broadcast(tot))
@@ -10010,7 +10001,6 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from remote_shuffle_spark.functions.hashing import tokens as _toks
     from remote_shuffle_spark.operators.dedup import (
         corpus_text_hashes,
         incremental_minhash_dedup,
@@ -10064,7 +10054,7 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                     corpus_now,
                     "doc_id",
                     "text",
-                    band_index=spark.read.parquet(idx),
+                    band_index=read_index(spark, idx),
                     corpus_hashes=base_h.union(
                         corpus_text_hashes(extra_df, "text", distinct=False)
                     ),
@@ -10607,9 +10597,9 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Cached PERSISTED IVFADC index of the embeddings table
     (operators/similarity.py:ivf_pq_write_index — encoded corpus
     partitionBy(cell) + model tables), built once per embeddings
-    snapshot (stat-keyed cache, the _zorder_events_dir discipline).  The
-    stamp covers only the input, so the version tag in the key must change
-    whenever the index writer's output could."""
+    snapshot (stat-keyed cache, the _zorder_events_dir discipline; the
+    cache key also covers the package source, so an edit to the writer
+    or any of its callees rebuilds the index)."""
     from remote_shuffle_spark.operators.similarity import ivf_pq_write_index
     from remote_shuffle_spark.sources.tables import table_path
 
@@ -10617,8 +10607,7 @@ def _ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
         emb = load_table(spark, sf_dir, "embeddings")
         ivf_pq_write_index(emb, "vec_id", "embedding", tmp)
 
-    stamp = file_stamp(table_path(sf_dir, "embeddings"))
-    return cached_dir("ivfidx", ("ivfidx2", *stamp), build)
+    return cached_dir("ivfidx", file_stamp(table_path(sf_dir, "embeddings")), build)
 
 
 @declared(
@@ -10824,7 +10813,6 @@ def ext_ivf_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     same integer algebra — no index file needs inspecting.  The scratch
     index is uuid-unique per invocation and removed after the result
     materializes (concurrent-run discipline, ext_schema_evolution)."""
-    import os
     import shutil
 
     from remote_shuffle_spark.operators.similarity import (
@@ -14288,8 +14276,7 @@ def _invidx_dir(spark: SparkSession, sf_dir: str) -> str:
         docs = load_table(spark, sf_dir, "documents")
         write_inverted_index(inverted_postings(docs, "doc_id", "text"), tmp)
 
-    stamp = file_stamp(table_path(sf_dir, "documents"))
-    return cached_dir("invidx", ("invidx1", *stamp), build)
+    return cached_dir("invidx", file_stamp(table_path(sf_dir, "documents")), build)
 
 
 @declared(
@@ -14334,11 +14321,9 @@ def ext_inverted_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the result must equal the full-corpus oracle, proving
     build+append ≡ full build.  Scratch dir is uuid-unique and removed.
     """
-    import os
     import shutil
 
     from remote_shuffle_spark.operators.text import (
-        inverted_index_append,
         inverted_index_lookup,
         inverted_postings,
         write_inverted_index,
@@ -14353,11 +14338,12 @@ def ext_inverted_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             path,
         )
-        inverted_index_append(
+        append_index(
+            spark,
+            path,
             inverted_postings(
                 docs.filter(F.col("doc_id") % 10 == 3), "doc_id", "text"
             ),
-            path,
         )
         out = inverted_index_lookup(spark, path, _INVIDX_TERMS, k=10).collect()
     finally:
@@ -14377,7 +14363,7 @@ def ext_inverted_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Inverted-index COMPACTION via dynamic partition overwrite: after
     an append-heavy ingest, the touched buckets' small file generations
     are rewritten to one token-sorted file each
-    (operators/text.py:inverted_index_compact) — untouched buckets stay
+    (plans/index_store.py:compact_index) — untouched buckets stay
     byte-identical, content is unchanged (a pure layout rewrite), and
     the post-compaction lookup still matches the full-corpus oracle.
     The query runs the whole lifecycle — build (minus a slice), append
@@ -14390,8 +14376,6 @@ def ext_inverted_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from remote_shuffle_spark.operators.text import (
-        inverted_index_append,
-        inverted_index_compact,
         inverted_index_lookup,
         inverted_postings,
         write_inverted_index,
@@ -14415,19 +14399,18 @@ def ext_inverted_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             path,
         )
         base = _bucket_files(path)
-        inverted_index_append(
+        append_index(
+            spark,
+            path,
             inverted_postings(
                 docs.filter(F.col("doc_id") % 10 == 3), "doc_id", "text"
             ),
-            path,
         )
         appended = _bucket_files(path)
         touched = sorted(b for b in appended if appended[b] > base.get(b, 0))
         if not touched:
             raise RuntimeError("append touched no bucket — fixture degenerate")
-        inverted_index_compact(
-            spark, path, buckets=[b.split("=", 1)[1] for b in touched]
-        )
+        compact_index(spark, path, parts=[b.split("=", 1)[1] for b in touched])
         compacted = _bucket_files(path)
         for b in touched:
             if compacted[b] >= appended[b]:
@@ -14454,7 +14437,7 @@ def ext_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ext_stream_ingest_dedup loop applied to text search: a file-source
     readStream drained by two Trigger.AvailableNow runs sharing one
     checkpoint, where each micro-batch's postings APPEND to the index's
-    touched buckets (operators/text.py:inverted_index_append).  After
+    touched buckets (plans/index_store.py:append_index).  After
     both deltas land, a term lookup over the index equals the
     full-corpus oracle — the streaming proof that append-only ingest
     converges to the batch-built truth, with state living in the
@@ -14465,7 +14448,6 @@ def ext_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from remote_shuffle_spark.operators.text import (
-        inverted_index_append,
         inverted_index_lookup,
         inverted_postings,
         write_inverted_index,
@@ -14484,9 +14466,7 @@ def ext_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_inverted_index(inverted_postings(corpus0, "doc_id", "text"), idx)
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
-            inverted_index_append(
-                inverted_postings(batch_df, "doc_id", "text"), idx
-            )
+            append_index(spark, idx, inverted_postings(batch_df, "doc_id", "text"))
 
         def run_once() -> None:
             run_to_completion(
@@ -14542,7 +14522,7 @@ def ext_inverted_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hot directory, and this is the table a maintenance job reads to
     decide which buckets to compact or split.
     """
-    idx = spark.read.parquet(_invidx_dir(spark, sf_dir))
+    idx = read_index(spark, _invidx_dir(spark, sf_dir))
     return (
         idx.groupBy("bucket")
         .agg(

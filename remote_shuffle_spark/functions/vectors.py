@@ -47,6 +47,15 @@ def int_sq_l2(a, b) -> Column:
     return _long_fold(a, b, lambda x, y: (x - y) * (x - y))
 
 
+def nearest_int_l2(q: Column, entries: Column) -> Column:
+    """struct(_cd, _cid) of the ``entries`` element (cid, cv) nearest to
+    ``q`` by integer squared L2, ties to the smallest cid — a per-row fold,
+    so assigning rows to one broadcast row of centroids needs no shuffle."""
+    return F.array_min(
+        F.transform(entries, lambda c: F.struct(int_sq_l2(q, c["cv"]).alias("_cd"), c["cid"].alias("_cid")))
+    )
+
+
 def l2_norm(a: Column) -> Column:
     return F.sqrt(F.aggregate(F.transform(a, lambda x: x * x), F.lit(0.0), lambda acc, x: acc + x))
 

@@ -31,6 +31,7 @@ from remote_shuffle_spark.functions.hashing import (
     word_shingles_from_tokens,
 )
 from remote_shuffle_spark.functions.vectors import cosine_similarity, to_double_array
+from remote_shuffle_spark.plans.index_store import append_index, by_range, read_index, write_index
 
 DEFAULT_MAX_BUCKET = 64
 
@@ -1225,7 +1226,8 @@ def minhash_band_index(
 
 def write_minhash_band_index(index: DataFrame, path: str, *, num_files: int = 16) -> None:
     """Persist a band index SORTED by ``bkey`` (range partition + in-file
-    sort), so every parquet file/row group carries a tight bkey min-max
+    sort, recorded in the index manifest so every refresh appends the same
+    way), so every parquet file/row group carries a tight bkey min-max
     and a small delta's key-pushdown probe skips most of the index on
     footer statistics alone (the z-order file-skipping mechanism, one
     dimension).  Lake-scale deployments with huge deltas should ALSO
@@ -1234,12 +1236,7 @@ def write_minhash_band_index(index: DataFrame, path: str, *, num_files: int = 16
     here is what makes the small-delta fast path
     (``pushdown_keys_limit``) proportional to the delta, not the
     corpus."""
-    (
-        index.repartitionByRange(num_files, "bkey")
-        .sortWithinPartitions("bkey")
-        .write.mode("overwrite")
-        .parquet(path)
-    )
+    write_index(index, path, layout=by_range("bkey", num_files))
 
 
 def corpus_text_hashes(
@@ -1470,7 +1467,6 @@ def minhash_band_index_refresh(
     num_hashes: int = 16,
     num_bands: int = 8,
     max_bucket_size: int = DEFAULT_MAX_BUCKET,
-    num_files: int = 4,
 ) -> None:
     """Fold freshly-ingested (already-deduped) documents INTO a persisted
     :func:`minhash_band_index` — the step that closes the incremental
@@ -1489,8 +1485,9 @@ def minhash_band_index_refresh(
     cap — compaction (a full rebuild) re-evaluates every bucket against
     the whole corpus; schedule it like any index maintenance.
 
-    Appended files are written sorted by bkey so the small-delta
-    pushdown path keeps skipping row groups across generations."""
+    Appended files follow the index's recorded layout (bkey-sorted
+    ranges), so the small-delta pushdown path keeps skipping row groups
+    across generations."""
     tk = new_df.select(
         F.col(id_col).alias("_mm_id"), tokens(text_col).alias("_mm_tk")
     ).filter(F.size("_mm_tk") >= shingle_len)
@@ -1503,7 +1500,7 @@ def minhash_band_index_refresh(
     new_sizes = new_tags.groupBy("_mm_bucket").agg(
         F.count(F.lit(1)).alias("_new_n")
     )
-    existing = spark.read.parquet(path)
+    existing = read_index(spark, path)
     existing_sizes = (
         existing.join(
             new_sizes.select(F.col("_mm_bucket").alias("bkey")),
@@ -1525,11 +1522,5 @@ def minhash_band_index_refresh(
         )
         .select("_mm_bucket")
     )
-    (
-        new_tags.join(kept_keys, "_mm_bucket")
-        .select(F.col("_mm_bucket").alias("bkey"), F.col("_mm_id").alias("id"))
-        .repartitionByRange(num_files, "bkey")
-        .sortWithinPartitions("bkey")
-        .write.mode("append")
-        .parquet(path)
-    )
+    kept = new_tags.join(kept_keys, "_mm_bucket")
+    append_index(spark, path, kept.select(F.col("_mm_bucket").alias("bkey"), F.col("_mm_id").alias("id")))

@@ -37,10 +37,17 @@ from remote_shuffle_spark.functions.vectors import (
     cosine_similarity,
     int_dot,
     int_sq_l2,
+    nearest_int_l2,
     quantize_floor,
     to_double_array,
 )
 from remote_shuffle_spark.operators.dedup import _lsh_bucket
+from remote_shuffle_spark.plans.index_store import (
+    append_index,
+    by_partition,
+    read_index,
+    write_index,
+)
 
 # Cosines are rounded to this many digits BEFORE ranking or thresholding,
 # so the selected ids are reproducible by an engine accumulating the dot
@@ -615,15 +622,9 @@ def _ivf_encode(qdf: DataFrame, cellc: DataFrame, cents: DataFrame) -> DataFrame
     model = F.broadcast(
         cells_arr.crossJoin(_fold_codebook(cents)).filter(F.size(F.col("_cells")) > 0)
     )
-    best = F.array_min(
-        F.transform(
-            F.col("_cells"),
-            lambda c: F.struct(int_sq_l2(F.col("_q"), c["cv"]).alias("_cd"), c["cid"].alias("_cid")),
-        )
-    )
     return qdf.crossJoin(model).select(
         F.col("_id").alias("id"),
-        best["_cid"].alias("cell"),
+        nearest_int_l2(F.col("_q"), F.col("_cells"))["_cid"].alias("cell"),
         _pq_codes(F.col("_q"), NUM_SUBSPACES).alias("codes"),
     )
 
@@ -888,10 +889,9 @@ def ivf_pq_write_index(df: DataFrame, id_col: str, vec_col: str, path: str) -> N
         t.localCheckpoint(eager=True)
         for t in _pq_model(qdf, NUM_CELLS, NUM_CENTROIDS, NUM_SUBSPACES)
     )
-    codes = _ivf_encode(qdf, cellc, cents)
-    codes.write.mode("overwrite").partitionBy("cell").parquet(f"{path}/codes")
-    cellc.write.mode("overwrite").parquet(f"{path}/centroids")
-    cents.write.mode("overwrite").parquet(f"{path}/codebook")
+    write_index(_ivf_encode(qdf, cellc, cents), f"{path}/codes", layout=by_partition("cell", "id"))
+    write_index(cellc, f"{path}/centroids", layout=None)
+    write_index(cents, f"{path}/codebook", layout=None)
 
 
 def ivf_pq_upsert(spark, path: str, delta_df: DataFrame, id_col: str, vec_col: str) -> None:
@@ -905,15 +905,17 @@ def ivf_pq_upsert(spark, path: str, delta_df: DataFrame, id_col: str, vec_col: s
     delta-proportional encode + append, and probes see old and new
     vectors through one partition-pruned scan.
 
-    At lake scale appends accumulate small files per cell; compact a
-    cell by rewriting just its directory (partition-scoped overwrite) —
-    the model tables never change until a full re-train/re-build."""
+    At lake scale appends accumulate small files per cell; compact
+    chosen cells with ``plans.index_store.compact_index(spark,
+    f"{path}/codes", parts=cells)``, which rewrites just their
+    directories — the model tables never change until a full
+    re-train/re-build."""
     codes = _ivf_encode(
         _quantized(delta_df, id_col, vec_col, "_id", "_q"),
-        spark.read.parquet(f"{path}/centroids"),
-        spark.read.parquet(f"{path}/codebook"),
+        read_index(spark, f"{path}/centroids"),
+        read_index(spark, f"{path}/codebook"),
     )
-    codes.write.mode("append").partitionBy("cell").parquet(f"{path}/codes")
+    append_index(spark, f"{path}/codes", codes)
 
 
 def ivf_pq_indexed_topk(
@@ -946,15 +948,15 @@ def ivf_pq_indexed_topk(
     Scale shape: model tables and per-probe LUTs broadcast; the pruned
     code scan is NUM_SUBSPACES small ints per row; ADC is a per-row fold
     (:func:`_adc_scan`); top-k is :func:`topk_per_key`."""
-    cents = spark.read.parquet(f"{path}/centroids")
+    cents = read_index(spark, f"{path}/centroids")
     pq = _quantized(probes_df, probe_id_col, vec_col, "_pid", "_pq")
     # lazy (probes x nprobe rows; read twice): the cells collect is the
     # sole first consumer — one job computes + persists; the broadcast
     # build in _adc_scan reads the persisted blocks
     probecells = _probed_cells(pq, cents, nprobe).localCheckpoint(eager=False)
     cells = [r[0] for r in probecells.select("cell").distinct().collect()]
-    codes = spark.read.parquet(f"{path}/codes").filter(F.col("cell").isin(cells))
-    adc, scanned = _adc_scan(codes, probecells, pq, spark.read.parquet(f"{path}/codebook"))
+    codes = read_index(spark, f"{path}/codes").filter(F.col("cell").isin(cells))
+    adc, scanned = _adc_scan(codes, probecells, pq, read_index(spark, f"{path}/codebook"))
     topk = topk_per_key(adc, "_pid", [F.col("_score"), F.col("id")], k, "id", "rank")
     return (
         topk.join(scanned, "_pid")
@@ -967,31 +969,3 @@ def ivf_pq_indexed_topk(
         )
         .orderBy("probe_id", "rank")
     )
-
-
-def ivf_pq_compact_cells(spark, path: str, *, cells: list[int] | None = None) -> None:
-    """Compact the small files that :func:`ivf_pq_upsert` appends into
-    one file per cell — each ingest adds a file generation to every
-    touched ``cell=`` directory, and a probe's cost per cell is (files x
-    footer) + rows, so periodic compaction keeps the pruned-scan promise
-    honest.  Uses DYNAMIC partition overwrite
-    (``spark.sql.sources.partitionOverwriteMode = dynamic``): the
-    rewrite job's output replaces ONLY the cell partitions it writes —
-    untouched cells' files are left byte-for-byte alone (pytest-pinned),
-    which is what makes per-cell compaction safe to run concurrently
-    with probes of other cells.  ``cells=None`` compacts every cell;
-    content is unchanged either way (the operator is a pure layout
-    rewrite — probe results before == after, pytest-pinned).
-
-    At lake scale, schedule by files-per-cell threshold and compact the
-    worst offenders first; the model tables never participate."""
-    codes_path = f"{path}/codes"
-    df = spark.read.parquet(codes_path)
-    if cells is not None:
-        df = df.filter(F.col("cell").isin([int(c) for c in cells]))
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        df.repartition(1, "cell").write.mode("overwrite").partitionBy("cell").parquet(codes_path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

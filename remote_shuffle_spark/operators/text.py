@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.functions.hashing import normalized_text, rolling_fingerprint, tokens
+from remote_shuffle_spark.plans.index_store import by_partition, read_index, write_index
 
 # Tiny deterministic marker-word profiles for the language-ID heuristic.
 # A production profile would be trained character n-gram frequencies
@@ -1011,23 +1012,13 @@ def write_inverted_index(postings, path: str) -> None:
     term lookup prunes to the probed terms' buckets via static partition
     filters (directory listing, not scanning — the ivf_pq_write_index
     layout discipline applied to text).  Within each bucket the postings
-    are sorted by token so row-group footer ranges stay tight (the
-    band-index footer-skipping mechanism)."""
-    (
-        postings.repartition("bucket")
-        .sortWithinPartitions("tok", "doc_id")
-        .write.mode("overwrite")
-        .partitionBy("bucket")
-        .parquet(path)
-    )
-
-
-def inverted_index_append(postings, path: str) -> None:
-    """Incremental ingest: APPEND new docs' postings — parquet append
-    with partitionBy touches only the buckets the new tokens hash to;
-    untouched bucket directories keep their files byte-identical (the
-    ivf_pq_upsert contract for text)."""
-    postings.write.mode("append").partitionBy("bucket").parquet(path)
+    are sorted by (tok, doc_id) so row-group footer ranges stay tight (the
+    band-index footer-skipping mechanism).  The layout is recorded in the
+    index manifest: ``plans.index_store.append_index`` writes each ingest
+    generation into only the touched bucket directories the same way, and
+    ``compact_index`` rewrites a bucket subset leaving the others
+    byte-identical."""
+    write_index(postings, path, layout=by_partition("bucket", "tok", "doc_id"))
 
 
 def inverted_index_lookup(spark, path: str, terms: list[str], *, k: int = 10):
@@ -1040,11 +1031,9 @@ def inverted_index_lookup(spark, path: str, terms: list[str], *, k: int = 10):
     """
     import hashlib
 
-    from pyspark.sql import functions as F
-
     buckets = sorted({hashlib.md5(t.encode()).hexdigest()[:1] for t in terms})
     idx = (
-        spark.read.parquet(path)
+        read_index(spark, path)
         .filter(F.col("bucket").isin(buckets))
         .filter(F.col("tok").isin(list(terms)))
     )
@@ -1057,38 +1046,3 @@ def inverted_index_lookup(spark, path: str, terms: list[str], *, k: int = 10):
         .orderBy(F.col("n_matched").desc(), F.col("tf_sum").desc(), "doc_id")
         .limit(k)
     )
-
-
-def inverted_index_compact(spark, path: str, *, buckets: list[str] | None = None,
-                           num_files_per_bucket: int = 1) -> None:
-    """Compact the small files :func:`inverted_index_append` accumulates —
-    each ingest adds a file generation to every touched ``bucket=``
-    directory, and lookup cost per bucket is (files × footer) + rows, so
-    periodic compaction keeps the pruned-lookup promise honest.  DYNAMIC
-    partition overwrite rewrites ONLY the bucket partitions it writes
-    (untouched buckets stay byte-identical — the ivf_pq_compact_cells
-    contract); content is unchanged (pure layout rewrite; the rewrite
-    re-sorts postings by token so footer ranges tighten back up).
-    ``buckets=None`` compacts every bucket.
-
-    The compacted postings are MATERIALIZED (eager localCheckpoint)
-    before the overwrite starts, so the write job never reads from the
-    path it is replacing (the r11 ADVICE read-then-overwrite-self
-    hazard: version-sensitive on some Spark releases, and a source-read
-    racing partition deletion could drop postings).  Dynamic overwrite
-    itself stages to a job-scoped directory and swaps partitions at
-    commit, so a mid-job failure leaves the previous generation intact."""
-    df = spark.read.parquet(path)
-    if buckets is not None:
-        df = df.filter(F.col("bucket").isin(list(buckets)))
-    compacted = (
-        df.repartition(num_files_per_bucket, "bucket")
-        .sortWithinPartitions("tok", "doc_id")
-        .localCheckpoint(eager=True)
-    )
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        compacted.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)

@@ -93,48 +93,58 @@ def _local_dir(spark: SparkSession, path: str) -> str:
 
 
 def _list_data_files(d: str) -> dict[str, int]:
-    return {
-        name: os.path.getsize(os.path.join(d, name))
-        for name in os.listdir(d)
-        if not name.startswith(("_", "."))
-    }
+    """Every committed data file under ``d`` → its size, keyed by the path
+    relative to ``d`` (partition directories included), so a manifest
+    stays valid when its directory is renamed."""
+    files = {}
+    for root, dirs, names in os.walk(d):
+        dirs[:] = [n for n in dirs if not n.startswith(("_", "."))]
+        for p in (os.path.join(root, n) for n in names if not n.startswith(("_", "."))):
+            files[os.path.relpath(p, d)] = os.path.getsize(p)
+    return files
 
 
-def _write_manifest(spark: SparkSession, path: str) -> None:
-    """Record the committed data files (name → size) so any later reader
-    can tell a lost block from a legitimately smaller dataset.  The shuffle
-    analog is the reference's index file: data without its index entry does
-    not exist, and an index entry without its data is an error, never an
-    empty block."""
+def _write_manifest(spark: SparkSession, path: str, **extra: object) -> None:
+    """Record the committed data files (relative path → size), plus any
+    ``extra`` fields, so any later reader can tell a lost block from a
+    legitimately smaller dataset.  The shuffle analog is the reference's
+    index file: data without its index entry does not exist, and an index
+    entry without its data is an error, never an empty block."""
     import json
 
     d = _local_dir(spark, path)
-    files = _list_data_files(d)
     tmp = os.path.join(d, f".{MANIFEST_NAME}.tmp")
     with open(tmp, "w") as fh:
-        json.dump({"files": files}, fh)
+        json.dump({"files": _list_data_files(d), **extra}, fh)
     os.replace(tmp, os.path.join(d, MANIFEST_NAME))  # atomic, like the index commit
 
 
-def _verify_manifest(spark: SparkSession, path: str) -> None:
+def _verify_manifest(spark: SparkSession, path: str, *, required: bool = False) -> dict | None:
+    """The manifest at ``path`` once the on-disk files match it; raise on a
+    missing, resized or unlisted file.  An absent manifest is a plain
+    directory (``None``) unless ``required``."""
     import json
 
     d = _local_dir(spark, path)
     mfile = os.path.join(d, MANIFEST_NAME)
     if not os.path.exists(mfile):
-        return  # not a manifested checkpoint (plain directory) — nothing to assert
+        if required:
+            raise CheckpointIntegrityError(f"{path} has no commit manifest: lost commit")
+        return None
     with open(mfile) as fh:
         manifest = json.load(fh)
     on_disk = _list_data_files(d)
-    missing = [f for f in manifest["files"] if f not in on_disk]
-    resized = [
-        f for f, n in manifest["files"].items() if f in on_disk and on_disk[f] != n
-    ]
-    if missing or resized:
+    listed = manifest["files"]
+    missing = [f for f in listed if f not in on_disk]
+    resized = [f for f, n in listed.items() if f in on_disk and on_disk[f] != n]
+    unlisted = [f for f in on_disk if f not in listed]
+    if missing or resized or unlisted:
         raise CheckpointIntegrityError(
-            f"checkpoint at {path} lost blocks: missing={missing} resized={resized}; "
-            "refusing to return a silently-partial result — rebuild the checkpoint"
+            f"checkpoint at {path} lost blocks: missing={missing} resized={resized} "
+            f"unlisted={unlisted}; refusing to return a silently-partial result — "
+            "rebuild the checkpoint"
         )
+    return manifest
 
 
 def checkpoint_to(df: DataFrame, path: str, *, format: str = "parquet") -> DataFrame:

@@ -5,7 +5,8 @@ Two kinds of path, kept apart:
 - :func:`cached_dir` — a content-keyed cache, ``<tmp>/rss_<tag>_<key>``,
   shared by every process on the host and kept across runs.  The key
   hashes the caller's inputs (source realpath, size, mtime_ns and
-  parameters), so a regenerated fixture gets a fresh directory.  A build
+  parameters) and :func:`source_fingerprint`, so a regenerated fixture
+  or an edit anywhere in the package gets a fresh directory.  A build
   goes to a private tmp path, is stamped ``_SUCCESS`` and renamed into
   place; a directory without the stamp (a crash, a /tmp cleaner pruning
   by atime) is rebuilt, never served.
@@ -17,8 +18,10 @@ Two kinds of path, kept apart:
 from __future__ import annotations
 
 import atexit
+import functools
 import hashlib
 import os
+import pathlib
 import shutil
 import tempfile
 import uuid
@@ -34,15 +37,28 @@ def file_stamp(path: str) -> tuple[str, int, int]:
     return real, st.st_size, st.st_mtime_ns
 
 
+@functools.cache
+def source_fingerprint() -> str:
+    """Hash of every ``.py`` file of this package, computed once per
+    process: a cache built by the package's code is valid only for that
+    code, and a writer's output can change through any of its callees."""
+    root = pathlib.Path(__file__).parent
+    h = hashlib.sha1()
+    for p in sorted(root.rglob("*.py")):
+        h.update(str(p.relative_to(root)).encode() + p.read_bytes())
+    return h.hexdigest()
+
+
 def _complete(d: str) -> bool:
     return os.path.isfile(os.path.join(d, "_SUCCESS"))
 
 
 def cached_dir(tag: str, key_parts: Iterable[object], build: Callable[[str], None]) -> str:
     """Path of the complete cache ``rss_<tag>_<key>``, where ``key`` hashes
-    ``key_parts``; on a miss ``build(tmp)`` fills a fresh directory that is
-    then stamped and renamed into place."""
-    key = hashlib.sha1("|".join(map(str, key_parts)).encode()).hexdigest()[:12]
+    ``key_parts`` and the package's source; on a miss ``build(tmp)`` fills
+    a fresh directory that is then stamped and renamed into place."""
+    parts = (source_fingerprint(), *key_parts)
+    key = hashlib.sha1("|".join(map(str, parts)).encode()).hexdigest()[:12]
     out = os.path.join(tempfile.gettempdir(), f"rss_{tag}_{key}")
     if _complete(out):
         return out

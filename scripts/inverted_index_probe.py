@@ -1,6 +1,6 @@
 """Pruned-lookup and delta-append probes for the persisted inverted index
 (operators/text.py:write_inverted_index / inverted_index_lookup /
-inverted_index_append).
+plans/index_store.py:append_index).
 
 Two claims under test (the third persisted-index family's scale story):
 
@@ -39,11 +39,11 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.operators.text import (
-    inverted_index_append,
     inverted_index_lookup,
     inverted_postings,
     write_inverted_index,
 )
+from remote_shuffle_spark.plans.index_store import append_index
 
 TERMS = ["tok3", "tok17", "tok42"]
 
@@ -110,9 +110,7 @@ def main() -> None:
                 (F.col("doc_id") + 10_000_000).alias("doc_id"), "text"
             )
             t0 = time.perf_counter()
-            inverted_index_append(
-                inverted_postings(delta, "doc_id", "text"), root
-            )
+            append_index(spark, root, inverted_postings(delta, "doc_id", "text"))
             append_s = time.perf_counter() - t0
 
             results[mult] = {

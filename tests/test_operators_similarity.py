@@ -2,11 +2,14 @@
 
 from __future__ import annotations
 
+import os
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.operators import similarity
+from remote_shuffle_spark.plans.index_store import compact_index
 from remote_shuffle_spark.sources.tables import load_table
 
 
@@ -618,7 +621,7 @@ def test_ivf_pq_compact_dynamic_overwrite_preserves_untouched_cells(spark, sf_sm
 
     content_before = topk()
     target = multi[0]
-    similarity.ivf_pq_compact_cells(spark, path, cells=[target])
+    compact_index(spark, os.path.join(path, "codes"), parts=[target])
     after = files_by_cell()
     assert len(after[target]) == 1
     for c, fs in before.items():

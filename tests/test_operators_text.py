@@ -396,11 +396,11 @@ def test_inverted_index_prunes_buckets_and_append_preserves(spark, tmp_path):
     import re
 
     from remote_shuffle_spark.operators.text import (
-        inverted_index_append,
         inverted_index_lookup,
         inverted_postings,
         write_inverted_index,
     )
+    from remote_shuffle_spark.plans.index_store import append_index
 
     docs = spark.createDataFrame(
         [
@@ -443,8 +443,8 @@ def test_inverted_index_prunes_buckets_and_append_preserves(spark, tmp_path):
         hashlib.md5(t.encode()).hexdigest()[:1]
         for t in ("alpha", "epsilon", "zeta")
     }
-    inverted_index_append(
-        inverted_postings(docs.filter("doc_id = 3"), "doc_id", "text"), inc
+    append_index(
+        spark, inc, inverted_postings(docs.filter("doc_id = 3"), "doc_id", "text")
     )
     after = _files(inc)
     for rel, mt in before.items():
@@ -473,12 +473,11 @@ def test_inverted_index_compact_preserves_untouched_buckets(spark, tmp_path):
     import os
 
     from remote_shuffle_spark.operators.text import (
-        inverted_index_append,
-        inverted_index_compact,
         inverted_index_lookup,
         inverted_postings,
         write_inverted_index,
     )
+    from remote_shuffle_spark.plans.index_store import append_index, compact_index
 
     docs = spark.createDataFrame(
         [
@@ -493,8 +492,8 @@ def test_inverted_index_compact_preserves_untouched_buckets(spark, tmp_path):
     write_inverted_index(
         inverted_postings(docs.filter("doc_id <> 3"), "doc_id", "text"), path
     )
-    inverted_index_append(
-        inverted_postings(docs.filter("doc_id = 3"), "doc_id", "text"), path
+    append_index(
+        spark, path, inverted_postings(docs.filter("doc_id = 3"), "doc_id", "text")
     )
     before_lookup = {
         (r.doc_id, r.n_matched, r.tf_sum)
@@ -513,7 +512,7 @@ def test_inverted_index_compact_preserves_untouched_buckets(spark, tmp_path):
         return out
 
     before = _files(path)
-    inverted_index_compact(spark, path, buckets=[target])
+    compact_index(spark, path, parts=[target])
     after = _files(path)
     for rel, mt in before.items():
         if not rel.startswith(f"bucket={target}"):

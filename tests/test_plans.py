@@ -475,6 +475,18 @@ def test_ivf_encode_corpus_side_has_no_shuffle(spark, sf_smoke):
     explain.assert_no_shuffle_exchange(S._ivf_encode(qdf, cellc, cents))
 
 
+def test_ivf_cell_stats_assigns_cells_without_an_id_exchange(spark, sf_smoke):
+    """ext_ivf_cell_stats assigns each vector its nearest cell per row
+    over one broadcast row of centroids (the IVFADC encode's argmin), so
+    no Exchange is keyed on the vector id: a crossJoin + groupBy("_id")
+    assignment would hash-shuffle the whole corpus."""
+    import __spark_entry__ as entrymod
+
+    plan = explain.physical_plan(entrymod.queries()["ext_ivf_cell_stats"](spark, sf_smoke))
+    parts = re.findall(r"Arguments: (hashpartitioning\([^)]*\))", plan)
+    assert parts and not [p for p in parts if re.search(r"[(, ]_id#", p)], parts
+
+
 def test_join_hints_reach_the_planner(spark, sf_smoke):
     """SHUFFLE_MERGE / SHUFFLE_HASH hints must actually pick the physical
     strategy (ext_join_strategy_hints proves result-equality; this proves

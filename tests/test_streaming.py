@@ -524,13 +524,14 @@ def test_late_split_dir_rebuilds_incomplete_cache(spark, sf_smoke, tmp_path, mon
     (ENOTEMPTY) and be handed back broken on every later call."""
     import hashlib
 
+    from remote_shuffle_spark.scratch import source_fingerprint
     from remote_shuffle_spark.streaming.latedrop import late_split_dir
 
     monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
     real = os.path.realpath(table_path(sf_smoke, "events"))
     st = os.stat(real)
     key = hashlib.sha1(
-        f"{real}|2|7|{st.st_size}|{st.st_mtime_ns}".encode()
+        f"{source_fingerprint()}|{real}|2|7|{st.st_size}|{st.st_mtime_ns}".encode()
     ).hexdigest()[:12]
     broken = tmp_path / f"rss_latedrop_{key}"
     broken.mkdir()
