@@ -23,6 +23,7 @@ from remote_shuffle_spark.operators import dedup, multimodal, similarity, text
 from remote_shuffle_spark.plans.index_store import append_index, compact_index, read_index
 from remote_shuffle_spark.queries import dec, declared
 from remote_shuffle_spark.scratch import cached_dir, file_stamp, run_dir
+from remote_shuffle_spark.sources.local import local_frame
 from remote_shuffle_spark.sources.tables import load_table
 from remote_shuffle_spark.streaming import windowed_event_counts
 from remote_shuffle_spark.streaming.run import run_to_completion
@@ -2245,7 +2246,8 @@ def ext_compaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(n_rows, 1 <= n_files <= 4)], "n_rows bigint, files_within_target boolean"
     )
 
@@ -3912,9 +3914,9 @@ def ext_mmr_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer arithmetic (lambda=1/2 objective scaled by 2).  The oracle
     UNROLLS the greedy rounds (each selection CTE MATERIALIZED — the
     k-core lesson); the Spark side prunes the pool distributedly
-    (subgroup top-k + TakeOrdered) and runs the greedy loop on the
-    collected pool^2 similarity matrix (bounded driver math, ivf_topk
-    precedent)."""
+    (per-partition top-k + TakeOrdered, one collect) and computes the
+    pool^2 similarity matrix and the greedy loop on the driver from the
+    collected 12 quantized vectors (bounded, exact integer math)."""
     from remote_shuffle_spark.operators.similarity import mmr_select
 
     emb = load_table(spark, sf_dir, "embeddings")
@@ -4054,8 +4056,8 @@ def ext_freshness_canary(spark: SparkSession, sf_dir: str) -> DataFrame:
     ignored by design."""
     del sf_dir  # data-independent by design
     return (
-        spark.createDataFrame(
-            _FRESHNESS_ROWS_MICRO, "d long, wt_micro long, wt_sq_micro long"
+        local_frame(
+            spark, _FRESHNESS_ROWS_MICRO, "d long, wt_micro long, wt_sq_micro long"
         )
         .orderBy("d")
     )
@@ -4113,8 +4115,8 @@ def ext_freshness_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events")
     ev = events.select("event_type", F.col("ts").cast("timestamp").alias("ts"))
     mx = ev.agg(F.max("ts").alias("m"))
-    wt_tbl = spark.createDataFrame(
-        _FRESHNESS_ROWS_MICRO, "d long, wt_micro long, wt_sq_micro long"
+    wt_tbl = local_frame(
+        spark, _FRESHNESS_ROWS_MICRO, "d long, wt_micro long, wt_sq_micro long"
     )
     aged = (
         ev.crossJoin(F.broadcast(mx))
@@ -4748,8 +4750,8 @@ def ext_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for r in top.collect()
     ]
-    return spark.createDataFrame(
-        out, "term string, exact_cnt bigint, cms_within_bound boolean"
+    return local_frame(
+        spark, out, "term string, exact_cnt bigint, cms_within_bound boolean"
     ).orderBy(F.col("exact_cnt").desc(), "term")
 
 
@@ -6814,7 +6816,8 @@ def ext_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
     )
     width_eps = math.e / a.width
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (
                 exact,
@@ -7068,7 +7071,7 @@ def ext_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     shutil.rmtree(d, ignore_errors=True)
-    return spark.createDataFrame(rows, "event_type string, n long, id_sum long")
+    return local_frame(spark, rows, "event_type string, n long, id_sum long")
 
 
 @declared(
@@ -9937,7 +9940,7 @@ def ext_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Same deterministic model and integer algebra as the IVFADC family;
     one broadcast assignment pass (the per-row argmin of the IVFADC
     encode, functions/vectors.py:nearest_int_l2 — no corpus shuffle) +
-    one cell aggregate."""
+    one cell aggregate, whose 8 counts also give the total."""
     emb = load_table(spark, sf_dir, "embeddings")
     qdf = emb.select(
         F.col("vec_id").alias("_id"),
@@ -9950,15 +9953,21 @@ def ext_ivf_cell_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     best = nearest_int_l2(F.col("_q"), F.col("_cells"))
     assigned = qdf.crossJoin(cells).select("_id", best["_cid"].alias("cell"), best["_cd"].alias("_d"))
-    tot = assigned.agg(F.count(F.lit(1)).alias("_n"))
+    # the total is the sum of the 8 per-cell counts (a window over the
+    # 8-row aggregate), so the corpus is assigned to cells once
     return (
-        assigned.crossJoin(F.broadcast(tot))
-        .groupBy("cell")
+        assigned.groupBy("cell")
         .agg(
             F.count(F.lit(1)).alias("n_vectors"),
-            F.expr("count(1) * 1000 DIV max(_n)").alias("permille"),
             F.sum("_d").cast("long").alias("sum_sq_dist"),
             F.max("_d").cast("long").alias("max_sq_dist"),
+        )
+        .select(
+            "cell",
+            "n_vectors",
+            F.expr("n_vectors * 1000 DIV sum(n_vectors) OVER ()").alias("permille"),
+            "sum_sq_dist",
+            "max_sq_dist",
         )
         .orderBy("cell")
     )
@@ -12577,7 +12586,8 @@ def ext_blocking_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).collect()[0]
 
     cand = _cand("len_band", "len_band").unionByName(_cand("first_token", "first_tok"))
-    found_df = spark.createDataFrame(
+    found_df = local_frame(
+        spark,
         [
             ("len_band", int(found["found_len"]), int(found["planted_total"])),
             ("first_token", int(found["found_ft"]), int(found["planted_total"])),
@@ -12637,7 +12647,8 @@ def ext_observe_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     piped.count()  # the action that drives the pipeline; metrics then final
     m = obs.get
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(m["n"]), int(m["price_cents"]), int(m["min_ok"]), int(m["max_ok"]))],
         "n long, price_cents long, min_ok long, max_ok long",
     )
@@ -12855,8 +12866,8 @@ def ext_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
         cents_total += int(m["id_checksum"] or 0)
     if n_batches < 2:
         raise RuntimeError(f"expected multi-batch drain, saw {n_batches}")
-    return spark.createDataFrame(
-        [(n_total, cents_total)], "n_events long, id_checksum long"
+    return local_frame(
+        spark, [(n_total, cents_total)], "n_events long, id_checksum long"
     )
 
 
@@ -12945,8 +12956,8 @@ def ext_format_roundtrip_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
-        [(r["fmt"], r["n_rows"], r["id_sum"], r["chars_sum"]) for r in legs],
+    return local_frame(
+        spark, [(r["fmt"], r["n_rows"], r["id_sum"], r["chars_sum"]) for r in legs],
         "fmt string, n_rows long, id_sum long, chars_sum long",
     ).orderBy("fmt")
 
@@ -13891,7 +13902,8 @@ def ext_malformed_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).collect()[0]
     finally:
         shutil.rmtree(root, ignore_errors=True)
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [tuple(int(out[c]) for c in
                ("n_good", "n_quarantined", "chars_good", "quarantined_id_sum"))],
         "n_good long, n_quarantined long, chars_good long, quarantined_id_sum long",
@@ -14233,7 +14245,8 @@ def ext_graph_eccentricity(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats = l2.agg(
         F.max("level").alias("diameter_lb"), F.count(F.lit(1)).alias("n_reached")
     ).collect()[0]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [(int(v0), int(v1), int(ecc_start), int(stats["diameter_lb"]),
           int(stats["n_reached"]))],
         "start_vertex long, far_vertex long, ecc_start int, diameter_lb int, "
@@ -14348,8 +14361,8 @@ def ext_inverted_index_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = inverted_index_lookup(spark, path, _INVIDX_TERMS, k=10).collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        [(r["doc_id"], r["n_matched"], r["tf_sum"]) for r in out],
+    return local_frame(
+        spark, [(r["doc_id"], r["n_matched"], r["tf_sum"]) for r in out],
         "doc_id long, n_matched long, tf_sum long",
     )
 
@@ -14421,8 +14434,8 @@ def ext_inverted_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = inverted_index_lookup(spark, path, _INVIDX_TERMS, k=10).collect()
     finally:
         shutil.rmtree(path, ignore_errors=True)
-    return spark.createDataFrame(
-        [(r["doc_id"], r["n_matched"], r["tf_sum"]) for r in out],
+    return local_frame(
+        spark, [(r["doc_id"], r["n_matched"], r["tf_sum"]) for r in out],
         "doc_id long, n_matched long, tf_sum long",
     )
 
@@ -14484,8 +14497,8 @@ def ext_stream_index_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         out = inverted_index_lookup(spark, idx, _INVIDX_TERMS, k=10).collect()
     finally:
         shutil.rmtree(base, ignore_errors=True)
-    return spark.createDataFrame(
-        [(r["doc_id"], r["n_matched"], r["tf_sum"]) for r in out],
+    return local_frame(
+        spark, [(r["doc_id"], r["n_matched"], r["tf_sum"]) for r in out],
         "doc_id long, n_matched long, tf_sum long",
     )
 

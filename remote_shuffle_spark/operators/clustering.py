@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.functions.vectors import to_double_array
+from remote_shuffle_spark.sources.local import local_frame
 
 
 def kmeans_centroids(
@@ -58,7 +59,7 @@ def kmeans_centroids(
     rows = [
         (i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())
     ]
-    return spark.createDataFrame(rows, ["cid", "cvec"])
+    return local_frame(spark, rows, "cid long, cvec array<double>")
 
 
 def label_centroids(

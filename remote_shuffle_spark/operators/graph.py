@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from remote_shuffle_spark.sources.local import local_frame
+
 
 def connected_components(
     edges: DataFrame,
@@ -258,7 +260,7 @@ def bfs_levels(
         .localCheckpoint(eager=True)
     )
     spark = sym.sparkSession
-    levels = spark.createDataFrame([(source, 0)], "u long, level int")
+    levels = local_frame(spark, [(source, 0)], "u long, level int")
     frontier = levels
     for k in range(1, max_iter + 1):
         frontier = (
@@ -529,8 +531,8 @@ def kcore_peel(
             .first()
         )
         stats.append((r, row.removed or 0, row.n_v, row.n_e))
-    return spark.createDataFrame(
-        stats,
+    return local_frame(
+        spark, stats,
         "round int, removed_vertices long, remaining_vertices long, "
         "remaining_edges long",
     )

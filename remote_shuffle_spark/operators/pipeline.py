@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from remote_shuffle_spark.sources.local import local_frame
+
 
 def deterministic_split(
     df: DataFrame,
@@ -63,9 +65,8 @@ def deterministic_split(
 def with_global_index(
     df: DataFrame,
     *,
+    order_by: list,
     out_col: str = "row_index",
-    order_by: list | None = None,
-    allow_python_path: bool = False,
 ) -> DataFrame:
     """Contiguous 0-based global row index without a global sort.
 
@@ -73,79 +74,39 @@ def with_global_index(
     broadcast the cumulative offsets → per-partition local index + offset.
     O(rows) work, no single-task bottleneck.
 
-    ``order_by`` given (list of columns/Column expressions that totally
-    order rows WITHIN a partition — e.g. the keys of the
-    repartitionByRange+sortWithinPartitions the caller just did): the
-    local index is a per-partition ``row_number()`` window — pure JVM,
-    no Python in the data path.  The input is localCheckpoint'ed first
+    ``order_by`` (list of columns/Column expressions that totally order
+    rows WITHIN a partition — e.g. the keys of the
+    repartitionByRange+sortWithinPartitions the caller just did) drives
+    the local index, a per-partition ``row_number()`` window — pure JVM,
+    no Python in the data path.  It is required: an unordered partition
+    has no reproducible numbering.  The input is localCheckpoint'ed first
     (lazily — the count phase's collect materializes it), both so the
     count phase and the window phase see identical partitioning (range
     boundary sampling is per-execution) and so the window's hash
     exchange on the partition id reads materialized blocks.
-
-    ``order_by=None`` falls back to tagging rows in raw iterator order
-    via the RDD API — the only way to number an UNORDERED partition —
-    which round-trips every row through Python: fine for fixtures,
-    wrong at corpus scale.  Because that's a silent scale-killer when
-    reached by accident, it RAISES unless ``allow_python_path=True`` is
-    passed explicitly (prefer an explicit ``order_by``).
     """
     from pyspark.sql import Window as W
-    from pyspark.sql.types import LongType, StructField, StructType
 
     spark = df.sparkSession
-
-    if order_by is not None:
-        # lazy checkpoint: the counts collect right below is the frame's
-        # sole first consumer, so it computes AND persists the frame in
-        # ONE job (eager + collect paid two); the window phase then reads
-        # the same persisted blocks — partitioning is pinned identically.
-        part = df.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=False)
-        counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
-        offsets, running = {}, 0
-        for r in sorted(counts, key=lambda r: r._pid):
-            offsets[r._pid] = running
-            running += r._n
-        offsets_df = F.broadcast(
-            spark.createDataFrame(
-                [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
-            )
+    # lazy checkpoint: the counts collect right below is the frame's
+    # sole first consumer, so it computes AND persists the frame in
+    # ONE job (eager + collect paid two); the window phase then reads
+    # the same persisted blocks — partitioning is pinned identically.
+    part = df.withColumn("_pid", F.spark_partition_id()).localCheckpoint(eager=False)
+    counts = part.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n")).collect()
+    offsets, running = [], 0
+    for r in sorted(counts, key=lambda r: r._pid):
+        offsets.append((int(r._pid), running))
+        running += int(r._n)
+    offsets_df = F.broadcast(local_frame(spark, offsets, "_pid int, _offset long"))
+    w = W.partitionBy("_pid").orderBy(*order_by)
+    return (
+        part.join(offsets_df, "_pid")
+        .withColumn(
+            out_col, (F.row_number().over(w) - 1 + F.col("_offset")).cast("long")
         )
-        w = W.partitionBy("_pid").orderBy(*order_by)
-        return (
-            part.join(offsets_df, "_pid")
-            .withColumn(
-                out_col, (F.row_number().over(w) - 1 + F.col("_offset")).cast("long")
-            )
-            .drop("_pid", "_offset")
-        )
-
-    if not allow_python_path:
-        raise ValueError(
-            "with_global_index(order_by=None) numbers rows via a per-row "
-            "Python RDD pass — O(rows) through the Python worker, wrong at "
-            "corpus scale. Pass order_by=[...] for the JVM window path, or "
-            "allow_python_path=True to opt into the fallback for small data."
-        )
-
-    schema = StructType(df.schema.fields + [StructField(out_col, LongType(), False)])
-
-    counts = df.rdd.mapPartitionsWithIndex(
-        lambda pid, it: iter([(pid, sum(1 for _ in it))])
-    ).collect()
-    offsets = {}
-    running = 0
-    for pid, n in sorted(counts):
-        offsets[pid] = running
-        running += n
-    boffsets = spark.sparkContext.broadcast(offsets)
-
-    def tag(pid, it):
-        base = boffsets.value[pid]
-        for i, row in enumerate(it):
-            yield (*row, base + i)
-
-    return spark.createDataFrame(df.rdd.mapPartitionsWithIndex(tag), schema)
+        .drop("_pid", "_offset")
+    )
 
 
 def quantile_buckets(
@@ -298,7 +259,8 @@ def chunk_sequences(
         offsets[r._pid] = running
         running += r._w
     offsets_df = F.broadcast(
-        spark.createDataFrame(
+        local_frame(
+            spark,
             [(int(p), int(o)) for p, o in offsets.items()], "_pid int, _offset long"
         )
     )
@@ -380,7 +342,7 @@ def running_total(
         + [StructField("_pid", IntegerType()), StructField("_offset", LongType())]
     )
     offsets_df = F.broadcast(
-        spark.createDataFrame(rows, schema).withColumnsRenamed(
+        local_frame(spark, rows, schema).withColumnsRenamed(
             {c: f"_g_{c}" for c in groups}
         )
     )

@@ -48,6 +48,7 @@ from remote_shuffle_spark.plans.index_store import (
     read_index,
     write_index,
 )
+from remote_shuffle_spark.sources.local import local_frame
 
 # Cosines are rounded to this many digits BEFORE ranking or thresholding,
 # so the selected ids are reproducible by an engine accumulating the dot
@@ -807,33 +808,36 @@ def mmr_select(
     Returns (rank, id, rel, mmr_score) for the ``k`` selected items
     (rank 1's mmr_score is its relevance — no selected set yet).
 
-    Scale shape: relevance is one narrow corpus pass against the
-    broadcast query; the candidate POOL (top ``pool`` by relevance) is
-    one TakeOrdered (per-partition top-``pool``, then a merge — no
-    corpus-wide sort); the pool's pairwise similarity matrix (pool^2
-    integer dots) is computed distributedly and the greedy loop runs on
-    that COLLECTED bounded matrix — driver-side math over a bounded
-    object, never a corpus-sized collect."""
+    Scale shape: two jobs.  The quantized query vector (the first row
+    of ``query_df``) comes to the driver and enters the relevance pass
+    as a literal; the candidate POOL (top ``pool`` by relevance) is one
+    narrow corpus pass plus a TakeOrdered (per-partition top-``pool``,
+    then a merge — no corpus-wide sort, no join) and the one pool
+    collect.  The pool's pairwise similarities (pool^2 integer dots,
+    exact on the collected Python ints) and the greedy loop are
+    driver-side math over that bounded object, never a corpus-sized
+    collect; the answer goes back as a ``LocalTableScan``."""
     spark = df.sparkSession
-    q = F.broadcast(query_df.select(quantize_floor(vec_col, QSCALE).alias("_mq")).limit(1))
-    pool_df = (
+    id_type = df.schema[id_col].dataType.simpleString()
+    schema = f"rank int, {id_col} {id_type}, rel long, mmr_score long"
+    q = query_df.select(quantize_floor(vec_col, QSCALE).alias("_mq")).take(1)
+    if not q:
+        return local_frame(spark, [], schema)
+    pool_rows = (
         _quantized(df, id_col, vec_col, "_id", "_xq")
-        .crossJoin(q)
-        .select("_id", "_xq", int_dot(F.col("_xq"), F.col("_mq")).alias("_rel"))
+        .select("_id", "_xq", int_dot(F.col("_xq"), F.lit(q[0]._mq)).alias("_rel"))
         .orderBy(F.col("_rel").desc(), "_id")
         .limit(pool)
-        .localCheckpoint(eager=True)  # bounded: `pool` rows
-    )
-    a = pool_df.select(F.col("_id").alias("_a"), F.col("_xq").alias("_qa"))
-    b = pool_df.select(F.col("_id").alias("_b"), F.col("_xq").alias("_qb"))
-    sims = {
-        (r._a, r._b): r._s
-        for r in a.crossJoin(b)
-        .filter(F.col("_a") != F.col("_b"))
-        .select("_a", "_b", int_dot(F.col("_qa"), F.col("_qb")).alias("_s"))
         .collect()
+    )
+    vecs = {r._id: r._xq for r in pool_rows}
+    sims = {
+        (a, b): sum(x * y for x, y in zip(vecs[a], vecs[b]))
+        for a in vecs
+        for b in vecs
+        if a != b
     }
-    cands = {r._id: r._rel for r in pool_df.select("_id", "_rel").collect()}
+    cands = {r._id: r._rel for r in pool_rows}
 
     selected: list[tuple[int, int, int, int]] = []  # (rank, id, rel, score)
     chosen: list[int] = []
@@ -850,10 +854,7 @@ def mmr_select(
         _, cid, rel, score = best
         chosen.append(cid)
         selected.append((rank, cid, rel, score))
-    id_type = df.schema[id_col].dataType.simpleString()
-    return spark.createDataFrame(
-        selected, f"rank int, {id_col} {id_type}, rel long, mmr_score long"
-    )
+    return local_frame(spark, selected, schema)
 
 
 # --------------------------------------------------------------------------

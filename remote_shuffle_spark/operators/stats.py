@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from remote_shuffle_spark.sources.local import local_frame
+
 # Input values are cast to DECIMAL(18,6) (covers TPC-H money/quantity
 # magnitudes).  Products deliberately pair a DECIMAL(19,6) left operand
 # with a DECIMAL(18,6) right one: 19+18+1 = 38 keeps Spark's product at
@@ -403,7 +405,7 @@ def histogram_cdf(
     if not offsets:
         return part.withColumn(cum_col, F.lit(None).cast("long")).drop("_pid")
     offsets_df = F.broadcast(
-        spark.createDataFrame(offsets, "_pid int, _offset long")
+        local_frame(spark, offsets, "_pid int, _offset long")
     )
     w = (
         W.partitionBy("_pid")

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from remote_shuffle_spark.functions.hashing import normalized_text, rolling_fingerprint, tokens
 from remote_shuffle_spark.plans.index_store import by_partition, read_index, write_index
+from remote_shuffle_spark.sources.local import local_frame
 
 # Tiny deterministic marker-word profiles for the language-ID heuristic.
 # A production profile would be trained character n-gram frequencies
@@ -661,8 +662,8 @@ def bpe_train(
             F.sum(F.size(F.split("repr", r"\|")) * F.col("cnt")).alias("t")
         ).collect()[0].t
         out_rows.append((rnd, a, b, pc, int(total)))
-    return spark.createDataFrame(
-        out_rows,
+    return local_frame(
+        spark, out_rows,
         "round int, pair_a string, pair_b string, pair_count bigint, "
         "corpus_symbols_after bigint",
     )

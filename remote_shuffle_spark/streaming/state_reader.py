@@ -25,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.scratch import run_dir
+from remote_shuffle_spark.sources.local import local_frame
 from remote_shuffle_spark.streaming.run import run_to_completion
 
 
@@ -79,4 +80,4 @@ def dedup_state_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         keys = read_state_keys(spark, ckpt, ["user_id"]).collect()
     finally:
         shutil.rmtree(ckpt, ignore_errors=True)
-    return spark.createDataFrame(keys, "user_id long").orderBy("user_id")
+    return local_frame(spark, keys, "user_id long").orderBy("user_id")

@@ -43,17 +43,17 @@ def test_deterministic_split_rejects_bad_weights(spark, sf_smoke):
 
 def test_with_global_index(spark, sf_smoke):
     docs = load_table(spark, sf_smoke, "documents").repartition(13)
-    idx = P.with_global_index(docs, allow_python_path=True)
+    idx = P.with_global_index(docs, order_by=["doc_id"])
     rows = idx.select("row_index").collect()
     got = sorted(r.row_index for r in rows)
     assert got == list(range(docs.count()))
 
 
-def test_with_global_index_python_fallback_is_opt_in(spark, sf_smoke):
-    """order_by=None without an explicit opt-in must raise: the RDD
-    fallback round-trips every row through Python (VERDICT r2 #2)."""
+def test_with_global_index_requires_order_by(spark, sf_smoke):
+    """There is no unordered numbering: the per-row Python RDD fallback
+    is gone, so a call without ``order_by`` fails before any job runs."""
     docs = load_table(spark, sf_smoke, "documents")
-    with pytest.raises(ValueError, match="allow_python_path"):
+    with pytest.raises(TypeError, match="order_by"):
         P.with_global_index(docs)
 
 
@@ -199,7 +199,7 @@ def test_interleave_datasets_deterministic_and_tagged(spark, sf_correct):
         P.interleave_datasets({"x": (docs, 1.5)}, id_col="doc_id")
 
 
-def test_with_global_index_jvm_path_matches_rdd_path(spark, sf_smoke):
+def test_with_global_index_jvm_path_matches_driver_ranks(spark, sf_smoke):
     from remote_shuffle_spark.operators import pipeline as P
     from remote_shuffle_spark.sources.tables import load_table
     from pyspark.sql import functions as F
@@ -207,11 +207,8 @@ def test_with_global_index_jvm_path_matches_rdd_path(spark, sf_smoke):
     docs = load_table(spark, sf_smoke, "documents").select("doc_id")
     ordered = docs.repartitionByRange(5, F.col("doc_id")).sortWithinPartitions("doc_id")
     jvm = {r.doc_id: r.row_index for r in P.with_global_index(ordered, order_by=["doc_id"]).collect()}
-    rdd = {
-        r.doc_id: r.row_index
-        for r in P.with_global_index(ordered, allow_python_path=True).collect()
-    }
-    assert jvm == rdd
+    ranks = {d: i for i, d in enumerate(sorted(r.doc_id for r in docs.collect()))}
+    assert jvm == ranks
     # contiguous 0..n-1 and monotone in doc_id
     n = len(jvm)
     assert sorted(jvm.values()) == list(range(n))

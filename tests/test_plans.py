@@ -487,6 +487,18 @@ def test_ivf_cell_stats_assigns_cells_without_an_id_exchange(spark, sf_smoke):
     assert parts and not [p for p in parts if re.search(r"[(, ]_id#", p)], parts
 
 
+def test_ivf_cell_stats_assigns_the_corpus_once(spark, sf_smoke):
+    """The per-mille total comes from the 8 per-cell counts, not from a
+    second aggregate over the assigned corpus: the plan holds exactly one
+    BroadcastNestedLoopJoin (the assignment against the centroid row)."""
+    import __spark_entry__ as entrymod
+
+    plan = explain.physical_plan(
+        entrymod.queries()["ext_ivf_cell_stats"](spark, sf_smoke), mode="simple"
+    )
+    assert len(re.findall(r"BroadcastNestedLoopJoin ", plan)) == 1, plan
+
+
 def test_join_hints_reach_the_planner(spark, sf_smoke):
     """SHUFFLE_MERGE / SHUFFLE_HASH hints must actually pick the physical
     strategy (ext_join_strategy_hints proves result-equality; this proves

@@ -1,11 +1,14 @@
-"""One stream runner and one scratch owner, enforced.
+"""One stream runner, one scratch owner and one frame builder, enforced.
 
 Every stream in the package starts and stops in ``streaming/run.py`` (the
-one place that picks a drain and always stops the query), and every scratch
-path comes from ``scratch.py`` (the one owner of the temp dir).  This test
+one place that picks a drain and always stops the query), every scratch
+path comes from ``scratch.py`` (the one owner of the temp dir), and every
+driver-built frame comes from ``sources/local.py`` (Arrow ``LocalTableScan``,
+never a pickled-RDD scan that needs a Python worker of its own).  This test
 walks the package AST outside ``vendor/`` and fails by file:line on a stream
-start or drain outside the runner, or a ``tempfile`` path outside the
-scratch owner, so neither discipline can regress silently.
+start or drain outside the runner, a ``tempfile`` path outside the scratch
+owner, or ``createDataFrame`` / ``parallelize`` / ``.rdd`` outside the frame
+builder, so none of the three disciplines can regress silently.
 """
 
 import ast
@@ -15,11 +18,16 @@ PACKAGE = pathlib.Path(__file__).resolve().parent.parent / "remote_shuffle_spark
 
 STREAM_ATTRS = {"writeStream", "processAllAvailable", "awaitTermination"}
 TEMP_ATTRS = {"gettempdir", "mkdtemp", "mkstemp"}
-OWNED = {"streaming/run.py": STREAM_ATTRS, "scratch.py": TEMP_ATTRS}
+FRAME_ATTRS = {"createDataFrame", "parallelize", "rdd"}
+OWNED = {
+    "streaming/run.py": STREAM_ATTRS,
+    "scratch.py": TEMP_ATTRS,
+    "sources/local.py": FRAME_ATTRS,
+}
 
 
 def _offenders(tree: ast.AST, rel: str) -> list[str]:
-    forbidden = (STREAM_ATTRS | TEMP_ATTRS) - OWNED.get(rel, set())
+    forbidden = (STREAM_ATTRS | TEMP_ATTRS | FRAME_ATTRS) - OWNED.get(rel, set())
     hits = []
     for node in ast.walk(tree):
         if isinstance(node, ast.Attribute) and node.attr in forbidden:
@@ -42,7 +50,8 @@ def test_streams_and_scratch_have_one_owner():
         offenders += _offenders(ast.parse(path.read_text(), filename=rel), rel)
     assert not offenders, (
         "run streams through streaming/run.py:run_to_completion and take "
-        "scratch paths from scratch.py (cached_dir / run_dir):\n"
+        "scratch paths from scratch.py (cached_dir / run_dir) and build "
+        "driver-side frames with sources/local.py:local_frame:\n"
         + "\n".join(offenders)
     )
 
@@ -57,6 +66,9 @@ def test_guard_actually_detects():
         "q = df.writeStream.format('memory').start()\n"
         "q.processAllAvailable()\n"
         "q.awaitTermination(5)\n"
+        "a = spark.createDataFrame(rows, 'x int')\n"
+        "b = spark.sparkContext.parallelize(rows)\n"
+        "c = df.rdd.map(f)\n"
     )
     hits = _offenders(ast.parse(src), "streaming/x.py")
     assert sorted(hits) == [
@@ -65,6 +77,10 @@ def test_guard_actually_detects():
         "streaming/x.py:4 .writeStream",
         "streaming/x.py:5 .processAllAvailable",
         "streaming/x.py:6 .awaitTermination",
+        "streaming/x.py:7 .createDataFrame",
+        "streaming/x.py:8 .parallelize",
+        "streaming/x.py:9 .rdd",
     ]
     assert _offenders(ast.parse("q.processAllAvailable()"), "streaming/run.py") == []
     assert _offenders(ast.parse("tempfile.mkdtemp()"), "scratch.py") == []
+    assert _offenders(ast.parse("spark.createDataFrame(t, s)"), "sources/local.py") == []
