@@ -20,7 +20,12 @@ from pyspark.sql import functions as F
 
 from remote_shuffle_spark.functions.vectors import int_dot, nearest_int_l2, quantize_floor
 from remote_shuffle_spark.operators import dedup, multimodal, similarity, text
-from remote_shuffle_spark.plans.index_store import append_index, compact_index, read_index
+from remote_shuffle_spark.plans.index_store import (
+    append_index,
+    compact_index,
+    read_index,
+    write_index,
+)
 from remote_shuffle_spark.queries import dec, declared
 from remote_shuffle_spark.scratch import cached_dir, file_stamp, run_dir
 from remote_shuffle_spark.sources.local import local_frame
@@ -6119,7 +6124,7 @@ def ext_stream_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     1 hour with a single-batch source means nothing is ever late, so
     stream ≡ batch and the oracle is the same epoch-seconds hopping SQL
     as ext_hopping_window."""
-    from remote_shuffle_spark.sources.tables import table_path
+    from remote_shuffle_spark.sources.tables import table_path, table_schema
     from remote_shuffle_spark.streaming.source import (
         event_time,
         file_stream_dir,
@@ -6128,10 +6133,10 @@ def ext_stream_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
-    stream = scoped.readStream.schema(batch.schema).parquet(file_stream_dir(path))
+    schema = table_schema(scoped, path)
+    stream = scoped.readStream.schema(schema).parquet(file_stream_dir(path))
     agg = (
-        stream.withColumn("ts", event_time(dict(batch.dtypes).get("ts")))
+        stream.withColumn("ts", event_time(schema["ts"].dataType.simpleString()))
         .withWatermark("ts", "1 hour")
         .groupBy(F.window("ts", "30 minutes", "15 minutes").alias("w"), "event_type")
         .agg(F.count(F.lit(1)).alias("n"))
@@ -7878,9 +7883,7 @@ def ext_metadata_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_index is a dense 0..n-1 permutation per file (count == distinct
     == max+1) and file attribution is exact; the oracle states the
     closed form (single-file fixture tables)."""
-    from remote_shuffle_spark.sources.tables import table_path
-
-    df = spark.read.parquet(table_path(sf_dir, "orders"))
+    df = load_table(spark, sf_dir, "orders")
     return (
         df.groupBy(F.col("_metadata.file_name").alias("file_name"))
         .agg(
@@ -10038,7 +10041,15 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_minhash_band_index(
             minhash_band_index(corpus, "doc_id", "text"), idx, num_files=4
         )
-        corpus.limit(0).write.parquet(extra)  # empty corpus-additions store
+        # the corpus-additions and statuses stores start empty; every
+        # generation appends to them under a manifest and every read-back
+        # verifies it, so a lost part file fails instead of shrinking them
+        write_index(corpus.limit(0), extra, layout=None)
+        write_index(
+            local_frame(spark, [], "doc_id long, status string, generation string"),
+            statuses,
+            layout=None,
+        )
 
         # exact-tier hash set of the BASE corpus, computed once for the
         # whole streaming run (lazy checkpoint — batch 1's anti-join
@@ -10055,7 +10066,7 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
         def handle(batch_df: DataFrame, batch_id: int) -> None:
             gen = f"g{batch_id + 1}"
-            extra_df = spark.read.parquet(extra)
+            extra_df = read_index(spark, extra)
             corpus_now = corpus.unionByName(extra_df)
             res = (
                 incremental_minhash_dedup(
@@ -10071,14 +10082,14 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .withColumn("generation", F.lit(gen))
                 .localCheckpoint(eager=True)  # feeds statuses write + new1
             )
-            res.write.mode("append").parquet(statuses)
+            append_index(spark, statuses, res)
             new_docs = batch_df.join(
                 res.filter(F.col("status") == "new").select("doc_id"),
                 "doc_id",
                 "left_semi",
             ).localCheckpoint(eager=True)  # feeds refresh + corpus store
             minhash_band_index_refresh(spark, idx, new_docs, "doc_id", "text")
-            new_docs.write.mode("append").parquet(extra)
+            append_index(spark, extra, new_docs)
 
         def run_once() -> None:
             run_to_completion(
@@ -10095,7 +10106,7 @@ def ext_stream_ingest_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         run_once()
 
         return (
-            spark.read.parquet(statuses)
+            read_index(spark, statuses)
             .groupBy("generation", "status")
             .agg(
                 F.count(F.lit(1)).alias("n_docs"),

@@ -37,7 +37,7 @@ from pyspark.sql.window import Window
 
 from remote_shuffle_spark.operators.upsert import merge_upsert_ordered
 from remote_shuffle_spark.scratch import cached_dir, run_dir
-from remote_shuffle_spark.sources.tables import table_path
+from remote_shuffle_spark.sources.tables import table_path, table_schema
 from remote_shuffle_spark.streaming.run import run_to_completion
 from remote_shuffle_spark.streaming.source import event_time, stream_session
 from remote_shuffle_spark.streaming.splitutil import materialize_split_files
@@ -98,11 +98,11 @@ def streaming_cdc_upsert(
     """
     scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
-    ts = event_time(dict(batch.dtypes).get("ts"))
+    schema = table_schema(scoped, path)
+    ts = event_time(schema["ts"].dataType.simpleString())
     split_dir = split_stream_dir(scoped, path, n_splits=n_splits)
     stream = (
-        scoped.readStream.schema(batch.schema)
+        scoped.readStream.schema(schema)
         .option("maxFilesPerTrigger", 1)
         .parquet(split_dir)
         .select("event_id", ts.alias("ts"), F.col(key), "event_type", "value")

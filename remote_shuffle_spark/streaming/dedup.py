@@ -15,7 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.scratch import cached_dir, file_stamp
-from remote_shuffle_spark.sources.tables import table_path
+from remote_shuffle_spark.sources.tables import load_table, table_path, table_schema
 from remote_shuffle_spark.streaming.latedrop import _ordered_events, assign_arrival
 from remote_shuffle_spark.streaming.run import run_to_completion
 from remote_shuffle_spark.streaming.source import (
@@ -40,10 +40,10 @@ def streaming_distinct(
     """
     scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
+    schema = table_schema(scoped, path)
     stream_dir = file_stream_dir(path)
-    stream = scoped.readStream.schema(batch.schema).parquet(stream_dir)
-    ts = event_time(dict(batch.dtypes).get("ts"))
+    stream = scoped.readStream.schema(schema).parquet(stream_dir)
+    ts = event_time(schema["ts"].dataType.simpleString())
     deduped = (
         stream.withColumn("ts", ts)
         .withWatermark("ts", watermark)
@@ -129,7 +129,7 @@ def doc_split_dir(spark: SparkSession, sf_dir: str, *, n_splits: int = 4) -> str
     src = table_path(sf_dir, "documents")
 
     def build(tmp: str) -> None:
-        docs = spark.read.parquet(src).select(
+        docs = load_table(spark, sf_dir, "documents").select(
             "doc_id",
             "text",
             F.timestamp_micros(

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from remote_shuffle_spark.sources.tables import load_table, table_path
+from remote_shuffle_spark.sources.tables import load_table, table_path, table_schema
 from remote_shuffle_spark.streaming.run import run_to_completion
 from remote_shuffle_spark.streaming.source import file_stream_dir, stream_session
 
@@ -38,8 +38,7 @@ def enriched_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
-    batch_schema = scoped.read.parquet(path).schema
-    stream = scoped.readStream.schema(batch_schema).parquet(file_stream_dir(path))
+    stream = scoped.readStream.schema(table_schema(scoped, path)).parquet(file_stream_dir(path))
 
     dim = (
         load_table(scoped, sf_dir, "customer")

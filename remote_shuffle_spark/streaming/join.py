@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from remote_shuffle_spark.sources.tables import table_path
+from remote_shuffle_spark.sources.tables import table_path, table_schema
 from remote_shuffle_spark.streaming.run import run_to_completion
 from remote_shuffle_spark.streaming.source import (
     event_time,
@@ -32,14 +32,14 @@ def _attribution_join(
     drained and returned as (user_id, view_id, purchase_id)."""
     scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
+    schema = table_schema(scoped, path)
     stream_dir = file_stream_dir(path)
 
     def _side(kind: str, prefix: str) -> DataFrame:
         s = (
-            scoped.readStream.schema(batch.schema)
+            scoped.readStream.schema(schema)
             .parquet(stream_dir)
-            .withColumn("ts", event_time(dict(batch.dtypes).get("ts")))
+            .withColumn("ts", event_time(schema["ts"].dataType.simpleString()))
             .filter(F.col("event_type") == kind)
             .select(
                 F.col("user_id").alias(f"{prefix}_user"),

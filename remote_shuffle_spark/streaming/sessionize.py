@@ -152,7 +152,7 @@ def sessionize_streaming_table(
     equal batch sessionization minus each user's last session — which is
     SQL-expressible, so this custom stateful operator is oracle-checkable.
     """
-    from remote_shuffle_spark.sources.tables import table_path
+    from remote_shuffle_spark.sources.tables import table_path, table_schema
     from remote_shuffle_spark.streaming.run import run_to_completion
     from remote_shuffle_spark.streaming.source import (
         event_time,
@@ -162,12 +162,12 @@ def sessionize_streaming_table(
 
     scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
+    schema = table_schema(scoped, path)
     stream_dir = file_stream_dir(path)
     stream = (
-        scoped.readStream.schema(batch.schema)
+        scoped.readStream.schema(schema)
         .parquet(stream_dir)
-        .withColumn("ts", event_time(dict(batch.dtypes).get("ts")))
+        .withColumn("ts", event_time(schema["ts"].dataType.simpleString()))
     )
     out = sessionize_streaming(stream, gap_minutes=gap_minutes)
     table = run_to_completion(out).table

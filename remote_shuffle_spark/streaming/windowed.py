@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from remote_shuffle_spark.sources.tables import table_path
+from remote_shuffle_spark.sources.tables import table_path, table_schema
 from remote_shuffle_spark.streaming.run import run_to_completion
 from remote_shuffle_spark.streaming.source import (
     event_time,
@@ -55,12 +55,12 @@ def windowed_event_agg(
     (memory drain above, parquet sinks in streaming.sink)."""
     scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
+    schema = table_schema(scoped, path)
     # the file-stream source requires a directory: expose the single
     # fixture file through a symlink dir (testdata itself is read-only)
     stream_dir = file_stream_dir(path)
-    stream = scoped.readStream.schema(batch.schema).parquet(stream_dir)
-    ts = event_time(dict(batch.dtypes).get("ts"))
+    stream = scoped.readStream.schema(schema).parquet(stream_dir)
+    ts = event_time(schema["ts"].dataType.simpleString())
     agg = (
         stream.withColumn("ts", ts)
         .withWatermark("ts", watermark)
@@ -126,11 +126,11 @@ def session_window_stream(
     n_events) as formatted strings/longs, batch-oracle-comparable."""
     scoped = stream_session(spark, 8)
     path = table_path(sf_dir, "events")
-    batch = scoped.read.parquet(path)
+    schema = table_schema(scoped, path)
     stream = (
-        scoped.readStream.schema(batch.schema)
+        scoped.readStream.schema(schema)
         .parquet(file_stream_dir(path))
-        .withColumn("ts", event_time(dict(batch.dtypes).get("ts")))
+        .withColumn("ts", event_time(schema["ts"].dataType.simpleString()))
         .withWatermark("ts", watermark)
     )
     # gap_expr (a per-event Column, e.g. event-type-dependent timeouts)

@@ -1,5 +1,6 @@
 from __future__ import annotations
 
+import itertools
 import sys
 from pathlib import Path
 
@@ -18,6 +19,22 @@ def pytest_configure(config):
         "markers",
         "sf01_gate: rotating sf0.1 oracle spot-gate (scale-dependent semantics)",
     )
+
+
+_JOB_GROUPS = itertools.count()
+
+
+def jobs_in(spark, fn) -> list[int]:
+    """Ids of the Spark jobs ``fn()`` submits, read through a job group of
+    its own (public ``setJobGroup`` + ``statusTracker``, no py4j handle)."""
+    sc = spark.sparkContext
+    group = f"jobs_in_{next(_JOB_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return sc.statusTracker().getJobIdsForGroup(group)
 
 
 @pytest.fixture(scope="session")

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from remote_shuffle_spark.plans import explain
 from remote_shuffle_spark.sources.local import local_frame
 from remote_shuffle_spark.sources.tables import load_table
+from tests.conftest import jobs_in
 
 ALL_TYPES = "i int, l long, b bigint, f boolean, s string, v array<double>"
 ROWS = [
@@ -65,21 +66,17 @@ def test_mmr_select_builds_with_at_most_two_jobs(spark, sf_smoke):
     from remote_shuffle_spark.operators.similarity import mmr_select
 
     emb = load_table(spark, sf_smoke, "embeddings")
-    sc = spark.sparkContext
-    group = "test_mmr_select_build_jobs"
-    sc.setJobGroup(group, group)
-    try:
-        mmr_select(
+    jobs = jobs_in(
+        spark,
+        lambda: mmr_select(
             emb.filter(F.col("vec_id") != 0),
             "vec_id",
             "embedding",
             emb.filter(F.col("vec_id") == 0),
             k=4,
             pool=12,
-        )
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    jobs = sc.statusTracker().getJobIdsForGroup(group)
+        ),
+    )
     assert 1 <= len(jobs) <= 2, jobs
 
 

@@ -4,11 +4,14 @@ Every stream in the package starts and stops in ``streaming/run.py`` (the
 one place that picks a drain and always stops the query), every scratch
 path comes from ``scratch.py`` (the one owner of the temp dir), and every
 driver-built frame comes from ``sources/local.py`` (Arrow ``LocalTableScan``,
-never a pickled-RDD scan that needs a Python worker of its own).  This test
-walks the package AST outside ``vendor/`` and fails by file:line on a stream
-start or drain outside the runner, a ``tempfile`` path outside the scratch
-owner, or ``createDataFrame`` / ``parallelize`` / ``.rdd`` outside the frame
-builder, so none of the three disciplines can regress silently.
+never a pickled-RDD scan that needs a Python worker of its own), and every
+fixture table is read in ``sources/tables.py`` (``load_table`` /
+``table_schema``, which infer each file's schema once).  This test walks the
+package AST outside ``vendor/`` and fails by file:line on a stream start or
+drain outside the runner, a ``tempfile`` path outside the scratch owner,
+``createDataFrame`` / ``parallelize`` / ``.rdd`` outside the frame builder,
+or a ``.parquet(...)`` of a fixture path outside the table source, so none
+of the four disciplines can regress silently.
 """
 
 import ast
@@ -24,6 +27,47 @@ OWNED = {
     "scratch.py": TEMP_ATTRS,
     "sources/local.py": FRAME_ATTRS,
 }
+FIXTURE_READER = "sources/tables.py"
+
+
+def _is_table_path(node: ast.AST) -> bool:
+    if not isinstance(node, ast.Call):
+        return False
+    f = node.func
+    return (isinstance(f, ast.Name) and f.id == "table_path") or (
+        isinstance(f, ast.Attribute) and f.attr == "table_path"
+    )
+
+
+def _fixture_reads(tree: ast.AST, rel: str) -> set[str]:
+    """``.parquet(p)`` where ``p`` is ``table_path(...)`` or a name bound to
+    one in the same function (nested functions included)."""
+    if rel == FIXTURE_READER:
+        return set()
+    hits = set()
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        bound = {
+            t.id
+            for n in ast.walk(fn)
+            if isinstance(n, ast.Assign) and _is_table_path(n.value)
+            for t in n.targets
+            if isinstance(t, ast.Name)
+        }
+        for n in ast.walk(fn):
+            if (
+                isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "parquet"
+                and n.args
+                and (
+                    _is_table_path(n.args[0])
+                    or (isinstance(n.args[0], ast.Name) and n.args[0].id in bound)
+                )
+            ):
+                hits.add(f"{rel}:{n.lineno} .parquet(fixture)")
+    return hits
 
 
 def _offenders(tree: ast.AST, rel: str) -> list[str]:
@@ -38,7 +82,7 @@ def _offenders(tree: ast.AST, rel: str) -> list[str]:
                 for a in node.names
                 if a.name in forbidden
             ]
-    return hits
+    return hits + sorted(_fixture_reads(tree, rel))
 
 
 def test_streams_and_scratch_have_one_owner():
@@ -51,7 +95,8 @@ def test_streams_and_scratch_have_one_owner():
     assert not offenders, (
         "run streams through streaming/run.py:run_to_completion and take "
         "scratch paths from scratch.py (cached_dir / run_dir) and build "
-        "driver-side frames with sources/local.py:local_frame:\n"
+        "driver-side frames with sources/local.py:local_frame and read "
+        "fixture tables with sources/tables.py (load_table / table_schema):\n"
         + "\n".join(offenders)
     )
 
@@ -84,3 +129,25 @@ def test_guard_actually_detects():
     assert _offenders(ast.parse("q.processAllAvailable()"), "streaming/run.py") == []
     assert _offenders(ast.parse("tempfile.mkdtemp()"), "scratch.py") == []
     assert _offenders(ast.parse("spark.createDataFrame(t, s)"), "sources/local.py") == []
+
+
+def test_fixture_read_guard_detects():
+    """A fixture read is ``.parquet`` of ``table_path(...)`` or of a local
+    bound to it in the same function, closures included; other paths and
+    the table source itself pass."""
+    src = (
+        "def f(spark, sf, s, other):\n"
+        "    a = spark.read.parquet(table_path(sf, 'orders'))\n"
+        "    p = tables.table_path(sf, 'events')\n"
+        "    b = spark.read.schema(s).parquet(p)\n"
+        "    def build(tmp):\n"
+        "        return spark.read.parquet(p)\n"
+        "    q = other(sf)\n"
+        "    return spark.read.parquet(q), spark.readStream.schema(s).parquet(tmp)\n"
+    )
+    assert _offenders(ast.parse(src), "streaming/x.py") == [
+        "streaming/x.py:2 .parquet(fixture)",
+        "streaming/x.py:4 .parquet(fixture)",
+        "streaming/x.py:6 .parquet(fixture)",
+    ]
+    assert _offenders(ast.parse(src), FIXTURE_READER) == []
