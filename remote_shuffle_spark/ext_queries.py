@@ -6131,7 +6131,7 @@ def ext_stream_hopping_window(spark: SparkSession, sf_dir: str) -> DataFrame:
         stream_session,
     )
 
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
     schema = table_schema(scoped, path)
     stream = scoped.readStream.schema(schema).parquet(file_stream_dir(path))
@@ -6900,7 +6900,7 @@ def ext_stream_available_now(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     split = late_split_dir(spark, sf_dir, late_every=None)
     schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, 4)
+    s2 = stream_session(spark)
     stream = (
         s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
     )
@@ -7960,7 +7960,7 @@ def ext_stream_incremental_runs(spark: SparkSession, sf_dir: str) -> DataFrame:
     if sink is None:
         files = sorted(f for f in os.listdir(split) if f.endswith(".parquet"))
         schema = _ordered_events(spark, sf_dir).schema
-        s2 = stream_session(spark, 4)
+        s2 = stream_session(spark)
         src, sink, ckpt = run_dir("incr_src"), run_dir("incr_sink"), run_dir("incr_ckpt")
         os.makedirs(src)
         stream = (
@@ -11432,7 +11432,7 @@ def ext_stream_corpus_prep(spark: SparkSession, sf_dir: str) -> DataFrame:
     from remote_shuffle_spark.streaming.dedup import doc_split_dir
     from remote_shuffle_spark.streaming.source import stream_session
 
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     d = doc_split_dir(spark, sf_dir)
     stream = (
         scoped.readStream.schema("doc_id long, text string, ts timestamp")
@@ -12858,7 +12858,7 @@ def ext_stream_observe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     split = late_split_dir(spark, sf_dir, late_every=None)
     schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, 4)
+    s2 = stream_session(spark)
     stream = (
         s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
     )

@@ -20,7 +20,7 @@ letting one bucket OOM an executor.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from remote_shuffle_spark.functions.hashing import (
@@ -35,10 +35,9 @@ from remote_shuffle_spark.plans.index_store import append_index, by_range, read_
 
 DEFAULT_MAX_BUCKET = 64
 
-# Persisted intermediates (minhash signatures, embedding LSH buckets) are
-# registered here so long-lived sessions can reclaim executor memory:
-# the consuming action happens in the CALLER's job, so the operators
-# themselves have no safe point to unpersist at.  Call
+# Persisted minhash signature tables are registered here so long-lived
+# sessions can reclaim executor memory: the consuming action happens in the
+# CALLER's job, so the operator has no safe point to unpersist at.  Call
 # :func:`release_cached_intermediates` once the results are materialized.
 _CACHED_INTERMEDIATES: list[DataFrame] = []
 
@@ -51,7 +50,7 @@ def _register_cache(df: DataFrame) -> DataFrame:
 
 def release_cached_intermediates() -> int:
     """Unpersist every intermediate cached by dedup operators in this
-    process (signature tables, LSH bucket maps).  Safe to call any time
+    process (signature tables).  Safe to call any time
     after the consuming action; returns the number of frames released."""
     n = 0
     while _CACHED_INTERMEDIATES:
@@ -515,15 +514,13 @@ def embedding_near_duplicates(
     """
     v = to_double_array(vec_col)
     bucket = _lsh_bucket(v, num_planes, dim)
-    # cache only (doc, bucket) — 16 B/row; vectors are corpus-sized and
-    # re-joined by id for the verify stage instead of being cached.
-    # Registered for release_cached_intermediates() cleanup.
-    buckets_df = _register_cache(
+    # shuffle only (doc, bucket) — 16 B/row; vectors are re-joined by id to
+    # verify.  The bucket size is a window count over the bucket Exchange,
+    # which both sides of the bucket self-join reuse.
+    bounded = (
         df.select(F.col(id_col).alias("doc"), bucket.alias("bucket"))
-    )
-    sizes = buckets_df.groupBy("bucket").agg(F.count(F.lit(1)).alias("bsize"))
-    bounded = buckets_df.join(
-        sizes.filter((F.col("bsize") >= 2) & (F.col("bsize") <= max_bucket_size)), "bucket"
+        .withColumn("bsize", F.count(F.lit(1)).over(Window.partitionBy("bucket")))
+        .filter((F.col("bsize") >= 2) & (F.col("bsize") <= max_bucket_size))
     )
     a = bounded.select("bucket", F.col("doc").alias("id_a"))
     b = bounded.select("bucket", F.col("doc").alias("id_b"))
@@ -570,6 +567,9 @@ def semantic_dedup(
     similarity matrix (4096² doubles = 128 MB per task ceiling; at
     100 TB pick K ≈ corpus/expected-cell-size so cells stay small — the
     paper's own K scales with N).  Nothing is all-pairs.
+    The cell size is a window count on the hashpartitioning(cell)
+    Exchange the verify reads (one shuffle), filtered in the JVM before
+    Python sees a row; nothing is persisted.
 
     Returns the SURVIVORS: the input rows minus dropped near-duplicates,
     plus a ``cell`` column (useful for writing cell-partitioned output).
@@ -586,17 +586,13 @@ def semantic_dedup(
     )
 
     cents = seed_centroids(df, id_col, vec_col, k=num_cells)
-    assigned = _register_cache(
-        assign_ivf_cells(df, id_col, vec_col, cents, round_to=ROUND_TO)
+    assigned = assign_ivf_cells(df, id_col, vec_col, cents, round_to=ROUND_TO)
+    bounded = (
+        assigned.select(F.col(id_col).alias("doc"), "cell", to_double_array(vec_col).alias("vec"))
+        .withColumn("csize", F.count(F.lit(1)).over(Window.partitionBy("cell")))
+        .filter((F.col("csize") >= 2) & (F.col("csize") <= max_cell_size))
+        .drop("csize")
     )
-    slim = assigned.select(
-        F.col(id_col).alias("doc"), F.col("cell"), to_double_array(vec_col).alias("vec")
-    )
-    sizes = slim.groupBy("cell").agg(F.count(F.lit(1)).alias("csize"))
-    bounded = slim.join(
-        sizes.filter((F.col("csize") >= 2) & (F.col("csize") <= max_cell_size)),
-        "cell",
-    ).select("cell", "doc", "vec")
 
     import numpy as np
     import pandas as pd
@@ -624,7 +620,7 @@ def semantic_dedup(
 
     dropped = (
         bounded.groupBy("cell")
-        .applyInPandas(_dropped_in_cell, schema=f"doc {dict(slim.dtypes)['doc']}")
+        .applyInPandas(_dropped_in_cell, schema=f"doc {dict(df.dtypes)[id_col]}")
         .withColumnRenamed("doc", id_col)
     )
     return assigned.join(dropped, id_col, "left_anti")

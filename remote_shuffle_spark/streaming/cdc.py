@@ -67,7 +67,8 @@ def split_stream_dir(spark: SparkSession, path: str, *, n_splits: int = 4) -> st
         stats = [(os.path.basename(real), st.st_size, st.st_mtime_ns)]
 
     def build(tmp: str) -> None:
-        df = spark.read.parquet(real)
+        reader = spark.read if os.path.isdir(real) else spark.read.schema(table_schema(spark, real))
+        df = reader.parquet(real)
         materialize_split_files(
             [df.filter(F.pmod(F.col("event_id"), F.lit(n_splits)) == i) for i in range(n_splits)],
             tmp,
@@ -96,7 +97,7 @@ def streaming_cdc_upsert(
     last_value), ordered by user_id — oracle-comparable against the
     batch window equivalent.
     """
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
     schema = table_schema(scoped, path)
     ts = event_time(schema["ts"].dataType.simpleString())

@@ -38,7 +38,7 @@ def streaming_distinct(
     Returns the drained memory-sink table projected to ``keys`` — one row
     per distinct key combination, deterministic, oracle-comparable.
     """
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
     schema = table_schema(scoped, path)
     stream_dir = file_stream_dir(path)
@@ -107,7 +107,7 @@ def streaming_distinct_within_watermark(
     is precisely why the API is safe to bound.  Output over the finite
     fixture therefore equals batch DISTINCT, hash-checked by the
     oracle."""
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     d = dup_split_dir(spark, sf_dir)
     schema = "event_id long, user_id long, event_type string, ts timestamp"
     stream = (
@@ -178,7 +178,7 @@ def streaming_content_dedup(
     production tunes it to the re-crawl window it actually wants to
     dedup across — accepting re-admission past it is the POINT of the
     bounded-state API.  Returns (doc_id, digest)."""
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     d = doc_split_dir(spark, sf_dir)
     stream = (
         scoped.readStream.schema("doc_id long, text string, ts timestamp")

@@ -36,7 +36,7 @@ def enriched_event_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     drained batch DataFrame (c_mktsegment, n, sum_value), deterministic
     and oracle-comparable against the batch equivalent.
     """
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
     stream = scoped.readStream.schema(table_schema(scoped, path)).parquet(file_stream_dir(path))
 

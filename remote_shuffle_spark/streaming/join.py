@@ -30,7 +30,7 @@ def _attribution_join(
 ) -> DataFrame:
     """views ⋈ purchases per user within the horizon band, joined ``how``,
     drained and returned as (user_id, view_id, purchase_id)."""
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
     schema = table_schema(scoped, path)
     stream_dir = file_stream_dir(path)

@@ -154,7 +154,7 @@ def windowed_counts_with_late_drop(
     """
     split = late_split_dir(spark, sf_dir, n_splits=n_splits, late_every=late_every)
     schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, 8)
+    s2 = stream_session(spark)
     stream = (
         s2.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(split)
     )

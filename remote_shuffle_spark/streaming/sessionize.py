@@ -160,7 +160,7 @@ def sessionize_streaming_table(
         stream_session,
     )
 
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
     schema = table_schema(scoped, path)
     stream_dir = file_stream_dir(path)

@@ -10,10 +10,8 @@ Two concerns every streaming declared query has:
   dangling link is repaired, not trusted.
 
 - ``spark.sql.shuffle.partitions`` sizes the state-store exchange and is
-  fixed at query start.  Mutating the SHARED session conf around
-  ``start()`` races concurrent queries on the same session, so the
-  setting is scoped to a cloned session (``spark.newSession()`` — same
-  SparkContext, isolated SQL conf + temp catalog) instead.
+  fixed at query start; each stream runs in a cloned session (same
+  SparkContext, isolated SQL conf + temp catalog) that pins the parent's.
 """
 
 from __future__ import annotations
@@ -57,14 +55,15 @@ def file_stream_dir(path: str) -> str:
     return d
 
 
-def stream_session(spark: SparkSession, n: int) -> SparkSession:
-    """A cloned session with ``n`` shuffle partitions to run one streaming
-    query in.  State store instances = shuffle partitions at query start,
-    fixed for the query's lifetime, and every state partition pays
-    per-micro-batch commit overhead even when near-empty — so ``n`` tracks
-    the number of DISTINCT GROUP KEYS, not the corpus size (32 partitions
-    of tiny state measured 1.8x slower than 8 on the fixture)."""
+def stream_session(spark: SparkSession) -> SparkSession:
+    """A cloned session to run one streaming query in, with the parent's
+    ``spark.sql.shuffle.partitions`` copied (``newSession()`` does not
+    inherit runtime conf).  State store instances = shuffle partitions,
+    each paying a commit in every micro-batch, so at the parent's value
+    (``EngineConfig.shuffle_partitions``: the core count locally) every
+    stateful stage commits in one wave (docs/scale.md)."""
     scoped = spark.newSession()
     ensure_session_defaults(scoped)
-    scoped.conf.set("spark.sql.shuffle.partitions", str(n))
+    key = "spark.sql.shuffle.partitions"
+    scoped.conf.set(key, spark.conf.get(key))
     return scoped

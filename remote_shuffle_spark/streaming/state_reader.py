@@ -56,8 +56,7 @@ def dedup_state_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     split = late_split_dir(spark, sf_dir, late_every=None)
     schema = _ordered_events(spark, sf_dir).schema
-    n_state = 4
-    s2 = stream_session(spark, n_state)
+    s2 = stream_session(spark)
     ckpt = run_dir("ssr")
     stream = (
         s2.readStream.schema(schema)
@@ -72,7 +71,7 @@ def dedup_state_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         meta = state_operator_metadata(spark, ckpt).collect()
         if len(meta) != 1 or meta[0].operatorName != "dedupe":
             raise RuntimeError(f"unexpected state operator metadata: {meta}")
-        if meta[0].numPartitions != n_state:
+        if meta[0].numPartitions != int(s2.conf.get("spark.sql.shuffle.partitions")):
             raise RuntimeError(f"state partition count mismatch: {meta}")
         # materialize the key set BEFORE removing the checkpoint (the
         # statestore read is lazy over its files); keys are the state's

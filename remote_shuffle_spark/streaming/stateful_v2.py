@@ -79,7 +79,7 @@ def _ordered_tws_stream(
 
     split = late_split_dir(spark, sf_dir, n_splits=n_splits, late_every=None)
     schema = _ordered_events(spark, sf_dir).schema
-    s2 = stream_session(spark, 8)
+    s2 = stream_session(spark)
     s2.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

@@ -53,7 +53,7 @@ def windowed_event_agg(
     """The streaming windowed aggregation FRAME (not yet drained) +
     the scoped session that owns it — shared by every sink flavor
     (memory drain above, parquet sinks in streaming.sink)."""
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
     schema = table_schema(scoped, path)
     # the file-stream source requires a directory: expose the single
@@ -124,7 +124,7 @@ def session_window_stream(
     tail sessions stay in state exactly as a live stream would keep
     them mergeable).  Returns (user_id, session_start, session_end,
     n_events) as formatted strings/longs, batch-oracle-comparable."""
-    scoped = stream_session(spark, 8)
+    scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
     schema = table_schema(scoped, path)
     stream = (

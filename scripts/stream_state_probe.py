@@ -84,7 +84,7 @@ def run_join(spark, stream_dir: str, *, delay: str, horizon_minutes: int):
     returns the final stateOperators entry."""
     from remote_shuffle_spark.streaming.source import stream_session
 
-    s2 = stream_session(spark, 8)
+    s2 = stream_session(spark)
     schema = "event_id long, user_id long, ts timestamp, event_type string"
 
     def side(kind, prefix):
@@ -233,7 +233,7 @@ def tws_cost_probe(spark):
         ("rows_x4", 800_000, 2_000),
     ):
         d = synth(n_rows, n_keys)
-        s2 = stream_session(spark, 8)
+        s2 = stream_session(spark)
         s2.conf.set(
             "spark.sql.streaming.stateStore.providerClass",
             "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",

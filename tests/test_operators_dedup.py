@@ -210,6 +210,24 @@ def test_semantic_dedup_cell_size_guard(spark):
     assert kept.count() == df.count()
 
 
+def test_semantic_dedup_hot_cell_survives_whole_and_never_reaches_python(spark):
+    """Cell 0 ({0, 10, 11}, near-copies) is above ``max_cell_size=2``: all
+    three survive, while the bounded cell 1 still drops its copy 20.  The
+    cell-size Filter sits below the Python node, so a hot cell is removed
+    in the JVM before any Arrow batch is built."""
+    from remote_shuffle_spark.operators.dedup import semantic_dedup
+    from remote_shuffle_spark.plans import explain
+
+    kept = semantic_dedup(
+        _sem_vecs(spark), "vec_id", "embedding", threshold=0.95, num_cells=3, max_cell_size=2
+    )
+    assert sorted(r.vec_id for r in kept.collect()) == [0, 1, 2, 10, 11, 30]
+    nodes = [ln.lstrip(" :+-") for ln in explain.physical_plan(kept, mode="simple").splitlines()]
+    py = next(i for i, n in enumerate(nodes) if n.startswith("FlatMapGroupsInPandas"))
+    size_filter = next(i for i, n in enumerate(nodes) if n.startswith("Filter") and "csize" in n)
+    assert py < size_filter, "\n".join(nodes)
+
+
 def test_segment_dedup_keeps_first_occurrence_globally(spark):
     """Planted repeat: doc 2 repeats doc 1's first 3-token segment; the
     keeper must be the (doc_id, seg_idx)-minimal occurrence."""

@@ -499,6 +499,61 @@ def test_ivf_cell_stats_assigns_the_corpus_once(spark, sf_smoke):
     assert len(re.findall(r"BroadcastNestedLoopJoin ", plan)) == 1, plan
 
 
+def _plan_nodes(df) -> list[str]:
+    """The simple-mode plan, one node per line, tree prefixes removed."""
+    return [ln.lstrip(" :+-") for ln in explain.physical_plan(df, mode="simple").splitlines()]
+
+
+def test_semantic_dedup_sizes_and_verifies_cells_on_one_exchange(spark, sf_smoke):
+    """The cell size is a window count over the hashpartitioning(cell)
+    Exchange that the per-cell Python verify also reads: one cell
+    Exchange feeds both the Window and FlatMapGroupsInPandas, with no
+    second Exchange between them, and no cached relation anywhere."""
+    from remote_shuffle_spark.operators.dedup import semantic_dedup
+
+    emb = load_table(spark, sf_smoke, "embeddings")
+    nodes = _plan_nodes(semantic_dedup(emb, "vec_id", "embedding", threshold=0.45))
+    plan = "\n".join(nodes)
+    assert "InMemoryRelation" not in plan, plan
+    cell_ex = [i for i, n in enumerate(nodes) if n.startswith("Exchange hashpartitioning(cell")]
+    assert len(cell_ex) == 1, plan
+    py = nodes.index(next(n for n in nodes if n.startswith("FlatMapGroupsInPandas")))
+    win = nodes.index(next(n for n in nodes if n.startswith("Window [count(1)")))
+    assert py < win < cell_ex[0], plan
+    assert not [n for n in nodes[py + 1 : cell_ex[0]] if "Exchange" in n], plan
+
+
+def test_embedding_neardup_sizes_buckets_on_the_join_exchange(spark, sf_smoke):
+    """The bucket size is a window count over the hashpartitioning(bucket)
+    Exchange, and the bucket self-join's second side reuses that
+    Exchange: the executed plan shuffles twice (the bucket Exchange and
+    the final distinct), with no size aggregate joined back and no cached
+    relation.  A planted twin keeps the result non-empty, so AQE executes
+    the whole plan instead of folding it to an empty relation."""
+    from remote_shuffle_spark.operators.dedup import embedding_near_duplicates
+
+    emb = load_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
+    twin = emb.filter(F.col("vec_id") == 7).select(
+        (F.col("vec_id") + 100_000).alias("vec_id"), "embedding"
+    )
+    pairs = embedding_near_duplicates(
+        emb.union(twin), "vec_id", "embedding", dim=64, threshold=0.99, max_bucket_size=4096
+    )
+    assert (7, 100_007) in {(r.id_a, r.id_b) for r in pairs.collect()}
+    final = _plan_nodes(pairs)
+    final = final[: final.index("== Initial Plan ==")] if "== Initial Plan ==" in final else final
+    plan = "\n".join(final)
+    assert "isFinalPlan=true" in plan, plan
+    shuffles = [n for n in final if n.startswith("Exchange hashpartitioning(")]
+    assert len(shuffles) == 2, plan
+    assert [n for n in shuffles if n.startswith("Exchange hashpartitioning(bucket")], plan
+    assert [
+        n for n in final
+        if n.startswith("ReusedExchange") and "Exchange hashpartitioning(bucket" in n
+    ], plan
+    assert "InMemoryRelation" not in plan and "HashAggregate(keys=[bucket" not in plan, plan
+
+
 def test_join_hints_reach_the_planner(spark, sf_smoke):
     """SHUFFLE_MERGE / SHUFFLE_HASH hints must actually pick the physical
     strategy (ext_join_strategy_hints proves result-equality; this proves

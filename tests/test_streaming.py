@@ -418,6 +418,28 @@ def test_cdc_split_source_yields_true_microbatches(spark, sf_smoke):
     assert n_split == n_src
 
 
+def test_cdc_split_of_a_new_file_infers_no_schema(spark, sf_smoke, tmp_path):
+    """A split built for a file (a cache miss: the copy is a new path) reads
+    it with the schema the caller already resolved through
+    ``table_schema``, as ``streaming_cdc_upsert`` does: the build's only
+    jobs are its ``n_splits`` file writes, no parquet schema-inference
+    job (which carries the same ``parquet at NativeMethodAccessorImpl``
+    call site as the writes, so the jobs are counted)."""
+    import shutil
+
+    from remote_shuffle_spark.sources.tables import table_schema
+    from remote_shuffle_spark.streaming.cdc import split_stream_dir
+    from tests.conftest import jobs_in
+
+    path = str(tmp_path / "events.parquet")
+    shutil.copy(table_path(sf_smoke, "events"), path)
+    table_schema(spark, path)
+    out = {}
+    jobs = jobs_in(spark, lambda: out.update(d=split_stream_dir(spark, path, n_splits=2)))
+    assert len(jobs) == 2, jobs
+    assert spark.read.parquet(out["d"]).count() == spark.read.parquet(path).count()
+
+
 def test_late_drop_actually_drops_and_no_boundary_ties(spark):
     """ext_stream_late_drop's determinism rests on (a) late rows REALLY
     being dropped (the query would trivially pass if the watermark never
@@ -612,7 +634,7 @@ def test_stream_join_eviction_boundary_is_wm_minus_1ms(spark, tmp_path):
     os.makedirs(d)
     pdf.to_parquet(os.path.join(d, "events.parquet"), index=False)
 
-    scoped = stream_session(spark, 4)
+    scoped = stream_session(spark)
     batch = scoped.read.parquet(os.path.join(d, "events.parquet"))
     dtype = dict(batch.dtypes)["ts"]
     stream = scoped.readStream.schema(batch.schema).parquet(
@@ -712,7 +734,7 @@ def test_session_finalization_boundary_is_inclusive(spark, tmp_path):
     d = str(tmp_path / "sess_boundary")
     os.makedirs(d)
     pdf.to_parquet(os.path.join(d, "events.parquet"), index=False)
-    scoped = stream_session(spark, 4)
+    scoped = stream_session(spark)
     batch = scoped.read.parquet(os.path.join(d, "events.parquet"))
     dtype = dict(batch.dtypes)["ts"]
     stream = (
@@ -777,7 +799,7 @@ def test_update_mode_late_rows_merge_into_live_state(spark, tmp_path):
         shutil.move(fp, dst)
         os.utime(dst, (1_700_000_000 + k * 10,) * 2)
         shutil.rmtree(tmpd)
-    scoped = stream_session(spark, 4)
+    scoped = stream_session(spark)
     sb = scoped.read.parquet(os.path.join(d, "split_0.parquet"))
     stream = (
         scoped.readStream.schema(sb.schema)
@@ -848,7 +870,7 @@ def test_dedup_within_watermark_state_is_bounded(spark):
     schema = "event_id long, user_id long, event_type string, ts timestamp"
 
     def run(bounded: bool) -> tuple[int, int]:
-        s2 = stream_session(spark, 4)
+        s2 = stream_session(spark)
         stream = (
             s2.readStream.schema(schema)
             .option("maxFilesPerTrigger", "1")
@@ -997,7 +1019,7 @@ def test_tws_value_state_with_ttl_roundtrips_protocol(spark):
     sf = "/root/testdata/sf0.001"
     split = late_split_dir(spark, sf, late_every=None)
     schema = _ordered_events(spark, sf).schema
-    s2 = stream_session(spark, 4)
+    s2 = stream_session(spark)
     s2.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -1081,7 +1103,7 @@ def test_tws_state_survives_query_restart(spark):
     sf = "/root/testdata/sf0.001"
     split = late_split_dir(spark, sf, late_every=None)
     schema = _ordered_events(spark, sf).schema
-    s2 = stream_session(spark, 4)
+    s2 = stream_session(spark)
     s2.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -1182,7 +1204,7 @@ def test_tws_list_and_map_state_with_ttl(spark):
     sf = "/root/testdata/sf0.001"
     split = late_split_dir(spark, sf, late_every=None)
     schema = _ordered_events(spark, sf).schema
-    s2 = stream_session(spark, 4)
+    s2 = stream_session(spark)
     s2.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
