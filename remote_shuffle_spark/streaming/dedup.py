@@ -2,11 +2,13 @@
 SURVEY §2.3; this is the streaming face of operators/dedup.py).
 
 ``dropDuplicates`` over a ``readStream`` source keeps the first arrival
-per key with state in the state store; a watermark bounds how long state
-lives (production uses ``dropDuplicatesWithinWatermark`` + RocksDB state
-store so the key set never grows unbounded).  Over a finite input the
-retained key set equals batch DISTINCT — which is what the DuckDB oracle
-checks.
+per key with state in the state store.  A watermark bounds that state
+only when the dedup keys include the event-time column; on other keys
+it expires nothing and drops nothing, so the plain form runs without one
+(production bounds state with ``dropDuplicatesWithinWatermark`` + RocksDB
+state store so the key set never grows unbounded).  Over a finite input
+the retained key set equals batch DISTINCT — which is what the DuckDB
+oracle checks.
 """
 
 from __future__ import annotations
@@ -18,11 +20,7 @@ from remote_shuffle_spark.scratch import cached_dir, file_stamp
 from remote_shuffle_spark.sources.tables import load_table, table_path, table_schema
 from remote_shuffle_spark.streaming.latedrop import _ordered_events, assign_arrival
 from remote_shuffle_spark.streaming.run import run_to_completion
-from remote_shuffle_spark.streaming.source import (
-    event_time,
-    file_stream_dir,
-    stream_session,
-)
+from remote_shuffle_spark.streaming.source import file_stream_dir, stream_session
 from remote_shuffle_spark.streaming.splitutil import materialize_split_files
 
 
@@ -31,25 +29,20 @@ def streaming_distinct(
     sf_dir: str,
     *,
     keys: tuple[str, ...] = ("user_id", "event_type"),
-    watermark: str = "1 hour",
 ) -> DataFrame:
     """First-arrival dedup of the events stream on ``keys``.
 
     Returns the drained memory-sink table projected to ``keys`` — one row
-    per distinct key combination, deterministic, oracle-comparable.
+    per distinct key combination, deterministic, oracle-comparable.  No
+    watermark: on keys without the event time it would bound no state and
+    drop no late first arrival, and its only effect was one idle no-data
+    micro-batch (state commits plus offset and commit log writes) each
+    time it advanced.
     """
     scoped = stream_session(spark)
     path = table_path(sf_dir, "events")
-    schema = table_schema(scoped, path)
-    stream_dir = file_stream_dir(path)
-    stream = scoped.readStream.schema(schema).parquet(stream_dir)
-    ts = event_time(schema["ts"].dataType.simpleString())
-    deduped = (
-        stream.withColumn("ts", ts)
-        .withWatermark("ts", watermark)
-        .dropDuplicates(list(keys))
-        .select(*keys)
-    )
+    stream = scoped.readStream.schema(table_schema(scoped, path)).parquet(file_stream_dir(path))
+    deduped = stream.dropDuplicates(list(keys)).select(*keys)
     return scoped.table(run_to_completion(deduped).table).orderBy(*keys)
 
 

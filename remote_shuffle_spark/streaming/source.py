@@ -61,9 +61,12 @@ def stream_session(spark: SparkSession) -> SparkSession:
     inherit runtime conf).  State store instances = shuffle partitions,
     each paying a commit in every micro-batch, so at the parent's value
     (``EngineConfig.shuffle_partitions``: the core count locally) every
-    stateful stage commits in one wave (docs/scale.md)."""
+    stateful stage commits in one wave (docs/scale.md).  A parent that
+    never set the key (a driver's vanilla session) would hand over Spark's
+    built-in 200; the clone takes ``min(200, defaultParallelism)`` then."""
     scoped = spark.newSession()
     ensure_session_defaults(scoped)
     key = "spark.sql.shuffle.partitions"
-    scoped.conf.set(key, spark.conf.get(key))
+    n = spark.conf.getAll.get(key) or str(min(200, spark.sparkContext.defaultParallelism))
+    scoped.conf.set(key, n)
     return scoped

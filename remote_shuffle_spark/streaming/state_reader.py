@@ -45,6 +45,8 @@ def state_operator_metadata(spark: SparkSession, checkpoint: str) -> DataFrame:
 def dedup_state_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Checkpointed streaming dedup on user_id, then an OFFLINE read of
     the retained state keys.  Returns (user_id) rows == batch DISTINCT.
+    No watermark: on a key without the event time it would expire no
+    state, and each advance of it would only add an idle no-data batch.
     Also sanity-asserts the state-metadata inventory (one dedup operator
     with the configured shuffle-partition count) so the metadata source
     is exercised, not just imported."""
@@ -62,7 +64,6 @@ def dedup_state_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         s2.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(split)
-        .withWatermark("ts", "30 minutes")
         .dropDuplicates(["user_id"])
         .select("user_id")
     )

@@ -40,16 +40,30 @@ import sys; sys.path.insert(0, "/root/repo")
 _pp = os.environ.get("PYTHONPATH", "")
 if "/root/repo" not in _pp.split(os.pathsep):
     os.environ["PYTHONPATH"] = "/root/repo" + (os.pathsep + _pp if _pp else "")
-from remote_shuffle_spark.vendor import ensure_protobuf
+from remote_shuffle_spark.vendor import ensure_protobuf, python_worker_conf
 ensure_protobuf()
 from pyspark.sql import SparkSession
-spark = (SparkSession.builder.master("local-cluster[2,2,1024]")
+builder = (SparkSession.builder.master("local-cluster[2,2,1024]")
     .appName("cluster_smoke")
     .config("spark.sql.shuffle.partitions", "8")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate())
+    .config("spark.ui.enabled", "false"))
+# the engine's worker daemon: executor JVMs must find it on the exported
+# worker PYTHONPATH, or no Python worker starts at all
+for k, v in python_worker_conf().items():
+    builder = builder.config(k, v)
+spark = builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")
 out = {}
+import pandas as pd
+from pyspark.sql import functions as F
+
+@F.pandas_udf("string")
+def _daemon(s: pd.Series) -> pd.Series:
+    import sys
+    spec = getattr(sys.modules["__main__"], "__spec__", None)
+    return pd.Series([spec.name if spec else ""] * len(s))
+
+out["udf_daemons"] = sorted({r.d for r in spark.range(0, 400, 1, 4).select(_daemon("id").alias("d")).collect()})
 import __spark_entry__ as e
 out["entry_rows"] = len(e.entry(spark).collect())
 qs = e.queries()
@@ -120,6 +134,7 @@ def test_local_cluster_smoke():
     line = result_lines[0]
     got = json.loads(line.removeprefix("RESULT:"))
     assert got["entry_rows"] > 0
+    assert got["udf_daemons"] == ["rss_worker_daemon"]
     assert got["heavy_hitters_rows"] == 10
     assert got["heavy_hitters_all_within_bound"] is True
     want = [[i, 0] for i in range(7)] + [[10, 10], [11, 10]]

@@ -11,7 +11,10 @@ package AST outside ``vendor/`` and fails by file:line on a stream start or
 drain outside the runner, a ``tempfile`` path outside the scratch owner,
 ``createDataFrame`` / ``parallelize`` / ``.rdd`` outside the frame builder,
 or a ``.parquet(...)`` of a fixture path outside the table source, so none
-of the four disciplines can regress silently.
+of the four disciplines can regress silently.  A fifth walk, over the whole
+package ``vendor/`` included, keeps the Python worker's environment in
+``vendor/__init__.py``: no other file may write ``PYTHONPATH``, touch
+``SparkContext.environment`` or name ``spark.python.daemon.module``.
 """
 
 import ast
@@ -151,3 +154,70 @@ def test_fixture_read_guard_detects():
         "streaming/x.py:6 .parquet(fixture)",
     ]
     assert _offenders(ast.parse(src), FIXTURE_READER) == []
+
+
+WORKER_ENV_OWNER = "vendor/__init__.py"
+ENV_WRITERS = {"setdefault", "putenv", "unsetenv", "pop"}
+
+
+def _is_pythonpath(node: ast.AST) -> bool:
+    return isinstance(node, ast.Constant) and node.value == "PYTHONPATH"
+
+
+def _worker_env_writes(tree: ast.AST, rel: str) -> list[str]:
+    """Writes of ``PYTHONPATH`` (subscript store or delete,
+    ``setdefault``/``putenv``/``unsetenv``/``pop``, ``update(PYTHONPATH=)``),
+    any ``.environment`` access, and the daemon-module conf key."""
+    if rel == WORKER_ENV_OWNER:
+        return []
+    hits = []
+    for n in ast.walk(tree):
+        if (
+            isinstance(n, ast.Subscript)
+            and isinstance(n.ctx, (ast.Store, ast.Del))
+            and _is_pythonpath(n.slice)
+        ):
+            hits.append(f"{rel}:{n.lineno} PYTHONPATH write")
+        elif isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and (
+            (n.func.attr in ENV_WRITERS and n.args and _is_pythonpath(n.args[0]))
+            or (n.func.attr == "update" and any(k.arg == "PYTHONPATH" for k in n.keywords))
+        ):
+            hits.append(f"{rel}:{n.lineno} PYTHONPATH write")
+        elif isinstance(n, ast.Attribute) and n.attr == "environment":
+            hits.append(f"{rel}:{n.lineno} .environment")
+        elif isinstance(n, ast.Constant) and n.value == "spark.python.daemon.module":
+            hits.append(f"{rel}:{n.lineno} daemon module conf")
+    return sorted(hits)
+
+
+def test_worker_environment_has_one_owner():
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = str(path.relative_to(PACKAGE))
+        offenders += _worker_env_writes(ast.parse(path.read_text(), filename=rel), rel)
+    assert not offenders, (
+        "export worker paths and set the worker daemon through "
+        "remote_shuffle_spark/vendor/__init__.py (ensure_protobuf / "
+        "python_worker_conf):\n" + "\n".join(offenders)
+    )
+
+
+def test_worker_environment_guard_detects():
+    src = (
+        "os.environ['PYTHONPATH'] = p\n"
+        "os.environ.setdefault('PYTHONPATH', p)\n"
+        "env.update(PYTHONPATH=p)\n"
+        "sc.environment['X'] = '1'\n"
+        "b = b.config('spark.python.daemon.module', 'm')\n"
+        "del os.environ['PYTHONPATH']\n"
+        "v = os.environ.get('PYTHONPATH', '')\n"
+    )
+    assert _worker_env_writes(ast.parse(src), "session.py") == [
+        "session.py:1 PYTHONPATH write",
+        "session.py:2 PYTHONPATH write",
+        "session.py:3 PYTHONPATH write",
+        "session.py:4 .environment",
+        "session.py:5 daemon module conf",
+        "session.py:6 PYTHONPATH write",
+    ]
+    assert _worker_env_writes(ast.parse(src), WORKER_ENV_OWNER) == []

@@ -69,3 +69,15 @@ def test_state_snapshot_checks_the_session_partition_count(spark, sf_smoke):
         .collect()
     ]
     assert got == want
+
+
+def test_parent_without_the_key_gets_default_parallelism(spark):
+    """A parent that never set ``spark.sql.shuffle.partitions`` (a driver's
+    vanilla session) hands over ``min(200, defaultParallelism)``, not
+    Spark's built-in 200 state stores per stateful stage."""
+    parent = spark.newSession()
+    parent.conf.unset("spark.sql.shuffle.partitions")
+    assert "spark.sql.shuffle.partitions" not in parent.conf.getAll
+    scoped = stream_session(parent)
+    want = min(200, spark.sparkContext.defaultParallelism)
+    assert scoped.conf.get("spark.sql.shuffle.partitions") == str(want)
