@@ -569,9 +569,7 @@ def semantic_dedup(
     paper's own K scales with N).  Nothing is all-pairs.
     The cell size is a window count on the hashpartitioning(cell)
     Exchange the verify reads (one shuffle), filtered in the JVM before
-    Python sees a row; nothing is persisted.  When the input is just
-    (id, vec), the survivors' anti-join reads that Exchange too, so the
-    Arrow cell assignment runs once even with every column kept.
+    Python sees a row; nothing is persisted.
 
     Returns the SURVIVORS: the input rows minus dropped near-duplicates,
     plus a ``cell`` column (useful for writing cell-partitioned output).
@@ -589,9 +587,10 @@ def semantic_dedup(
 
     cents = seed_centroids(df, id_col, vec_col, k=num_cells)
     assigned = assign_ivf_cells(df, id_col, vec_col, cents, round_to=ROUND_TO)
-    sized = assigned.withColumn("csize", F.count(F.lit(1)).over(Window.partitionBy("cell")))
-    bounded = sized.filter((F.col("csize") >= 2) & (F.col("csize") <= max_cell_size)).select(
-        F.col(id_col).alias("doc"), "cell", to_double_array(vec_col).alias("vec")
+    bounded = (
+        assigned.withColumn("csize", F.count(F.lit(1)).over(Window.partitionBy("cell")))
+        .filter((F.col("csize") >= 2) & (F.col("csize") <= max_cell_size))
+        .select(F.col(id_col).alias("doc"), "cell", to_double_array(vec_col).alias("vec"))
     )
 
     import numpy as np
@@ -623,20 +622,7 @@ def semantic_dedup(
         .applyInPandas(_dropped_in_cell, schema=f"doc {dict(df.dtypes)[id_col]}")
         .withColumnRenamed("doc", id_col)
     )
-    if set(df.columns) - {id_col, vec_col}:
-        # the verify's Exchange is pruned to (id, vec, cell); survivors
-        # carrying other columns cannot share it
-        return assigned.join(dropped, id_col, "left_anti")
-    # The survivors read the sized frame, so the cell Exchange the verify
-    # reads is reused and the Arrow assignment runs once.  ``vec`` is taken
-    # through csize (a count, never 0): a caller keeping it keeps the Window
-    # and the Exchange under it, where column pruning would drop both and
-    # assign the cells a second time.
-    return (
-        sized.join(dropped, id_col, "left_anti")
-        .withColumn(vec_col, F.when(F.col("csize") > 0, F.col(vec_col)))
-        .drop("csize")
-    )
+    return assigned.join(dropped, id_col, "left_anti")
 
 
 def segment_dedup_stats(

@@ -147,14 +147,15 @@ def get_session(config: EngineConfig | None = None) -> SparkSession:
     # Before the JVM exists: put the minimal protobuf shim on PYTHONPATH so
     # JVM-spawned Python workers (the TWS state protocol runs there) can
     # import google.protobuf (no-op when the real package is installed),
-    # and run those workers under the engine's daemon, which skips the
-    # per-task re-read of pyspark.zip (vendor/workerd).
+    # and, on local masters, run those workers under the engine's daemon,
+    # which skips the per-task re-read of pyspark.zip (vendor/workerd).
     from remote_shuffle_spark.vendor import ensure_protobuf, python_worker_conf
 
     ensure_protobuf()
     config = config or EngineConfig()
-    builder = SparkSession.builder.appName(config.app_name).master(config.resolved_master())
-    for k, v in {**python_worker_conf(), **config.to_conf()}.items():
+    master = config.resolved_master()
+    builder = SparkSession.builder.appName(config.app_name).master(master)
+    for k, v in {**python_worker_conf(master), **config.to_conf()}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -43,13 +43,14 @@ if "/root/repo" not in _pp.split(os.pathsep):
 from remote_shuffle_spark.vendor import ensure_protobuf, python_worker_conf
 ensure_protobuf()
 from pyspark.sql import SparkSession
-builder = (SparkSession.builder.master("local-cluster[2,2,1024]")
+MASTER = "local-cluster[2,2,1024]"
+builder = (SparkSession.builder.master(MASTER)
     .appName("cluster_smoke")
     .config("spark.sql.shuffle.partitions", "8")
     .config("spark.ui.enabled", "false"))
 # the engine's worker daemon: executor JVMs must find it on the exported
 # worker PYTHONPATH, or no Python worker starts at all
-for k, v in python_worker_conf().items():
+for k, v in python_worker_conf(MASTER).items():
     builder = builder.config(k, v)
 spark = builder.getOrCreate()
 spark.sparkContext.setLogLevel("ERROR")

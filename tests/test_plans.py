@@ -523,24 +523,6 @@ def test_semantic_dedup_sizes_and_verifies_cells_on_one_exchange(spark, sf_smoke
     assert not [n for n in nodes[py + 1 : cell_ex[0]] if "Exchange" in n], plan
 
 
-def test_semantic_dedup_survivors_share_the_cell_assignment(spark, sf_smoke):
-    """With every survivor column kept (``cell`` included), the survivors'
-    anti-join reads the cell Exchange the verify reads: the executed plan
-    evaluates the Arrow cell assignment once, and the survivors are those
-    of the id-only projection."""
-    from remote_shuffle_spark.operators.dedup import semantic_dedup
-
-    emb = load_table(spark, sf_smoke, "embeddings").select("vec_id", "embedding")
-    kept = semantic_dedup(emb, "vec_id", "embedding", threshold=0.45)
-    rows = kept.collect()
-    final = explain.physical_plan(kept, mode="simple").split("== Initial Plan ==")[0]
-    assert "isFinalPlan=true" in final, final
-    assert final.count("ArrowEvalPython") == 1, final
-    assert kept.columns == ["vec_id", "embedding", "cell"]
-    ids = sorted(r.vec_id for r in kept.select("vec_id").collect())
-    assert sorted(r.vec_id for r in rows) == ids and len(ids) < emb.count()
-
-
 def test_embedding_neardup_sizes_buckets_on_the_join_exchange(spark, sf_smoke):
     """The bucket size is a window count over the hashpartitioning(bucket)
     Exchange, and the bucket self-join's second side reuses that

@@ -3,14 +3,16 @@
 Every pyspark worker task calls ``importlib.invalidate_caches()``; the
 daemon makes a ``zipimporter`` re-read its archive on that call only when
 the archive's ``(st_mtime_ns, st_size)`` changed since that importer's last
-read.  The stamp rule is checked in a fresh interpreter (installing it
-patches ``zipimport`` process-wide); the session wiring is checked by a
-pandas UDF asking which daemon forked its worker.
+re-read.  The stamp rule, and the no-op where zipimport reads lazily
+(CPython 3.12+), are checked in fresh interpreters (installing it patches
+``zipimport`` process-wide); the session wiring is checked by a pandas UDF
+asking which daemon forked its worker.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
 
@@ -26,7 +28,7 @@ daemon_dir, archive = sys.argv[1:3]
 sys.path.insert(0, daemon_dir)
 import rss_worker_daemon
 
-rss_worker_daemon.install()
+assert rss_worker_daemon.install()
 
 
 def write(members):
@@ -47,21 +49,39 @@ importers = [
     if isinstance(imp, zipimport.zipimporter) and imp.archive == archive
 ]
 importlib.invalidate_caches()
-unchanged = reads.count(archive)
+first = reads.count(archive)
+importlib.invalidate_caches()
+unchanged = reads.count(archive) - first
 write({"zpkg/__init__.py": "", "zpkg/a.py": "X = 1\n", "zpkg/b.py": "Y = 2\n"})
 importlib.invalidate_caches()
-rewritten = reads.count(archive) - unchanged
+rewritten = reads.count(archive) - first - unchanged
 importlib.invalidate_caches()
-again = reads.count(archive) - unchanged - rewritten
+again = reads.count(archive) - first - unchanged - rewritten
 import zpkg.b
 
-print(json.dumps({"importers": len(importers), "unchanged": unchanged,
+print(json.dumps({"importers": len(importers), "first": first, "unchanged": unchanged,
                   "rewritten": rewritten, "again": again, "b": zpkg.b.Y}))
 """
 
 
+LAZY_SCRIPT = r"""
+import sys, zipimport
+
+sys.path.insert(0, sys.argv[1])
+import rss_worker_daemon
+
+# zipimport as of CPython 3.12: importers read the archive lazily
+zipimport.zipimporter._get_files = lambda self: {}
+before = zipimport.zipimporter.invalidate_caches
+assert rss_worker_daemon.install() is False
+assert zipimport.zipimporter.invalidate_caches is before
+print("untouched")
+"""
+
+
 def test_invalidate_rereads_only_a_changed_archive(tmp_path):
-    """Unchanged archive: no re-read.  Rewritten archive (new member, new
+    """The first invalidation stamps each importer (one re-read each).
+    Unchanged archive: no re-read.  Rewritten archive (new member, new
     size): each importer on it re-reads once, the new member imports, and
     the next invalidation reads nothing again."""
     out = subprocess.run(
@@ -73,10 +93,24 @@ def test_invalidate_rereads_only_a_changed_archive(tmp_path):
     assert out.returncode == 0, out.stderr[-2000:]
     got = json.loads(out.stdout.strip().splitlines()[-1])
     assert got["importers"] == 2  # the archive root and zpkg/
+    assert got["first"] == got["importers"]
     assert got["unchanged"] == 0
     assert got["rewritten"] == got["importers"]
     assert got["again"] == 0
     assert got["b"] == 2
+
+
+def test_install_leaves_a_lazy_zipimport_alone():
+    """Where a zipimporter reads lazily (``_get_files``), ``install``
+    patches nothing, so the daemon starts as pyspark's own would."""
+    out = subprocess.run(
+        [sys.executable, "-c", LAZY_SCRIPT, _DAEMON_DIR],
+        capture_output=True,
+        text=True,
+        timeout=60,
+    )
+    assert out.returncode == 0, out.stderr[-2000:]
+    assert out.stdout.split() == ["untouched"]
 
 
 def test_engine_session_workers_run_under_the_engine_daemon(spark):
@@ -92,3 +126,18 @@ def test_engine_session_workers_run_under_the_engine_daemon(spark):
 
     got = {r.d for r in spark.range(2000).select(daemon_name("id").alias("d")).collect()}
     assert got == {DAEMON_MODULE}
+
+
+def test_remote_masters_stay_on_pysparks_daemon(monkeypatch):
+    """A remote executor cannot see the driver's exported PYTHONPATH, so
+    only ``local*`` masters select the engine daemon; any other master
+    gets no conf and no export."""
+    from remote_shuffle_spark.vendor import python_worker_conf
+
+    monkeypatch.setenv("PYTHONPATH", "")
+    for master in ("yarn", "spark://host:7077", "k8s://https://host:443"):
+        assert python_worker_conf(master) == {}
+    assert _DAEMON_DIR not in os.environ["PYTHONPATH"].split(os.pathsep)
+    for master in ("local[4]", "local-cluster[2,2,1024]"):
+        assert python_worker_conf(master) == {"spark.python.daemon.module": DAEMON_MODULE}
+    assert _DAEMON_DIR in os.environ["PYTHONPATH"].split(os.pathsep)
