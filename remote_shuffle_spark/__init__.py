@@ -7,6 +7,8 @@ top of the public PySpark DataFrame/SQL API:
 - ``session``     — SparkSession factory + engine config (reference config
                     surface: shuffle-hadoop RemoteShuffleConf.scala:22-112,
                     shuffle-daos package.scala:29-283).
+- ``jvm_archive`` — the driver JVM's class-data-sharing archive, which
+                    halves a local session's start-up.
 - ``sources``     — table loaders for the driver-generated parquet fixtures.
 - ``queries``     — the declared query set (SURVEY.md §2.2 Q1-Q16) plus EXT
                     LLM-pipeline queries, each with a DuckDB oracle.

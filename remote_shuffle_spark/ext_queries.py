@@ -9563,11 +9563,7 @@ def ext_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
         incremental_minhash_dedup,
         minhash_band_index,
     )
-    from remote_shuffle_spark.plans.shuffle_policy import (
-        read_bucketed,
-        unique_table_name,
-        write_bucketed,
-    )
+    from remote_shuffle_spark.plans.shuffle_policy import read_bucketed, write_bucketed
 
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     corpus = docs.filter(F.col("doc_id") % 10 != 9)
@@ -9580,7 +9576,7 @@ def ext_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFram
     )
     delta = fresh.unionAll(exact_copies).unionAll(near_copies)
 
-    tbl = unique_table_name("mh_band_idx")
+    tbl = "mh_band_idx"
     try:
         write_bucketed(
             minhash_band_index(corpus, "doc_id", "text"),

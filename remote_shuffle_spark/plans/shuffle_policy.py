@@ -24,13 +24,14 @@ are:
 from __future__ import annotations
 
 import os
-import shutil
 import threading
 from collections import defaultdict
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from remote_shuffle_spark.scratch import run_dir
 
 # Per-path commit serialization: concurrent checkpoint_to calls on the SAME
 # path (speculative/retried attempts in one app) must not interleave their
@@ -318,34 +319,18 @@ def write_bucketed(
     the 100 TB pattern for repeatedly-joined fact tables, and the direct
     analog of the reference's dkey-per-reduce-partition layout.
 
-    SINGLE-SESSION assumption: this drops + rmtree's the managed-table
-    location under the shared warehouse dir, so two concurrent sessions
-    writing the SAME ``table_name`` would race each other's files.  Callers
-    that may run concurrently (e.g. two gate sessions over one checkout)
-    should pass a unique name — ``unique_table_name(prefix)`` below mints a
-    uuid-suffixed one.  Single-session (the registry's regime) is unchanged.
+    The files go to a fresh ``scratch.run_dir`` path, removed when the
+    process exits; the table itself lives in the session's in-memory
+    catalog.  Rewriting ``table_name`` repoints it at new files, so
+    neither a rerun nor another session over the same checkout sees
+    older output, and nothing lands in the shared warehouse dir.
     """
-    spark = df.sparkSession
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    # a previous session may have left an orphan managed-table location
-    # (catalog is in-memory, the warehouse dir is not) — clear it so the
-    # overwrite is idempotent like the reference's commit dedup
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-    loc = os.path.join(warehouse.removeprefix("file:"), table_name.lower())
-    if os.path.isdir(loc):
-        shutil.rmtree(loc)
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
+    df.sparkSession.sql(f"DROP TABLE IF EXISTS {table_name}")
+    path = run_dir(f"bucketed_{table_name}")
+    writer = df.write.option("path", path).bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
-
-
-def unique_table_name(prefix: str) -> str:
-    """uuid-suffixed table name so concurrent sessions sharing one
-    warehouse dir can't race :func:`write_bucketed`'s drop+rmtree."""
-    import uuid
-
-    return f"{prefix}_{uuid.uuid4().hex[:12]}"
 
 
 def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:

@@ -1,6 +1,7 @@
-"""The one owner of the package's scratch space under the system temp dir.
+"""The one owner of the package's scratch space: the system temp dir and
+the persistent cache.
 
-Two kinds of path, kept apart:
+Three kinds of path, kept apart:
 
 - :func:`cached_dir` — a content-keyed cache, ``<tmp>/rss_<tag>_<key>``,
   shared by every process on the host and kept across runs.  The key
@@ -13,6 +14,11 @@ Two kinds of path, kept apart:
 - :func:`run_dir` — a fresh path under one per-process root that an
   ``atexit`` hook removes: checkpoints, sinks and other per-run output
   never outlive the process that made them.
+- :func:`persistent_dir` — ``<cache root>/<name>`` under
+  ``$XDG_CACHE_HOME/remote_shuffle_spark`` (default ``~/.cache/...``): a
+  stable path that outlives every run and every ``TMPDIR``, for files
+  whose own path is part of what they cache (the driver JVM's class
+  archive records the classpath it was dumped with).
 """
 
 from __future__ import annotations
@@ -82,6 +88,20 @@ def cached_dir(tag: str, key_parts: Iterable[object], build: Callable[[str], Non
             return tmp
         shutil.rmtree(tmp, ignore_errors=True)
     return out
+
+
+def persistent_dir(name: str) -> str | None:
+    """``<cache root>/<name>``, created on first use, or None when it
+    cannot be created or written (the caller then caches nothing)."""
+    base = os.environ.get("XDG_CACHE_HOME", "")
+    if not os.path.isabs(base):  # unset or relative: the XDG default
+        base = os.path.join(os.path.expanduser("~"), ".cache")
+    d = os.path.join(base, "remote_shuffle_spark", name)
+    try:
+        os.makedirs(d, exist_ok=True)
+    except OSError:
+        return None
+    return d if os.access(d, os.W_OK | os.X_OK) else None
 
 
 def run_dir(prefix: str) -> str:

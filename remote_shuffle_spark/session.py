@@ -148,15 +148,18 @@ def get_session(config: EngineConfig | None = None) -> SparkSession:
     # JVM-spawned Python workers (the TWS state protocol runs there) can
     # import google.protobuf (no-op when the real package is installed),
     # and, on local masters, run those workers under the engine's daemon,
-    # which skips the per-task re-read of pyspark.zip (vendor/workerd).
+    # which skips the per-task re-read of pyspark.zip (vendor/workerd),
+    # and launch the driver JVM on its class-data-sharing archive.
+    from remote_shuffle_spark.jvm_archive import driver_launch
     from remote_shuffle_spark.vendor import ensure_protobuf, python_worker_conf
 
     ensure_protobuf()
     config = config or EngineConfig()
     master = config.resolved_master()
     builder = SparkSession.builder.appName(config.app_name).master(master)
-    for k, v in {**python_worker_conf(master), **config.to_conf()}.items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    with driver_launch(master, {**python_worker_conf(master), **config.to_conf()}) as conf:
+        for k, v in conf.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

@@ -22,6 +22,8 @@ import json
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 SCRIPT = r"""
 import json, os
 os.environ.setdefault("SPARK_HOME", "/opt/spark")
@@ -36,10 +38,10 @@ os.environ.setdefault("SPARK_HOME", "/opt/spark")
 # a real executor raised ModuleNotFoundError - exactly the class of bug
 # this smoke exists to catch.  Deployed clusters pip-install the
 # package; tests propagate the checkout).
-import sys; sys.path.insert(0, "/root/repo")
+import sys; REPO = sys.argv[1]; sys.path.insert(0, REPO)
 _pp = os.environ.get("PYTHONPATH", "")
-if "/root/repo" not in _pp.split(os.pathsep):
-    os.environ["PYTHONPATH"] = "/root/repo" + (os.pathsep + _pp if _pp else "")
+if REPO not in _pp.split(os.pathsep):
+    os.environ["PYTHONPATH"] = REPO + (os.pathsep + _pp if _pp else "")
 from remote_shuffle_spark.vendor import ensure_protobuf, python_worker_conf
 ensure_protobuf()
 from pyspark.sql import SparkSession
@@ -114,11 +116,11 @@ def test_local_cluster_smoke():
     res = None
     for attempt in range(2):
         res = subprocess.run(
-            [sys.executable, "-c", SCRIPT],
+            [sys.executable, "-c", SCRIPT, str(REPO_ROOT)],
             capture_output=True,
             text=True,
             timeout=600,
-            cwd="/root/repo",
+            cwd=REPO_ROOT,
         )
         if res.returncode == 0 and any(
             ln.startswith("RESULT:") for ln in res.stdout.splitlines()

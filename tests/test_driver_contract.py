@@ -8,6 +8,8 @@ import json
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 SCRIPT = r"""
 import json
 from pyspark.sql import SparkSession
@@ -48,7 +50,7 @@ def test_vanilla_session_runs_sensitive_queries(spark, sf_smoke):
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     got = json.loads(out.stdout.strip().splitlines()[-1])
@@ -88,7 +90,7 @@ print(json.dumps(df.select("window_start").limit(1).collect()[0].window_start))
         capture_output=True,
         text=True,
         timeout=420,
-        cwd="/root/repo",
+        cwd=REPO_ROOT,
     )
     assert out.returncode == 0, out.stderr[-3000:]
     first = json.loads(out.stdout.strip().splitlines()[-1])

@@ -811,7 +811,7 @@ def test_bucketed_band_index_join_eliminates_corpus_exchange(spark, sf_smoke, tm
     write_minhash_band_index(
         minhash_band_index(corpus, "doc_id", "text"), pq_path, num_files=4
     )
-    tbl = shuffle_policy.unique_table_name("mh_band_pin")
+    tbl = "mh_band_pin"
     shuffle_policy.write_bucketed(
         minhash_band_index(corpus, "doc_id", "text"),
         tbl,

@@ -14,7 +14,12 @@ or a ``.parquet(...)`` of a fixture path outside the table source, so none
 of the four disciplines can regress silently.  A fifth walk, over the whole
 package ``vendor/`` included, keeps the Python worker's environment in
 ``vendor/__init__.py``: no other file may write ``PYTHONPATH``, touch
-``SparkContext.environment`` or name ``spark.python.daemon.module``.
+``SparkContext.environment`` or name ``spark.python.daemon.module``.  A
+sixth keeps the persistent cache root in ``scratch.py`` (no other file
+names ``XDG_CACHE_HOME`` or ``~/.cache``) and the driver's launch in
+``jvm_archive.py`` (no other file writes ``SPARK_CONF_DIR`` or names
+``spark.driver.extraJavaOptions``): the class archive is valid only for
+the classpath and options that one owner gives the driver JVM.
 """
 
 import ast
@@ -160,28 +165,26 @@ WORKER_ENV_OWNER = "vendor/__init__.py"
 ENV_WRITERS = {"setdefault", "putenv", "unsetenv", "pop"}
 
 
-def _is_pythonpath(node: ast.AST) -> bool:
-    return isinstance(node, ast.Constant) and node.value == "PYTHONPATH"
+def _env_write(n: ast.AST, var: str) -> bool:
+    """``n`` writes environment variable ``var``: subscript store or
+    delete, ``setdefault``/``putenv``/``unsetenv``/``pop``, ``update(var=)``."""
+    named = lambda a: isinstance(a, ast.Constant) and a.value == var  # noqa: E731
+    if isinstance(n, ast.Subscript):
+        return isinstance(n.ctx, (ast.Store, ast.Del)) and named(n.slice)
+    return isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and (
+        (n.func.attr in ENV_WRITERS and bool(n.args) and named(n.args[0]))
+        or (n.func.attr == "update" and any(k.arg == var for k in n.keywords))
+    )
 
 
 def _worker_env_writes(tree: ast.AST, rel: str) -> list[str]:
-    """Writes of ``PYTHONPATH`` (subscript store or delete,
-    ``setdefault``/``putenv``/``unsetenv``/``pop``, ``update(PYTHONPATH=)``),
-    any ``.environment`` access, and the daemon-module conf key."""
+    """Writes of ``PYTHONPATH``, any ``.environment`` access, and the
+    daemon-module conf key."""
     if rel == WORKER_ENV_OWNER:
         return []
     hits = []
     for n in ast.walk(tree):
-        if (
-            isinstance(n, ast.Subscript)
-            and isinstance(n.ctx, (ast.Store, ast.Del))
-            and _is_pythonpath(n.slice)
-        ):
-            hits.append(f"{rel}:{n.lineno} PYTHONPATH write")
-        elif isinstance(n, ast.Call) and isinstance(n.func, ast.Attribute) and (
-            (n.func.attr in ENV_WRITERS and n.args and _is_pythonpath(n.args[0]))
-            or (n.func.attr == "update" and any(k.arg == "PYTHONPATH" for k in n.keywords))
-        ):
+        if _env_write(n, "PYTHONPATH"):
             hits.append(f"{rel}:{n.lineno} PYTHONPATH write")
         elif isinstance(n, ast.Attribute) and n.attr == "environment":
             hits.append(f"{rel}:{n.lineno} .environment")
@@ -221,3 +224,66 @@ def test_worker_environment_guard_detects():
         "session.py:6 PYTHONPATH write",
     ]
     assert _worker_env_writes(ast.parse(src), WORKER_ENV_OWNER) == []
+
+
+CACHE_ROOT_OWNER = "scratch.py"
+LAUNCH_OWNER = "jvm_archive.py"
+
+
+def _launch_offenders(tree: ast.AST, rel: str) -> list[str]:
+    """Names of the persistent cache root outside ``scratch.py``; writes of
+    ``SPARK_CONF_DIR`` and the driver's JVM-options key outside
+    ``jvm_archive.py``."""
+    hits = []
+    for n in ast.walk(tree):
+        if rel != CACHE_ROOT_OWNER and isinstance(n, ast.Constant) and isinstance(n.value, str) and (
+            "XDG_CACHE_HOME" in n.value or ".cache" in n.value.split("/")
+        ):
+            hits.append(f"{rel}:{n.lineno} cache root")
+        if rel == LAUNCH_OWNER:
+            continue
+        if _env_write(n, "SPARK_CONF_DIR"):
+            hits.append(f"{rel}:{n.lineno} SPARK_CONF_DIR write")
+        elif isinstance(n, ast.Constant) and n.value == "spark.driver.extraJavaOptions":
+            hits.append(f"{rel}:{n.lineno} driver java options")
+    return sorted(hits)
+
+
+def test_driver_launch_has_one_owner():
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = str(path.relative_to(PACKAGE))
+        offenders += _launch_offenders(ast.parse(path.read_text(), filename=rel), rel)
+    assert not offenders, (
+        "take persistent paths from scratch.py (persistent_dir) and set the "
+        "driver's conf dir and JVM options in remote_shuffle_spark/"
+        "jvm_archive.py (driver_launch):\n" + "\n".join(offenders)
+    )
+
+
+def test_driver_launch_guard_detects():
+    src = (
+        "base = os.environ.get('XDG_CACHE_HOME')\n"
+        "d = os.path.expanduser('~/.cache')\n"
+        "os.environ['SPARK_CONF_DIR'] = d\n"
+        "os.environ.pop('SPARK_CONF_DIR', None)\n"
+        "b = b.config('spark.driver.extraJavaOptions', '-Xshare:off')\n"
+        "c = os.environ.get('SPARK_CONF_DIR')\n"
+        "e = os.path.join(d, 'x.cached')\n"
+    )
+    assert _launch_offenders(ast.parse(src), "session.py") == [
+        "session.py:1 cache root",
+        "session.py:2 cache root",
+        "session.py:3 SPARK_CONF_DIR write",
+        "session.py:4 SPARK_CONF_DIR write",
+        "session.py:5 driver java options",
+    ]
+    assert _launch_offenders(ast.parse(src), LAUNCH_OWNER) == [
+        "jvm_archive.py:1 cache root",
+        "jvm_archive.py:2 cache root",
+    ]
+    assert _launch_offenders(ast.parse(src), CACHE_ROOT_OWNER) == [
+        "scratch.py:3 SPARK_CONF_DIR write",
+        "scratch.py:4 SPARK_CONF_DIR write",
+        "scratch.py:5 driver java options",
+    ]

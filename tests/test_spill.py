@@ -15,6 +15,8 @@ import json
 import subprocess
 import sys
 
+from tests.conftest import REPO_ROOT
+
 SCRIPT = r"""
 import json, sys
 from pyspark.sql import SparkSession, functions as F
@@ -77,7 +79,7 @@ def test_forced_spill_results_match(spark, sf_correct):
 
 SCRIPT_R3 = r"""
 import json, sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, sys.argv[1])
 from pyspark.sql import SparkSession, functions as F
 
 spark = (
@@ -118,7 +120,7 @@ def test_forced_spill_round3_operators_match(spark, sf_correct):
     from remote_shuffle_spark.sources.tables import load_table
 
     out = subprocess.run(
-        [sys.executable, "-c", SCRIPT_R3], capture_output=True, text=True, timeout=600
+        [sys.executable, "-c", SCRIPT_R3, str(REPO_ROOT)], capture_output=True, text=True, timeout=600
     )
     assert out.returncode == 0, out.stderr[-2000:]
     got = json.loads(out.stdout.strip().splitlines()[-1])
